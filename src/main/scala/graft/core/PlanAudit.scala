@@ -65,8 +65,9 @@ object PlanAudit {
     "c16_dsir_select" -> 1, // broadcast 1-row feature-total aggregate
     "d27_hll_intersection" -> 3, // four 1-row summaries chained (est_a x est_b x est_union x exact)
     "g02_degree_audit" -> 1, // broadcast 1-row edge totals
-    // g08_hits: the per-half-iteration renorm broadcasts sit behind
-    // localCheckpoints, so the registered plan itself carries no BNLJ
+    // g08_hits: at audited scales hits takes its small-graph local path,
+    // so neither the registered plan nor its checkpointed stages carry a
+    // BNLJ (GraphOpsSpec pins the distributed path to the same results)
     "t05_tfidf_top_terms" -> 1, // broadcast 1-row corpus-size aggregate
     "t16_bm25_topk" -> 1, // broadcast 1-row corpus-stats aggregate
     "t20_heavy_hitters" -> 1, // broadcast 1-row stream-total aggregate
@@ -132,7 +133,6 @@ object PlanAudit {
     "s27_dbscan" -> 1, // declared exact all-pairs baseline (d07 contract)
     "d36_lsh_band_sweep" -> 1, // exact baseline on the fixed 1200-doc sample
     "c18_domain_reweight" -> 1, // 1-row corpus-total attach
-    "g08_hits" -> 4, // per-half-iteration 1-row renorm broadcasts (2 iters x 2)
     // s34: the beam entry initialization's bounded query-set broadcast
     // (the graph build itself is the LSH-banded equi-join — no
     // nested-loop stage anywhere since round 11)

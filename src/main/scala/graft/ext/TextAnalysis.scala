@@ -1666,6 +1666,7 @@ object TextAnalysis {
   def unigramPrune(docs: DataFrame, vocabTop: Int = 200, iters: Int = 4,
                    pruneIters: Int = 2, maxUnits: Int = 12): DataFrame = {
     require(pruneIters >= 1, "pruneIters >= 1")
+    require(maxUnits >= 1, "maxUnits >= 1")
     val spark = docs.sparkSession
     import spark.implicits._
     // ONE dictionary pass feeds the alphabet, the merge training and

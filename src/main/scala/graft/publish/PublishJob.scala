@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.model.Cricsheet
-import graft.operators.SeqNumber
 
 /** Dataset preparation: ordered, renumbered CSV artifacts
   * (convert_mongo_db_data_to_csv_lambda.py) plus the Kaggle version
@@ -18,23 +17,14 @@ import graft.operators.SeqNumber
 object PublishJob {
 
   /** Sort by (date, match_id) and assign the dense 1..N match_number
-    * (P3/P4). `scalable = true` swaps the single-task global window for
-    * the range-partitioned SeqNumber operator — same numbers, no
-    * one-task bottleneck; the publication-order guarantee then comes
-    * from the final write's sort.
+    * (P3/P4).
     */
-  def buildMatchwise(extracted0: DataFrame, scalable: Boolean = false): DataFrame = {
+  def buildMatchwise(extracted: DataFrame): DataFrame = {
     // primary-key semantics of the Mongo _id (K2): last-write-wins dedup
     // on match_id instead of the reference's crash-on-duplicate insert
-    val extracted = extracted0.dropDuplicates("match_id")
-    val numbered =
-      if (scalable)
-        SeqNumber.withSeq(extracted, Seq(col("date"), col("match_id")), "match_number")
-          .withColumn("match_number", col("match_number").cast("int"))
-      else
-        extracted.withColumn("match_number",
-          row_number().over(Window.orderBy(col("date"), col("match_id"))))
-    numbered
+    extracted.dropDuplicates("match_id")
+      .withColumn("match_number",
+        row_number().over(Window.orderBy(col("date"), col("match_id"))))
       .select(Cricsheet.matchwiseColumns.map(col): _*)
       .orderBy(col("match_number"))
   }

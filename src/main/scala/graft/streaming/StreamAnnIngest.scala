@@ -3,7 +3,7 @@ import graft.core.PlanCapture.CheckpointOps
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructField, StructType}
 
 import graft.ext.Similarity
@@ -49,17 +49,11 @@ object StreamAnnIngest {
     // on every trigger
     val cents = Similarity.ivfCentsFor(original, nCentroids, nQueries)
       .cpGuard()
-    val vecs = spark.readStream.schema(vecSchema)
-      .option("multiLine", "false")
-      .json(landingDir)
-    vecs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    MicroBatch.run(spark, vecSchema, landingDir, checkpointDir) {
+      (batch, batchId) =>
         processBatchUnder(spark, batch, batchId, table, statePath, cents,
           buckets)
-      }
-      .start()
+    }
   }
 
   /** One idempotent micro-batch step (public for replay tests):

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.ext.TextOps
@@ -27,7 +27,7 @@ import graft.operators.Layout
   * There is NO separate state table: the state IS the admitted output
   * table. Tokens consumed before batch B = one groupBy(stratum) over
   * the admitted table filtered to `batch < B` — the filter is what
-  * makes a foreachBatch replay (at-least-once) idempotent: the
+  * makes a [[MicroBatch]] replay (at-least-once) idempotent: the
   * replayed batch never sees its own earlier write. The table is
   * BUCKETED by stratum ([[Layout.ensureBucketedBatchTable]], the
   * StreamDedup/StreamUpsert state contract), so the consumed-tokens
@@ -48,17 +48,11 @@ object StreamBudget {
   def run(spark: SparkSession, landingDir: String, table: String,
           statePath: String, quotas: Map[String, Long],
           checkpointDir: String, buckets: Int = 8): StreamingQuery = {
-    val docs = spark.readStream.schema(docSchema)
-      .option("multiLine", "false")
-      .json(landingDir)
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    MicroBatch.run(spark, docSchema, landingDir, checkpointDir) {
+      (batch, batchId) =>
         processBatch(spark, batch, batchId, table, statePath, quotas,
           buckets)
-      }
-      .start()
+    }
   }
 
   /** Tokens already consumed per stratum by batches BEFORE `batchId` —

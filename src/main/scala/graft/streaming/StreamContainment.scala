@@ -7,7 +7,7 @@ import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ext.Dedup
 import graft.operators.Layout
@@ -30,7 +30,7 @@ import graft.operators.Layout
   * corpus size. Hot postings (stop-like shingles) are capped by
   * [[graft.ext.HotBuckets]] exactly as in the batch operator.
   *
-  * foreachBatch is AT-LEAST-ONCE: all writes are batch-keyed and
+  * [[MicroBatch]] is AT-LEAST-ONCE: all writes are batch-keyed and
   * deterministic, and a batch probes STRICTLY EARLIER batches only, so
   * a replay reproduces byte-identical output (same contract as
   * [[StreamDedup]] / [[StreamReconcile]]).
@@ -45,17 +45,11 @@ object StreamContainment {
           threshold: Double = 0.8,
           probeK: Int = 4, minProbeHits: Int = 2,
           buckets: Int = DefaultPostingBuckets): StreamingQuery = {
-    val docs = spark.readStream.schema(StreamDedup.docSchema)
-      .option("multiLine", "false")
-      .json(landingDir)
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
+    MicroBatch.run(spark, StreamDedup.docSchema, landingDir, checkpointDir) {
+      (batch0, batchId) =>
         processBatch(spark, batch0, batchId, stateDir, outDir, threshold,
           probeK, minProbeHits, buckets)
-      }
-      .start()
+    }
   }
 
   /** One idempotent micro-batch: probe batches `< batchId` for directed
@@ -86,10 +80,10 @@ object StreamContainment {
       val intra = Dedup.containmentDupAsym(batch, threshold, probeK,
         minProbeHits)
       val all = cross.map(_.unionByName(intra)).getOrElse(intra)
-      all.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
+      MicroBatch.writeBatch(all, outDir, batchId)
       Layout.overwriteBatch(postingsOf(batch), table, batchId)
-      batch.select(col("doc_id"), col("text"))
-        .write.mode("overwrite").parquet(s"$docsPath/batch=$batchId")
+      MicroBatch.writeBatch(batch.select(col("doc_id"), col("text")),
+        docsPath, batchId)
     } finally {
       try batch.unpersist() catch { case NonFatal(_) => }
       ()

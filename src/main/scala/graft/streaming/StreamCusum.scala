@@ -4,7 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType, TimestampType}
 
 import graft.operators.Layout
@@ -104,21 +104,14 @@ object StreamCusum {
           statePath: String, checkpointDir: String, kCents: Long,
           hCents: Long, buckets: Int = 8): StreamingQuery = {
     import spark.implicits._
-    val events = spark.readStream.schema(eventSchema)
-      .option("multiLine", "false")
-      .json(landingDir)
+    val events = MicroBatch.landing(spark, eventSchema, landingDir)
       .filter(col("user_id").isNotNull && col("ts").isNotNull &&
         col("event_id").isNotNull && col("value").isNotNull)
       .as[CusumEvent]
-    snapshots(events, kCents, hCents).writeStream
-      .outputMode(OutputMode.Update)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[CusumSnap], batchId: Long) =>
-        writeSnapshots(spark, batch.toDF(), batchId, table, statePath,
-          buckets)
-      }
-      .start()
+    MicroBatch.run(snapshots(events, kCents, hCents), checkpointDir,
+      OutputMode.Update) { (batch, batchId) =>
+      writeSnapshots(spark, batch.toDF(), batchId, table, statePath, buckets)
+    }
   }
 
   def writeSnapshots(spark: SparkSession, snaps: DataFrame, batchId: Long,

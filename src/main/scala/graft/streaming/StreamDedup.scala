@@ -9,7 +9,7 @@ import scala.util.control.NonFatal
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.ext.Dedup
@@ -36,7 +36,7 @@ import graft.operators.Layout
   * entry is re-registered per session with existing batch partitions
   * recovered from the filesystem.
   *
-  * foreachBatch is AT-LEAST-ONCE: a crash after any write but before
+  * [[MicroBatch]] is AT-LEAST-ONCE: a crash after any write but before
   * the checkpoint commit replays the whole batch. Every write is
   * therefore keyed by batch id — `<table>/batch=<id>`, written with
   * (dynamic-partition) overwrite — so a replay rewrites the same
@@ -68,21 +68,15 @@ object StreamDedup {
           outDir: String, checkpointDir: String,
           threshold: Double = 0.5,
           bandBuckets: Int = DefaultBandBuckets): StreamingQuery = {
-    val docs = spark.readStream.schema(docSchema)
-      .option("multiLine", "false")
-      .json(landingDir)
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
+    MicroBatch.run(spark, docSchema, landingDir, checkpointDir) {
+      (batch0, batchId) =>
         processBatch(spark, batch0, batchId, stateDir, outDir, threshold,
           bandBuckets)
-      }
-      .start()
+    }
   }
 
   /** One idempotent micro-batch step (public so a replay — the
-    * at-least-once delivery of foreachBatch — can be exercised
+    * at-least-once delivery of [[MicroBatch]] — can be exercised
     * directly in tests): dedup `batch0` against all state from batches
     * `< batchId`, then within itself, and overwrite this batch's
     * `batch=<batchId>` partition of the dup report, band table, and
@@ -117,11 +111,11 @@ object StreamDedup {
       }
       val intraDups = Dedup.minhashDup(batch, threshold)
       val all = crossDups.map(_.unionByName(intraDups)).getOrElse(intraDups)
-      all.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
+      MicroBatch.writeBatch(all, outDir, batchId)
       Layout.overwriteBatch(
         Dedup.minhashBands(Dedup.minhashSignatures(batch)), bandsTable, batchId)
-      batch.select(col("doc_id"), col("text"))
-        .write.mode("overwrite").parquet(s"$docsPath/batch=$batchId")
+      MicroBatch.writeBatch(batch.select(col("doc_id"), col("text")),
+        docsPath, batchId)
     } finally {
       try batch.unpersist() catch { case NonFatal(_) => }
       ()

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 /** Streaming value-distribution drift monitor — the deployment shape
@@ -21,7 +21,7 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType
   *
   * State discipline (the [[StreamSketch]] contract): each micro-batch
   * reduces to its own per-bin count table persisted under an
-  * idempotent `batch=<id>` partition — a replayed batch (foreachBatch
+  * idempotent `batch=<id>` partition — a replayed batch ([[MicroBatch]]
   * is at-least-once) overwrites its own partition with identical rows,
   * and the snapshot recomputes to the same TV. State grows by
   * n_distinct_bins rows per batch (bounded by the value range / 50),
@@ -71,16 +71,10 @@ object StreamDrift {
 
   def run(spark: SparkSession, landingDir: String, stateDir: String,
           checkpointDir: String, reference: DataFrame): StreamingQuery = {
-    val events = spark.readStream.schema(eventSchema)
-      .option("multiLine", "false")
-      .json(landingDir)
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    MicroBatch.run(spark, eventSchema, landingDir, checkpointDir) {
+      (batch, batchId) =>
         processBatch(spark, batch, batchId, stateDir, reference)
-      }
-      .start()
+    }
   }
 
   /** One idempotent micro-batch step (public for replay tests):
@@ -89,10 +83,9 @@ object StreamDrift {
     */
   def processBatch(spark: SparkSession, batch: DataFrame, batchId: Long,
                    stateDir: String, reference: DataFrame): Unit = {
-    batch.filter(col("value").isNotNull)
+    MicroBatch.writeBatch(batch.filter(col("value").isNotNull)
       .groupBy(binOf(col("value")).as("bin"))
-      .agg(count(lit(1)).as("n"))
-      .write.mode("overwrite").parquet(s"$stateDir/bins/batch=$batchId")
+      .agg(count(lit(1)).as("n")), s"$stateDir/bins", batchId)
     val cur = spark.read.parquet(s"$stateDir/bins")
       .groupBy(col("bin")).agg(sum(col("n")).as("n_cur"))
     tvDrift(cur, broadcast(reference))

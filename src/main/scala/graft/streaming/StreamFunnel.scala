@@ -4,7 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType, TimestampType}
 
 import graft.core.PlanCapture.CheckpointOps
@@ -111,21 +111,16 @@ object StreamFunnel {
           statePath: String, checkpointDir: String, stages: Seq[String],
           windowMinutes: Int, buckets: Int = 8): StreamingQuery = {
     import spark.implicits._
-    val events = spark.readStream.schema(eventSchema)
-      .option("multiLine", "false")
-      .json(landingDir)
+    val events = MicroBatch.landing(spark, eventSchema, landingDir)
       .filter(col("user_id").isNotNull && col("ts").isNotNull &&
         col("event_id").isNotNull && col("event_type").isNotNull)
       .as[FunnelEvent]
-    conversions(events, stages, windowMinutes).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[Conv], batchId: Long) =>
-        Layout.ensureBucketedBatchTable(spark, table, statePath, ConvCols,
-          Seq("user_id"), buckets)
-        Layout.overwriteBatch(batch.toDF(), table, batchId)
-      }
-      .start()
+    MicroBatch.run(conversions(events, stages, windowMinutes), checkpointDir,
+      OutputMode.Append) { (batch, batchId) =>
+      Layout.ensureBucketedBatchTable(spark, table, statePath, ConvCols,
+        Seq("user_id"), buckets)
+      Layout.overwriteBatch(batch.toDF(), table, batchId)
+    }
   }
 
   /** Per-stage funnel counts over every conversion accumulated so far —

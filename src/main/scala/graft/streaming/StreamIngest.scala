@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 
 import graft.core.Connectors
 import graft.extract.Extractors
@@ -18,8 +18,8 @@ import graft.sources.ZipSource
   * checkpoint IS the DynamoDB ledger (exactly-once, no custom state),
   * and the two extraction branches run against one shared micro-batch
   * instead of re-reading the object per Lambda. maxFilesPerTrigger
-  * reproduces the 10-file batch cap; Trigger.AvailableNow reproduces
-  * the weekly catch-up run.
+  * reproduces the 10-file batch cap; the [[MicroBatch]] AvailableNow
+  * drain reproduces the weekly catch-up run.
   */
 object StreamIngest {
 
@@ -36,21 +36,17 @@ object StreamIngest {
       .withColumn("match_id",
         regexp_extract(input_file_name(), "(\\d+)\\.json", 1).cast("int"))
 
-    raw.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val b = batch.persist()
-        // staging backend is config-pluggable (parquet by default,
-        // s3a:// paths or a document-store connector via session conf)
-        try {
-          graft.core.Connectors.writeStaging(
-            Extractors.matchwise(b), s"$stagingDir/matchwise")
-          graft.core.Connectors.writeStaging(
-            Extractors.deliverywise(b), s"$stagingDir/deliverywise")
-        } finally { b.unpersist(); () }
-      }
-      .start()
+    MicroBatch.run(raw, checkpointDir, OutputMode.Append) { (batch, _) =>
+      val b = batch.persist()
+      // staging backend is config-pluggable (parquet by default,
+      // s3a:// paths or a document-store connector via session conf)
+      try {
+        Connectors.writeStaging(
+          Extractors.matchwise(b), s"$stagingDir/matchwise")
+        Connectors.writeStaging(
+          Extractors.deliverywise(b), s"$stagingDir/deliverywise")
+      } finally { b.unpersist(); () }
+    }
   }
 
   /** Archive-landing variant of [[run]]: *.zip files arriving in a
@@ -88,28 +84,24 @@ object StreamIngest {
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .load(zipLandingDir)
 
-    raw.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val expanded = ZipSource.expandEntriesWithErrors(batch).persist()
+    MicroBatch.run(raw, checkpointDir, OutputMode.Append) { (batch, _) =>
+      val expanded = ZipSource.expandEntriesWithErrors(batch).persist()
+      try {
+        val corrupt = expanded.filter(col("zip_error").isNotNull)
+          .select(col("zip_path"), col("zip_error"),
+            current_timestamp().as("quarantined_at"))
+        if (!corrupt.isEmpty)
+          Connectors.writeStaging(corrupt, s"$stagingDir/quarantine")
+        val matches = ZipSource.matchesFrom(
+          expanded.filter(col("zip_error").isNull)).persist()
         try {
-          val corrupt = expanded.filter(col("zip_error").isNotNull)
-            .select(col("zip_path"), col("zip_error"),
-              current_timestamp().as("quarantined_at"))
-          if (!corrupt.isEmpty)
-            Connectors.writeStaging(corrupt, s"$stagingDir/quarantine")
-          val matches = ZipSource.matchesFrom(
-            expanded.filter(col("zip_error").isNull)).persist()
-          try {
-            Connectors.writeStaging(
-              Extractors.matchwise(matches), s"$stagingDir/matchwise")
-            Connectors.writeStaging(
-              Extractors.deliverywise(matches), s"$stagingDir/deliverywise")
-          } finally { matches.unpersist(); () }
-        } finally { expanded.unpersist(); () }
-      }
-      .start()
+          Connectors.writeStaging(
+            Extractors.matchwise(matches), s"$stagingDir/matchwise")
+          Connectors.writeStaging(
+            Extractors.deliverywise(matches), s"$stagingDir/deliverywise")
+        } finally { matches.unpersist(); () }
+      } finally { expanded.unpersist(); () }
+    }
   }
 
   /** Publish the staged extracts as the ordered, renumbered CSV

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructField, StructType}
 
 import graft.operators.Layout
@@ -42,16 +42,10 @@ object StreamKmeans {
   def run(spark: SparkSession, landingDir: String, stateDir: String,
           outDir: String, checkpointDir: String, k: Int,
           buckets: Int = 8): StreamingQuery =
-    spark.readStream.schema(vecSchema)
-      .option("multiLine", "false")
-      .json(landingDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    MicroBatch.run(spark, vecSchema, landingDir, checkpointDir) {
+      (batch, batchId) =>
         processBatch(spark, batch, batchId, stateDir, outDir, k, buckets)
-      }
-      .start()
+    }
 
   /** One idempotent micro-batch step (public for replay tests). */
   def processBatch(spark: SparkSession, batch0: DataFrame, batchId: Long,
@@ -114,8 +108,7 @@ object StreamKmeans {
       .groupBy(col("vec_id"))
       .agg(min_by(col("c_id"), struct(col("dist"), col("c_id"))).as("c_id"))
       .localCheckpoint() // feeds the output write AND the moment write
-    assigned.coalesce(1).write.mode("overwrite")
-      .parquet(s"$outDir/batch=$batchId")
+    MicroBatch.writeBatch(assigned.coalesce(1), outDir, batchId)
     val moments = assigned
       .join(quant, "vec_id")
       .select(col("c_id"), posexplode(col("qv")).as(Seq("pos", "x")))

@@ -5,7 +5,7 @@ import java.security.MessageDigest
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ext.Dedup
 import graft.operators.Layout
@@ -47,16 +47,10 @@ object StreamNovelty {
   def run(spark: SparkSession, landingDir: String, stateDir: String,
           outDir: String, checkpointDir: String,
           buckets: Int = 8): StreamingQuery = {
-    val docs = spark.readStream.schema(StreamDedup.docSchema)
-      .option("multiLine", "false")
-      .json(landingDir)
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
+    MicroBatch.run(spark, StreamDedup.docSchema, landingDir, checkpointDir) {
+      (batch0, batchId) =>
         processBatch(spark, batch0, batchId, stateDir, outDir, buckets)
-      }
-      .start()
+    }
   }
 
   /** One idempotent micro-batch: shingle, anti-join batches `< id`,
@@ -87,14 +81,14 @@ object StreamNovelty {
       .agg(count(lit(1)).as("n_shingles"),
         sum(when(col("first_doc") === col("doc_id"), 1L).otherwise(0L))
           .as("n_novel"))
-    batch.select(col("doc_id"))
+    val scores = batch.select(col("doc_id"))
       .join(scored, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("n_shingles"), lit(0L)).as("n_shingles"),
         coalesce(col("n_novel"), lit(0L)).as("n_novel"),
         (col("n_novel").cast("double") / col("n_shingles").cast("double"))
           .as("novelty"))
-      .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
+    MicroBatch.writeBatch(scores, outDir, batchId)
     Layout.overwriteBatch(fresh, table, batchId)
   }
 }

@@ -4,7 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType, TimestampType}
 
 import graft.operators.Layout
@@ -116,21 +116,15 @@ object StreamOhlc {
           statePath: String, checkpointDir: String,
           buckets: Int = 8): StreamingQuery = {
     import spark.implicits._
-    val events = spark.readStream.schema(eventSchema)
-      .option("multiLine", "false")
-      .json(landingDir)
+    val events = MicroBatch.landing(spark, eventSchema, landingDir)
       .filter(col("user_id").isNotNull && col("ts").isNotNull &&
         col("event_id").isNotNull && col("value").isNotNull)
       .as[OhlcEvent]
-    snapshots(events).writeStream
-      .outputMode(OutputMode.Update)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[BarSnap], batchId: Long) =>
+    MicroBatch.run(snapshots(events), checkpointDir, OutputMode.Update) {
+      (batch, batchId) =>
         writeSnapshots(spark, batch.toDF(), batchId, table, statePath,
           buckets)
-      }
-      .start()
+    }
   }
 
   def writeSnapshots(spark: SparkSession, snaps: DataFrame, batchId: Long,

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.ext.Graphs
@@ -44,18 +44,12 @@ object StreamPageRank {
   def run(spark: SparkSession, landingDir: String, table: String,
           statePath: String, checkpointDir: String, refreshIters: Int,
           buckets: Int = 8): StreamingQuery =
-    spark.readStream.schema(edgeSchema)
-      .option("multiLine", "false")
-      .json(landingDir)
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(spark, batch, batchId, table, statePath,
-          refreshIters, buckets)
-      }
-      .start()
+    MicroBatch.run(MicroBatch.landing(spark, edgeSchema, landingDir)
+        .filter(col("src").isNotNull && col("dst").isNotNull),
+      checkpointDir, OutputMode.Append) { (batch, batchId) =>
+      processBatch(spark, batch, batchId, table, statePath,
+        refreshIters, buckets)
+    }
 
   /** One idempotent micro-batch step (public for replay tests):
     * edge-delta write, then the warm rank refresh.

@@ -5,7 +5,7 @@ import java.security.MessageDigest
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ext.{Dedup, Multimodal}
 import graft.operators.Layout
@@ -18,7 +18,7 @@ import graft.operators.Layout
   * band_idx, band_key) BUCKETED by (band_idx, band_key) and partitioned
   * by batch, so the corpus side of every probe joins exchange-free and
   * per-batch work is O(batch). All writes are batch-keyed overwrites
-  * (replay-idempotent under foreachBatch's at-least-once), and a batch
+  * (replay-idempotent under [[MicroBatch]]'s at-least-once), and a batch
   * probes only STRICTLY EARLIER batches.
   *
   * The test fixture derives payloads from doc ids
@@ -74,17 +74,11 @@ object StreamPhash {
           outDir: String, checkpointDir: String,
           maxHamming: Int = 4, buckets: Int = 8,
           hasher: DataFrame => DataFrame = imageHasher): StreamingQuery = {
-    val docs = spark.readStream.schema(StreamDedup.docSchema)
-      .option("multiLine", "false")
-      .json(landingDir)
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
+    MicroBatch.run(spark, StreamDedup.docSchema, landingDir, checkpointDir) {
+      (batch0, batchId) =>
         processBatch(spark, batch0, batchId, stateDir, outDir, maxHamming,
           buckets, hasher)
-      }
-      .start()
+    }
   }
 
   /** One idempotent micro-batch: hash, probe batches `< batchId`, band
@@ -111,8 +105,7 @@ object StreamPhash {
       .select(col("doc_a"), col("doc_b"), col("hamming"))
     val intra = Dedup.fingerprintNearDup(hashed, minHamming = 0,
       maxHamming = maxHamming)
-    cross.unionByName(intra)
-      .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
+    MicroBatch.writeBatch(cross.unionByName(intra), outDir, batchId)
     Layout.overwriteBatch(nb, table, batchId)
   }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{StringType, StructField, StructType, TimestampType}
 
 import graft.operators.Layout
@@ -24,7 +24,7 @@ import graft.operators.Layout
   * the state side; only the O(batch) arrival side shuffles). Untouched
   * domains simply keep their older row current.
   *
-  * foreachBatch is AT-LEAST-ONCE (the StreamDedup contract): writes
+  * [[MicroBatch]] is AT-LEAST-ONCE (the StreamDedup contract): writes
   * are batch-keyed with dynamic-partition overwrite, the state a batch
   * merges against is restricted to STRICTLY EARLIER batches, and the
   * merge is a deterministic function of (prior, batch) — replays
@@ -41,17 +41,11 @@ object StreamPoliteness {
           checkpointDir: String, policy: Seq[(String, Long)],
           defaultDelayMs: Long = 600000L,
           domainBuckets: Int = DefaultDomainBuckets): StreamingQuery = {
-    val fetches = spark.readStream.schema(fetchSchema)
-      .option("multiLine", "false")
-      .json(landingDir)
-    fetches.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
+    MicroBatch.run(spark, fetchSchema, landingDir, checkpointDir) {
+      (batch0, batchId) =>
         processBatch(spark, batch0, batchId, stateDir, policy,
           defaultDelayMs, domainBuckets)
-      }
-      .start()
+    }
   }
 
   /** One idempotent micro-batch step: aggregate the batch's per-domain

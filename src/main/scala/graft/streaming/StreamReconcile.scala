@@ -6,7 +6,7 @@ import java.security.MessageDigest
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.ext.Reconcile
@@ -29,7 +29,7 @@ import graft.operators.Layout
   * reference side is digested ONCE (at the stream's reference epoch)
   * and re-read as `buckets` rows per batch.
   *
-  * foreachBatch is AT-LEAST-ONCE: every write is batch-keyed and
+  * [[MicroBatch]] is AT-LEAST-ONCE: every write is batch-keyed and
   * deterministic (digest partitions via dynamic-partition overwrite,
   * the report via `batch=<id>` dir overwrite), and the corpus a batch
   * merges is restricted to STRICTLY EARLIER batches — a replayed batch
@@ -50,17 +50,11 @@ object StreamReconcile {
           buckets: Int = 64,
           keyCol: String = "doc_id",
           cols: Seq[String] = Seq("doc_id", "text")): StreamingQuery = {
-    val docs = spark.readStream.schema(docSchema)
-      .option("multiLine", "false")
-      .json(landingDir)
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
+    MicroBatch.run(spark, docSchema, landingDir, checkpointDir) {
+      (batch0, batchId) =>
         processBatch(spark, batch0, batchId, refPath, stateDir, outDir,
           buckets, keyCol, cols)
-      }
-      .start()
+    }
   }
 
   /** One idempotent micro-batch step (public so tests can exercise the
@@ -97,7 +91,7 @@ object StreamReconcile {
         coalesce(col("digest_b"), lit(0L)).as("digest_b"))
       .withColumn("is_match",
         col("n_a") === col("n_b") && col("digest_a") === col("digest_b"))
-    report.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
+    MicroBatch.writeBatch(report, outDir, batchId)
     Layout.overwriteBatch(batchDig, digTable, batchId)
   }
 

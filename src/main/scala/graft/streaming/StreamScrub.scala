@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.ext.{Dedup, TextOps}
@@ -38,17 +38,11 @@ object StreamScrub {
   def run(spark: SparkSession, landingDir: String, table: String,
           statePath: String, checkpointDir: String,
           n: Int = Dedup.ShingleSize, buckets: Int = 8): StreamingQuery = {
-    spark.readStream.schema(docSchema)
-      .option("multiLine", "false")
-      .json(landingDir)
-      .filter(col("doc_id").isNotNull && col("text").isNotNull)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeDeltas(spark, batch, batchId, table, statePath, n, buckets)
-      }
-      .start()
+    MicroBatch.run(MicroBatch.landing(spark, docSchema, landingDir)
+        .filter(col("doc_id").isNotNull && col("text").isNotNull),
+      checkpointDir, OutputMode.Append) { (batch, batchId) =>
+      writeDeltas(spark, batch, batchId, table, statePath, n, buckets)
+    }
   }
 
   /** One idempotent per-shingle distinct-doc-count delta write. */

@@ -9,7 +9,7 @@ import scala.util.control.NonFatal
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructField, StructType}
 
 import graft.ext.Similarity
@@ -47,17 +47,11 @@ object StreamSimilarity {
           outDir: String, checkpointDir: String,
           nPlanes: Int = 8, threshold: Double = 0.9,
           bucketBuckets: Int = StreamDedup.DefaultBandBuckets): StreamingQuery = {
-    val vecs = spark.readStream.schema(vecSchema)
-      .option("multiLine", "false")
-      .json(landingDir)
-    vecs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
+    MicroBatch.run(spark, vecSchema, landingDir, checkpointDir) {
+      (batch0, batchId) =>
         processBatch(spark, batch0, batchId, stateDir, outDir,
           nPlanes, threshold, bucketBuckets)
-      }
-      .start()
+    }
   }
 
   /** One idempotent micro-batch step (public for replay tests). */
@@ -103,10 +97,10 @@ object StreamSimilarity {
       // write's task tail back-fills the next — per-batch latency is
       // this operator's product. Values unchanged by construction.
       graft.core.Par.eval3(
-        all.write.mode("overwrite").parquet(s"$outDir/batch=$batchId"),
+        MicroBatch.writeBatch(all, outDir, batchId),
         Layout.overwriteBatch(nb, table, batchId),
-        batch.select(col("vec_id"), col("embedding"))
-          .write.mode("overwrite").parquet(s"$vecsPath/batch=$batchId"))
+        MicroBatch.writeBatch(batch.select(col("vec_id"), col("embedding")),
+          vecsPath, batchId))
     } finally {
       try batch.unpersist() catch { case NonFatal(_) => }
       ()

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.ext.Curation
@@ -24,7 +24,7 @@ import graft.ext.Curation
   * (zero Exchange on the state side, the StreamUrlDedup probe
   * contract), so per-batch work is O(batch), never O(frontier).
   *
-  * foreachBatch is AT-LEAST-ONCE (the StreamDedup contract): the
+  * [[MicroBatch]] is AT-LEAST-ONCE (the StreamDedup contract): the
   * output is keyed by batch id (`batch=<id>`, overwrite) and batch
   * content is a deterministic function of (arrivals, state), so a
   * replayed batch rewrites byte-identical rows. Run the discovery
@@ -41,16 +41,10 @@ object StreamSitemap {
           outDir: String, checkpointDir: String,
           urlBuckets: Int = StreamUrlDedup.DefaultUrlBuckets)
       : StreamingQuery = {
-    val locs = spark.readStream.schema(locSchema)
-      .option("multiLine", "false")
-      .json(landingDir)
-    locs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
+    MicroBatch.run(spark, locSchema, landingDir, checkpointDir) {
+      (batch0, batchId) =>
         processBatch(spark, batch0, batchId, stateDir, outDir, urlBuckets)
-      }
-      .start()
+    }
   }
 
   /** One idempotent micro-batch step (public so replays are exercised
@@ -71,11 +65,11 @@ object StreamSitemap {
     // the bucketed scan keeps the state side Exchange-free
     val seen = StreamUrlDedup.urlState(spark, stateDir, urlBuckets)
       .select(col("norm_url"), lit(true).as("already_seen"))
-    admitted.join(seen, Seq("norm_url"), "left")
+    MicroBatch.writeBatch(admitted.join(seen, Seq("norm_url"), "left")
       .select(col("sm_domain"), col("url"), col("norm_url"), col("domain"),
         col("target"), col("matched_rule"), col("allowed"),
         coalesce(col("already_seen"), lit(false)).as("already_seen"))
-      .withColumn("fetchable", col("allowed") && !col("already_seen"))
-      .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
+      .withColumn("fetchable", col("allowed") && !col("already_seen")),
+      outDir, batchId)
   }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 import graft.ext.Dedup
@@ -15,7 +15,7 @@ import graft.ext.Dedup
   * MAX over all batches — the register-merge identity the d18 oracle
   * proves value-for-value. This is the streaming shape of "how many
   * distinct users ever": state grows by 2 KB per batch (p=8) instead
-  * of per user, merges associatively, and a replayed batch (foreachBatch
+  * of per user, merges associatively, and a replayed batch ([[MicroBatch]]
   * is at-least-once) rewrites its own partition with identical
   * registers, then the snapshot recomputes to the same estimate.
   */
@@ -26,16 +26,10 @@ object StreamSketch {
 
   def run(spark: SparkSession, landingDir: String, stateDir: String,
           checkpointDir: String, p: Int = 8): StreamingQuery = {
-    val events = spark.readStream.schema(eventSchema)
-      .option("multiLine", "false")
-      .json(landingDir)
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    MicroBatch.run(spark, eventSchema, landingDir, checkpointDir) {
+      (batch, batchId) =>
         processBatch(spark, batch, batchId, stateDir, p)
-      }
-      .start()
+    }
   }
 
   /** One idempotent micro-batch step (public for replay tests):
@@ -44,9 +38,9 @@ object StreamSketch {
     */
   def processBatch(spark: SparkSession, batch: DataFrame, batchId: Long,
                    stateDir: String, p: Int): Unit = {
-    Dedup.hllRegisters(batch.filter(col("user_id").isNotNull),
-        col("user_id"), p)
-      .write.mode("overwrite").parquet(s"$stateDir/regs/batch=$batchId")
+    MicroBatch.writeBatch(Dedup.hllRegisters(
+      batch.filter(col("user_id").isNotNull), col("user_id"), p),
+      s"$stateDir/regs", batchId)
     val merged = spark.read.parquet(s"$stateDir/regs")
       .groupBy(col("bucket")).agg(max(col("m_rho")).as("m_rho"))
     Dedup.hllEstimate(merged, p)
@@ -70,16 +64,10 @@ object StreamSketch {
     */
   def runQuantile(spark: SparkSession, landingDir: String, stateDir: String,
                   checkpointDir: String, k: Int = 64): StreamingQuery = {
-    val events = spark.readStream.schema(quantileSchema)
-      .option("multiLine", "false")
-      .json(landingDir)
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    MicroBatch.run(spark, quantileSchema, landingDir, checkpointDir) {
+      (batch, batchId) =>
         processQuantileBatch(spark, batch, batchId, stateDir, k)
-      }
-      .start()
+    }
   }
 
   // ---- streaming HEAVY HITTERS ----------------------------------------
@@ -101,16 +89,10 @@ object StreamSketch {
   def runHeavyHitters(spark: SparkSession, landingDir: String,
                       stateDir: String, checkpointDir: String,
                       topN: Int = 5): StreamingQuery = {
-    val events = spark.readStream.schema(hhSchema)
-      .option("multiLine", "false")
-      .json(landingDir)
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    MicroBatch.run(spark, hhSchema, landingDir, checkpointDir) {
+      (batch, batchId) =>
         processHHBatch(spark, batch, batchId, stateDir, topN)
-      }
-      .start()
+    }
   }
 
   /** One idempotent micro-batch step (public for replay tests):
@@ -121,9 +103,9 @@ object StreamSketch {
   def processHHBatch(spark: SparkSession, batch: DataFrame, batchId: Long,
                      stateDir: String, topN: Int): Unit = {
     require(topN > 0, "topN > 0")
-    batch.filter(col("k").isNotNull)
-      .groupBy(col("k")).agg(count(lit(1)).as("n"))
-      .write.mode("overwrite").parquet(s"$stateDir/counts/batch=$batchId")
+    MicroBatch.writeBatch(batch.filter(col("k").isNotNull)
+      .groupBy(col("k")).agg(count(lit(1)).as("n")),
+      s"$stateDir/counts", batchId)
     val topk = graft.functions.TopKAggregator.topK(topN)
     spark.read.parquet(s"$stateDir/counts")
       .groupBy(col("k")).agg(sum(col("n")).as("n"))
@@ -159,9 +141,9 @@ object StreamSketch {
         .select(explode(col("smp")).as("e"))
         .select(col("e.id").as("event_id"),
           negate(col("e.score")).cast("long").as("h"))
-      ids.join(clean.select(col("event_id"), col("value")).hint("shuffle_hash"),
-          "event_id")
-        .write.mode("overwrite").parquet(s"$stateDir/qsample/batch=$batchId")
+      MicroBatch.writeBatch(ids.join(
+          clean.select(col("event_id"), col("value")).hint("shuffle_hash"),
+          "event_id"), s"$stateDir/qsample", batchId)
       val merged = spark.read.parquet(s"$stateDir/qsample")
         .orderBy(col("h"), col("event_id")).limit(k) // TakeOrdered: bounded
         .select(col("value")).collect().map(_.getDouble(0)).sorted
@@ -197,16 +179,10 @@ object StreamSketch {
   def runMgHeavyHitters(spark: SparkSession, landingDir: String,
                         stateDir: String, checkpointDir: String,
                         k: Int = 8): StreamingQuery = {
-    val events = spark.readStream.schema(mgSchema)
-      .option("multiLine", "false")
-      .json(landingDir)
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    MicroBatch.run(spark, mgSchema, landingDir, checkpointDir) {
+      (batch, batchId) =>
         processMgBatch(spark, batch, batchId, stateDir, k)
-      }
-      .start()
+    }
   }
 
   /** One idempotent micro-batch step (public for replay tests):
@@ -217,11 +193,11 @@ object StreamSketch {
     */
   def processMgBatch(spark: SparkSession, batch: DataFrame, batchId: Long,
                      stateDir: String, k: Int): Unit = {
-    batch.filter(col("tok").isNotNull)
+    MicroBatch.writeBatch(batch.filter(col("tok").isNotNull)
       .agg(graft.functions.MisraGries.heavyHitters(k)(col("tok")).as("hh"))
       .select(explode(col("hh")).as("e"))
-      .select(col("e.tok").as("tok"), col("e.est").as("est"))
-      .write.mode("overwrite").parquet(s"$stateDir/mg/batch=$batchId")
+      .select(col("e.tok").as("tok"), col("e.est").as("est")),
+      s"$stateDir/mg", batchId)
     spark.read.parquet(s"$stateDir/mg")
       .agg(graft.functions.MisraGries.mergeHeavyHitters(k)(
         col("tok"), col("est")).as("hh"))

@@ -4,7 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType, TimestampType}
 
 import graft.core.PlanCapture.CheckpointOps
@@ -135,16 +135,12 @@ object StreamTransitions {
           statePath: String, checkpointDir: String,
           buckets: Int = 8): StreamingQuery = {
     import spark.implicits._
-    val events = spark.readStream.schema(eventSchema)
-      .option("multiLine", "false")
-      .json(landingDir)
+    val events = MicroBatch.landing(spark, eventSchema, landingDir)
       .filter(col("user_id").isNotNull && col("ts").isNotNull &&
         col("event_id").isNotNull && col("k").isNotNull)
       .as[TransEvent]
-    emits(events).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[TransEmit], batchId: Long) =>
+    MicroBatch.run(emits(events), checkpointDir, OutputMode.Append) {
+      (batch, batchId) =>
         // one materialization feeds both the edge write and the drop
         // meter (two passes over a re-planned stream batch would
         // recompute the stateful fold)
@@ -152,8 +148,7 @@ object StreamTransitions {
         writeEdges(spark, b.filter(!col("late"))
           .select(col("src"), col("dst")), batchId, table, statePath, buckets)
         writeDrops(spark, b, batchId, table, statePath, buckets)
-      }
-      .start()
+    }
   }
 
   /** One idempotent per-user dropped-count write for this batch — the

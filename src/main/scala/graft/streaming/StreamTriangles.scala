@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.ext.Graphs
@@ -19,7 +19,7 @@ import graft.operators.Layout
   *
   * State = ONE batch-partitioned table of simple undirected edges
   * ([[Layout.ensureBucketedBatchTable]], bucketed by `a` for the
-  * novelty anti-join). foreachBatch is AT-LEAST-ONCE, so every write
+  * novelty anti-join). [[MicroBatch]] is AT-LEAST-ONCE, so every write
   * is keyed by batch id and the state a batch reads is restricted to
   * STRICTLY EARLIER batches (the StreamDedup replay contract): a
   * replayed batch recomputes the identical delta against the identical
@@ -41,16 +41,10 @@ object StreamTriangles {
   def run(spark: SparkSession, landingDir: String, stateDir: String,
           outDir: String, checkpointDir: String,
           buckets: Int = 8): StreamingQuery =
-    spark.readStream.schema(edgeSchema)
-      .option("multiLine", "false")
-      .json(landingDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    MicroBatch.run(spark, edgeSchema, landingDir, checkpointDir) {
+      (batch, batchId) =>
         processBatch(spark, batch, batchId, stateDir, outDir, buckets)
-      }
-      .start()
+    }
 
   /** One idempotent micro-batch step (public for replay tests):
     * triangle deltas of `batch`'s edges against all state from batches
@@ -69,8 +63,7 @@ object StreamTriangles {
     val batchEdges = batch
       .filter(col("src").isNotNull && col("dst").isNotNull)
     val delta = Graphs.incrementalTriangles(prior, batchEdges)
-    delta.coalesce(1).write.mode("overwrite")
-      .parquet(s"$outDir/batch=$batchId")
+    MicroBatch.writeBatch(delta.coalesce(1), outDir, batchId)
     // state grows by the batch's NOVEL simple edges only (re-added
     // edges are no-ops — exactly the edges the delta ignored)
     val simple = batchEdges.filter(col("src") =!= col("dst"))

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType, TimestampType}
 
 import graft.operators.Layout
@@ -25,7 +25,7 @@ import graft.operators.Layout
   *
   * Latest is by EVENT time under the deterministic total order
   * (ts, event_id), not by arrival: a late-arriving older change can
-  * never clobber a newer value, and a replayed batch (foreachBatch is
+  * never clobber a newer value, and a replayed batch ([[MicroBatch]] is
   * at-least-once) rewrites identical rows — the snapshot is
   * arrival-order-free by construction, not by coordination.
   */
@@ -44,17 +44,11 @@ object StreamUpsert {
   def run(spark: SparkSession, landingDir: String, table: String,
           statePath: String, snapshotDir: String, checkpointDir: String,
           buckets: Int = 8): StreamingQuery = {
-    val changes = spark.readStream.schema(changeSchema)
-      .option("multiLine", "false")
-      .json(landingDir)
-    changes.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    MicroBatch.run(spark, changeSchema, landingDir, checkpointDir) {
+      (batch, batchId) =>
         processBatch(spark, batch, batchId, table, statePath, snapshotDir,
           buckets)
-      }
-      .start()
+    }
   }
 
   /** Reduce `df` to its latest row per user under (ts, event_id) —

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.ext.Curation
@@ -25,7 +25,7 @@ import graft.operators.Layout
   * O(batch) arriving side shuffles, and per-batch work is O(batch),
   * never O(frontier).
   *
-  * foreachBatch is AT-LEAST-ONCE (the StreamDedup contract): every
+  * [[MicroBatch]] is AT-LEAST-ONCE (the StreamDedup contract): every
   * write is keyed by batch id (`batch=<id>`, dynamic-partition
   * overwrite), the state a batch probes is restricted to STRICTLY
   * EARLIER batches, and batch content is a deterministic function of
@@ -53,16 +53,10 @@ object StreamUrlDedup {
   def run(spark: SparkSession, landingDir: String, stateDir: String,
           outDir: String, checkpointDir: String,
           urlBuckets: Int = DefaultUrlBuckets): StreamingQuery = {
-    val docs = spark.readStream.schema(docSchema)
-      .option("multiLine", "false")
-      .json(landingDir)
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
+    MicroBatch.run(spark, docSchema, landingDir, checkpointDir) {
+      (batch0, batchId) =>
         processBatch(spark, batch0, batchId, stateDir, outDir, urlBuckets)
-      }
-      .start()
+    }
   }
 
   /** One idempotent micro-batch step (public so replays — the
@@ -112,8 +106,8 @@ object StreamUrlDedup {
         .filter(col("doc_id") =!= col("keep_doc"))
         .select(col("doc_id"), col("norm_url"), col("domain"),
           col("keep_doc"))
-      crossDrops.unionByName(intraDrops)
-        .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
+      MicroBatch.writeBatch(crossDrops.unionByName(intraDrops), outDir,
+        batchId)
       Layout.overwriteBatch(
         keepers.select(col("norm_url"), col("domain"), col("keep_doc")),
         table, batchId)
@@ -180,7 +174,8 @@ object StreamUrlDedup {
         Layout.overwriteBatch(merged, table, upToBatch)
         old.foreach { b =>
           spark.sql(s"ALTER TABLE $table DROP IF EXISTS PARTITION (batch=$b)")
-          fs.delete(new org.apache.hadoop.fs.Path(s"$path/batch=$b"), true)
+          fs.delete(
+            new org.apache.hadoop.fs.Path(MicroBatch.partition(path, b)), true)
           ()
         }
         fs.delete(mpath, false) // state is single-copy again

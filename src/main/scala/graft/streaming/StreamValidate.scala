@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 
 import graft.operators.Layout
@@ -65,18 +65,12 @@ object StreamValidate {
           admitPath: String, quarantineTable: String, quarantinePath: String,
           metricsTable: String, metricsPath: String,
           checkpointDir: String, buckets: Int = 8): StreamingQuery =
-    spark.readStream.schema(rowSchema)
-      .option("multiLine", "false")
-      .json(landingDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    MicroBatch.run(spark, rowSchema, landingDir, checkpointDir) {
+      (batch, batchId) =>
         processBatch(spark, batch, batchId, admitTable, admitPath,
           quarantineTable, quarantinePath, metricsTable, metricsPath,
           buckets)
-      }
-      .start()
+    }
 
   /** One idempotent micro-batch step (public for replay tests). */
   def processBatch(spark: SparkSession, batch: DataFrame, batchId: Long,

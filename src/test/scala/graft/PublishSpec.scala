@@ -21,15 +21,6 @@ class PublishSpec extends SparkSpec {
       (4, 1004), (5, 1005), (6, 1006)))
   }
 
-  test("scalable SeqNumber renumbering matches the window variant") {
-    val scalable = PublishJob.buildMatchwise(Extractors.matchwise(raw), scalable = true)
-    val a = mw.select(col("match_id"), col("match_number")).collect()
-      .map(r => (r.getInt(0), r.getInt(1))).toSet
-    val b = scalable.select(col("match_id"), col("match_number")).collect()
-      .map(r => (r.getInt(0), r.getInt(1))).toSet
-    assert(a == b)
-  }
-
   test("matchwise columns match the shipped artifact header") {
     assert(mw.columns.toSeq == Cricsheet.matchwiseColumns)
   }

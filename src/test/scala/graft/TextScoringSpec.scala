@@ -385,6 +385,16 @@ class TextScoringSpec extends SparkSpec {
     assert(got(1) == ((2, "de", 3L, 5L, 8L)), got(1).toString)
   }
 
+  test("unigramPrune: maxUnits = 0 is refused, not walked as two steps") {
+    // sequence(1, 0) counts DOWN to [1, 0], so an unguarded walk would
+    // silently take two greedy steps
+    val e = intercept[IllegalArgumentException] {
+      TextAnalysis.unigramPrune(docs("xyz xyz de de de"), vocabTop = 10,
+        iters = 3, pruneIters = 1, maxUnits = 0)
+    }
+    assert(e.getMessage.contains("maxUnits >= 1"), e.getMessage)
+  }
+
   test("viterbi-EM: learned scores flip an ambiguous segmentation, then converge") {
     // corpus engineered so iters=3 trains units {a,b,c,d,ab,abc,cd}
     // (merge order ab, abc, cd) and 'abcd' has TWO minimal-piece
