@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times every declared query at the target scale
   * factor and prints one JSON line for the driver.
   *
@@ -16,19 +14,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // size runtime-filter blooms to local candidate cardinality
-      // (see graft.core.Sessions) — keeps task binaries small
-      .config("spark.sql.optimizer.runtime.bloomFilter.expectedNumItems",
-        "131072")
-      .config("spark.sql.optimizer.runtime.bloomFilter.numBits", "1048576")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.local(cpus.toInt)
 
     // -1.0 marks a FAILED query (never a partial elapsed time, which
     // would read as a fast pass in the harness)
@@ -184,8 +170,14 @@ object Bench {
       s"""{"metric":"total","value":$total,"unit":"sec","passed_total":$passedTotal,"min_total":${r3(minTotal)},"passed_min_total":${r3(passedMinTotal)},"queries":$qs,"spread":$spread,"failed":$failedJson,"sf":"$sfDir"}"""
     val compactLine =
       s"""{"metric":"total","value":$total,"unit":"sec","passed_total":$passedTotal,"min_total":${r3(minTotal)},"passed_min_total":${r3(passedMinTotal)},"n_queries":${names.size},"failed":$failedJson,"sf":"$sfDir","detail":"$out"}"""
-    java.nio.file.Files.write(java.nio.file.Paths.get(out),
-      (fullLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val outPath = java.nio.file.Paths.get(out)
+    // a full-registry run also refreshes the canonical bench_out.json
+    // beside it: the stable path per-query consumers read
+    val paths =
+      if (args.nonEmpty) Seq(outPath)
+      else Seq(outPath, outPath.resolveSibling("bench_out.json")).distinct
+    paths.foreach(java.nio.file.Files.write(_,
+      (fullLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8)))
     // print LAST, after session teardown, so nothing else can land
     // between the JSON line and the end of the captured output
     spark.stop()

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 import scala.collection.mutable
 
@@ -19,17 +18,7 @@ object JobProfile {
     require(args.length >= 2, "usage: JobProfile <name> [<name>...] <sfDir>")
     val (names, sfDir) = (args.init.toSeq, args.last)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.optimizer.runtime.bloomFilter.expectedNumItems",
-        "131072")
-      .config("spark.sql.optimizer.runtime.bloomFilter.numBits", "1048576")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.local(cpus.toInt)
 
     names.foreach { name =>
       def runOnce(): Unit =

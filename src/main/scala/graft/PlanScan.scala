@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-shape audit main — the [[graft.core.PlanAudit]] rules applied
   * at an ARBITRARY scale factor, closing the sf-variance blind spot:
   * PlanGuardSpec proves the allowance tables at sf0.001 on every test
@@ -31,17 +29,7 @@ object PlanScan {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args.drop(2).toSet) else None
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.optimizer.runtime.bloomFilter.expectedNumItems",
-        "131072")
-      .config("spark.sql.optimizer.runtime.bloomFilter.numBits", "1048576")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.local(cpus.toInt)
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
     val audits = names.map { n =>

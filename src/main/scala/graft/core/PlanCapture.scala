@@ -4,7 +4,7 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference}
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.plans.logical.{CollectMetrics, LogicalPlan, Project}
 import org.apache.spark.sql.execution.{LogicalRDD, SparkPlan}
 
 /** Sees through `localCheckpoint` for plan audits.
@@ -76,6 +76,16 @@ object PlanCapture {
       } => alreadyMaterialized(pr.child)
     case _ => false
   }
+
+  /** True when `ds` only observes metrics over an already-materialized
+    * input: the [[graft.ext.SmallInput]] gate then measures that input
+    * with one aggregate instead of re-checkpointing it.
+    */
+  def observesMaterialized(ds: Dataset[_]): Boolean =
+    ds.queryExecution.optimizedPlan match {
+      case c: CollectMetrics => alreadyMaterialized(c.child)
+      case _ => false
+    }
 
   implicit class CheckpointOps[T](private val ds: Dataset[T]) extends AnyVal {
     /** `localCheckpoint()` that is visible to plan audits. */

@@ -544,70 +544,69 @@ object Dedup {
     * rep_id < doc_id rows marking the drops.
     */
   def dupClusters(pairs: DataFrame,
-                  driverThreshold: Long = 1L << 20): DataFrame = {
+                  driverThreshold: Long = SmallInput.DefaultThreshold): DataFrame = {
     import org.apache.spark.sql.Observation
-    // undirected edges + self-loops; localCheckpoint (not cache) so the
-    // upstream candidate-generation pipeline is never replayed — and so
-    // each round's plan starts from a materialized RDD instead of
-    // nesting one join deeper per round (unbounded lineage would make
-    // recovery from an executor loss replay the whole chain)
-    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(pairs.select(col("doc_b"), col("doc_a")))
-      .distinct().cpGuard()
-    // A dup-pair graph at or below broadcast scale (1M edges = 16 MB of
-    // longs) doesn't need iterative shuffle rounds: each distributed
+    // undirected edges + self-loops, materialized once by the gate
+    // (localCheckpoint, not cache) so the upstream candidate-generation
+    // pipeline is never replayed — and so each round's plan starts from
+    // a materialized RDD instead of nesting one join deeper per round
+    // (unbounded lineage would make recovery from an executor loss
+    // replay the whole chain). A dup-pair graph at or below the
+    // threshold doesn't need iterative shuffle rounds: each distributed
     // round costs whole jobs of fixed overhead regardless of size. Same
     // min-label answer from a driver union-find; the loop below remains
     // the shape for graphs that genuinely don't fit.
-    val edgeCount = edges.count()
-    if (edgeCount <= driverThreshold) return driverUnionFind(edges)
-    // labels only ever decrease, so the label sum is a monotone
-    // fixpoint witness: unchanged sum <=> converged (cheaper than a
-    // per-round diff join). The sum rides on the checkpoint job via
-    // observe(), so each round is exactly ONE job.
-    def materialize(df: DataFrame, obsName: String): (DataFrame, Long) = {
-      val obs = Observation(obsName)
-      val chk = df.observe(obs, sum(col("rep_id")).as("label_sum"))
-        .cpGuard()
-      (chk, obs.get("label_sum").asInstanceOf[Long])
+    SmallInput.gate(
+      pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+        .union(pairs.select(col("doc_b"), col("doc_a")))
+        .distinct(), driverThreshold)(driverUnionFind) { (edges, _) =>
+      // labels only ever decrease, so the label sum is a monotone
+      // fixpoint witness: unchanged sum <=> converged (cheaper than a
+      // per-round diff join). The sum rides on the checkpoint job via
+      // observe(), so each round is exactly ONE job.
+      def materialize(df: DataFrame, obsName: String): (DataFrame, Long) = {
+        val obs = Observation(obsName)
+        val chk = df.observe(obs, sum(col("rep_id")).as("label_sum"))
+          .cpGuard()
+        (chk, obs.get("label_sum").asInstanceOf[Long])
+      }
+      var (labels, prevSum) = materialize(
+        edges.select(col("src").as("doc_id"))
+          .union(edges.select(col("dst")))
+          .distinct()
+          .withColumn("rep_id", col("doc_id")),
+        "cc_init")
+      var changed = true
+      var rounds = 0
+      while (changed && rounds < 50) {
+        val viaEdges = edges
+          .join(labels.withColumnRenamed("doc_id", "dst_id"),
+            col("dst") === col("dst_id"))
+          .select(col("src").as("doc_id"), col("rep_id"))
+        val (next, curSum) = materialize(
+          labels.select(col("doc_id"), col("rep_id"))
+            .union(viaEdges)
+            .groupBy(col("doc_id"))
+            .agg(min(col("rep_id")).as("rep_id")),
+          s"cc_round_$rounds")
+        changed = curSum != prevSum
+        prevSum = curSum
+        labels = next
+        rounds += 1
+      }
+      labels.orderBy(col("doc_id"))
     }
-    var (labels, prevSum) = materialize(
-      edges.select(col("src").as("doc_id"))
-        .union(edges.select(col("dst")))
-        .distinct()
-        .withColumn("rep_id", col("doc_id")),
-      "cc_init")
-    var changed = true
-    var rounds = 0
-    while (changed && rounds < 50) {
-      val viaEdges = edges
-        .join(labels.withColumnRenamed("doc_id", "dst_id"),
-          col("dst") === col("dst_id"))
-        .select(col("src").as("doc_id"), col("rep_id"))
-      val (next, curSum) = materialize(
-        labels.select(col("doc_id"), col("rep_id"))
-          .union(viaEdges)
-          .groupBy(col("doc_id"))
-          .agg(min(col("rep_id")).as("rep_id")),
-        s"cc_round_$rounds")
-      changed = curSum != prevSum
-      prevSum = curSum
-      labels = next
-      rounds += 1
-    }
-    labels.orderBy(col("doc_id"))
   }
 
-  /** Min-union find over a collected (src, dst) edge list — the shared
-    * below-broadcast-scale path of [[dupClusters]] and
-    * [[dupClustersTwoPhase]]: identical labels to either distributed
-    * loop (root chosen by min-union IS the component minimum), one
-    * bounded collect instead of whole jobs of fixed overhead per round.
+  /** Min-union find over collected (src, dst) edge rows — the shared
+    * below-threshold path of [[dupClusters]] and [[dupClustersTwoPhase]]:
+    * identical labels to either distributed loop (root chosen by
+    * min-union IS the component minimum), one bounded collect instead
+    * of whole jobs of fixed overhead per round.
     */
-  private def driverUnionFind(edges: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
+  private def driverUnionFind(small: SmallInput.Collected): DataFrame = {
+    val spark = small.input.sparkSession
     import spark.implicits._
-    val es = edges.select(col("src"), col("dst")).as[(Long, Long)].collect()
     val parent = scala.collection.mutable.HashMap.empty[Long, Long]
     def find(x: Long): Long = {
       var r = parent.getOrElseUpdate(x, x)
@@ -616,16 +615,14 @@ object Dedup {
       while (parent(c) != r) { val nxt = parent(c); parent(c) = r; c = nxt }
       r
     }
-    es.foreach { case (a, b) =>
-      val (ra, rb) = (find(a), find(b))
+    small.rows.foreach { e =>
+      val (ra, rb) = (find(e.getAs[Number](0).longValue),
+        find(e.getAs[Number](1).longValue))
       if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
     }
-    val labels = parent.keys.toSeq.map { v =>
-      val root = find(v)
-      (v, root)
-    }
     // root chosen by min-union, so root IS the component minimum
-    labels.toDF("doc_id", "rep_id").orderBy(col("doc_id"))
+    parent.keys.toSeq.map(v => (v, find(v)))
+      .toDF("doc_id", "rep_id").orderBy(col("doc_id"))
   }
 
   /** Connected components by alternating large-star / small-star
@@ -652,7 +649,7 @@ object Dedup {
     * [[dupClusters]] (oracle-shared d09/d09b/d09c).
     */
   def dupClustersTwoPhase(pairs: DataFrame, maxRounds: Int = 50,
-                          driverThreshold: Long = 1L << 20): DataFrame = {
+                          driverThreshold: Long = SmallInput.DefaultThreshold): DataFrame = {
     def symmetrize(dir: DataFrame): DataFrame =
       dir.union(dir.select(col("v").as("u"), col("u").as("v")))
         .filter(col("u") =!= col("v")).distinct()
@@ -669,46 +666,43 @@ object Dedup {
         .select(col("v").as("u"), col("m").as("v"))
         .union(withM.select(col("u"), col("m").as("v"))))
     }
-    // the edge count rides the symmetrize checkpoint (observe) — one
-    // job, not a checkpoint + a count
-    val cObs = org.apache.spark.sql.Observation()
-    var cur = symmetrize(
-      pairs.select(col("doc_a").as("u"), col("doc_b").as("v")))
-      .observe(cObs, count(lit(1)).as("n")).cpGuard()
-    var nCur = cObs.get("n").asInstanceOf[Long]
-    // the dupClusters driver contract: a below-broadcast-scale graph
-    // pays whole jobs of fixed overhead per star round for no reason —
-    // the min-union find computes the IDENTICAL labels (root = component
+    // the dupClusters driver contract: a below-threshold graph pays
+    // whole jobs of fixed overhead per star round for no reason — the
+    // min-union find computes the IDENTICAL labels (root = component
     // minimum). The star loop below remains the shape for graphs that
-    // genuinely don't fit; d09c pins it with driverThreshold = 0.
-    if (nCur <= driverThreshold)
-      return driverUnionFind(
-        cur.select(col("u").as("src"), col("v").as("dst")))
-    val nodeCount = cur.select(col("u")).distinct().count()
-    var converged = false
-    var rounds = 0
-    while (!converged && rounds < maxRounds) {
-      // edge count rides on the checkpoint job (observe): per round one
-      // materialization + the one-sided exceptAll — never a third job.
-      // Equal DISTINCT-set sizes + empty next∖cur ⟺ set equality, so
-      // the exactness of the fixpoint test is unchanged
-      val nObs = org.apache.spark.sql.Observation()
-      val next = smallStar(largeStar(cur))
-        .observe(nObs, count(lit(1)).as("n")).cpGuard()
-      val nNext = nObs.get("n").asInstanceOf[Long]
-      converged = nNext == nCur && next.exceptAll(cur).isEmpty
-      cur = next
-      nCur = nNext
-      rounds += 1
+    // genuinely don't fit; d09c pins it with driverThreshold = 0. The
+    // edge count rides the symmetrize checkpoint the gate takes.
+    SmallInput.gate(
+      symmetrize(pairs.select(col("doc_a").as("u"), col("doc_b").as("v"))),
+      driverThreshold)(driverUnionFind) { (first, n0) =>
+      var cur = first
+      var nCur = n0
+      val nodeCount = cur.select(col("u")).distinct().count()
+      var converged = false
+      var rounds = 0
+      while (!converged && rounds < maxRounds) {
+        // edge count rides on the checkpoint job (observe): per round one
+        // materialization + the one-sided exceptAll — never a third job.
+        // Equal DISTINCT-set sizes + empty next∖cur ⟺ set equality, so
+        // the exactness of the fixpoint test is unchanged
+        val nObs = org.apache.spark.sql.Observation()
+        val next = smallStar(largeStar(cur))
+          .observe(nObs, count(lit(1)).as("n")).cpGuard()
+        val nNext = nObs.get("n").asInstanceOf[Long]
+        converged = nNext == nCur && next.exceptAll(cur).isEmpty
+        cur = next
+        nCur = nNext
+        rounds += 1
+      }
+      require(converged,
+        s"two-phase connected components did not converge in $maxRounds rounds")
+      val labels = cur.groupBy(col("u")).agg(min(col("v")).as("mv"))
+        .select(col("u").as("doc_id"), least(col("mv"), col("u")).as("rep_id"))
+        .cpGuard()
+      require(labels.count() == nodeCount,
+        "two-phase star cover lost nodes — refusing to emit partial labels")
+      labels.orderBy(col("doc_id"))
     }
-    require(converged,
-      s"two-phase connected components did not converge in $maxRounds rounds")
-    val labels = cur.groupBy(col("u")).agg(min(col("v")).as("mv"))
-      .select(col("u").as("doc_id"), least(col("mv"), col("u")).as("rep_id"))
-      .cpGuard()
-    require(labels.count() == nodeCount,
-      "two-phase star cover lost nodes — refusing to emit partial labels")
-    labels.orderBy(col("doc_id"))
   }
 
   /** Near-dup cluster RESOLUTION — the end product a training-set

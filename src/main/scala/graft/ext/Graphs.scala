@@ -39,45 +39,94 @@ object Graphs {
     * shuffle on node id, so a cluster run co-partitions edges and ranks
     * once and every iteration reuses that partitioning. The only
     * driver-side value is n (one count), used for the two start/tele
-    * literals.
+    * literals. Below `driverThreshold` edges the [[SmallInput]] gate
+    * runs the identical sweeps on the driver instead.
     */
   def pageRank(edges: DataFrame, iters: Int, scale: Long = 1L << 40,
                damping: Int = 85,
-               driverThreshold: Long = 1L << 20): DataFrame = {
+               driverThreshold: Long = SmallInput.DefaultThreshold): DataFrame = {
     require(iters >= 0 && damping > 0 && damping < 100,
       "iters >= 0, damping in (0, 100)")
-    // materialize the (possibly expensive) edge derivation ONCE: the
-    // node set, the out-weight table and the envelope join each
-    // materialize in their own job, and without this checkpoint every
-    // one of those jobs re-derives the whole upstream edge pipeline
-    // (for the registered queries that is a json-parse + window +
-    // groupBy over events, recomputed 4x). One narrow (src, dst, w)
-    // materialization is also the cluster-scale shape the iteration
-    // contract promises: derive once, co-partition, iterate.
-    val ed = edges.select(col("src"), col("dst"), col("w")).cpGuard()
-    // the scc/betweenness/dupClusters driver-threshold contract: a
-    // below-broadcast-scale edge list pays ~3 whole jobs of fixed
-    // scheduling overhead per sweep; one driver pass runs the
-    // IDENTICAL integer sweeps (spec-pinned via driverThreshold = 0).
-    // The count reads the just-materialized checkpoint (or an input
-    // the cpGuard skip left materialized), never the derivation.
-    if (ed.count() <= driverThreshold)
-      return pageRankDriver(ed, iters, scale, damping)
-    val outw = ed.groupBy(col("src")).agg(sum(col("w")).as("ow"))
-    val nodes = ed.select(col("src").as("k"))
-      .union(ed.select(col("dst").as("k"))).distinct().cpGuard()
-    val n = nodes.count()
-    require(n > 0, "PageRank over an empty graph")
-    val tele = ((100 - damping) * scale / 100) / n
-    val edFull = envelopeCheckedEdges(ed, outw)
-    var r = nodes.withColumn("r", lit(scale / n))
-    for (_ <- 0 until iters)
-      r = prUpdate(edFull, nodes, r, tele, damping)
-    r.orderBy(col("k"))
+    // the gate materializes the (possibly expensive) edge derivation
+    // ONCE: the node set, the out-weight table and the edge join each
+    // materialize in their own job, and without it every one of those
+    // jobs re-derives the whole upstream edge pipeline (for the
+    // registered queries a json-parse + window + groupBy over events).
+    // One narrow (src, dst, w) materialization is also the
+    // cluster-scale shape the iteration contract promises: derive
+    // once, co-partition, iterate.
+    SmallInput.gate(keyed(edges), driverThreshold, prEnvelope,
+        checkPrEnvelope) { small =>
+      keyedFrame(small, Seq(StructField("r", LongType)),
+        prDriver(small.rows, iters, scale, damping, _ => true)
+          .map { case (k, _, r) => Row(k, r) })
+    } { (ed, _) =>
+      val nodes = ed.select(col("src").as("k"))
+        .union(ed.select(col("dst").as("k"))).distinct().cpGuard()
+      val n = nodes.count()
+      require(n > 0, EmptyGraph)
+      val tele = ((100 - damping) * scale / 100) / n
+      val edFull = withOutWeight(ed)
+      var r = nodes.withColumn("r", lit(scale / n))
+      for (_ <- 0 until iters)
+        r = prUpdate(edFull, nodes, r, tele, damping)
+      r.orderBy(col("k"))
+    }
   }
 
+  private val EmptyGraph = "PageRank over an empty graph"
+
+  /** `(src, dst, w)` with both endpoints cast to the type their union
+    * coerces to, so the driver and distributed paths of a shortcut
+    * emit one `k` type (an INT src beside a BIGINT dst keys every node
+    * as BIGINT, exactly as the distributed node union does).
+    */
+  private def keyed(edges: DataFrame): DataFrame = {
+    val t = edges.select(col("src").as("k"))
+      .union(edges.select(col("dst").as("k"))).schema("k").dataType
+    edges.select(col("src").cast(t).as("src"), col("dst").cast(t).as("dst"),
+      col("w"))
+  }
+
+  /** A driver shortcut's result: `rows` keyed by the gated edges' key
+    * type, then `cols`, ordered by k.
+    */
+  private def keyedFrame(small: SmallInput.Collected, cols: Seq[StructField],
+                         rows: Seq[Row]): DataFrame =
+    small.input.sparkSession.createDataFrame(rows.asJava,
+        StructType(StructField("k", small.input.schema("src").dataType) +: cols))
+      .orderBy(col("k"))
+
+  /** The PageRank weight envelope, observed on the gated edge
+    * materialization and checked once for both paths: r <= scale = 2^40
+    * and w < 2^22 keep r*w < 2^62; an over-envelope weight would
+    * silently overflow Long and corrupt EVERY rank downstream (mirrors
+    * kmeansCentsFromVecs' fixed-point require). Every edge row counts,
+    * null endpoints included.
+    */
+  private val prEnvelope = Seq(max(col("w")).cast("long").as("wmax"),
+    min(col("w")).cast("long").as("wmin"))
+
+  private def checkPrEnvelope(stats: Map[String, Any]): Unit =
+    (stats("wmax"), stats("wmin")) match {
+      case (wmax: Long, wmin: Long) =>
+        require(wmin >= 0L, "PageRank edge weights must be >= 0")
+        require(wmax < (1L << 22),
+          s"PageRank edge weight $wmax >= 2^22: r*w would overflow Long " +
+            "at scale=2^40 fixed point; rescale weights (ranks depend " +
+            "only on relative weight per source)")
+      case _ => // no weighted edges: nothing to overflow
+    }
+
+  /** Edges with their source's out-weight attached, materialized once:
+    * every distributed sweep reads it.
+    */
+  private def withOutWeight(ed: DataFrame): DataFrame =
+    ed.join(ed.groupBy(col("src")).agg(sum(col("w")).as("ow")), "src")
+      .cpGuard()
+
   /** One damped fixed-point update — the iteration body shared by
-    * [[pageRank]] and [[pageRankWarmStart]] (identical plan shape:
+    * [[pageRank]] and [[pageRankRefresh]] (identical plan shape:
     * one src-keyed equi-join + one groupBy(dst) + the node attach).
     */
   private def prUpdate(edFull: DataFrame, nodes: DataFrame, r: DataFrame,
@@ -93,130 +142,46 @@ object Graphs {
           .as("r"))
   }
 
-  /** Collected (src, dst, w) rows of a below-threshold edge table, with
-    * the [[envelopeCheckedEdges]] weight envelope enforced verbatim.
-    * `rows` keeps every edge row (node sets include endpoints of
-    * null-weight edges, as the distributed unions do); `es` drops
-    * null-weight edges (they contribute no mass and no out-weight,
-    * exactly as null-skipping SUMs behave distributed-side).
+  /** The driver sweep behind all three PageRank shortcuts — [[prUpdate]]
+    * verbatim over collected (src, dst, w) rows: per edge
+    * floor(r(src)·w / ow(src)) (a zero out-weight contributes nothing,
+    * as the distributed div-by-zero null does), per node
+    * tele + floor(damping·Σ / 100). The teleport share and the uniform
+    * start go to the nodes `teleports` admits (every node, or ppr's
+    * seeds); `warm` overrides the start where it holds a rank
+    * (refresh). Node sets include every endpoint, null included, as
+    * the distributed unions do; null-weight edges carry no mass, as
+    * null-skipping SUMs behave, and no mass moves along an edge with a
+    * null endpoint, which the distributed joins drop (its weight still
+    * counts in ow(src), as the groupBy(src) does). Returns
+    * (k, start rank, final rank).
     */
-  private def collectPrEdges(ed: DataFrame): (Seq[Row], Seq[(Any, Any, Long)]) = {
-    val rows = ed.select(col("src"), col("dst"), col("w").cast("long"))
-      .collect().toSeq
+  private def prDriver(rows: Array[Row], iters: Int, scale: Long,
+                       damping: Int, teleports: Any => Boolean,
+                       noTeleport: String = EmptyGraph,
+                       warm: collection.Map[Any, Long] = Map.empty)
+      : Seq[(Any, Long, Long)] = {
+    val nodes = (rows.map(_.get(0)) ++ rows.map(_.get(1))).distinct.toSeq
     val es = rows.filterNot(_.isNullAt(2))
-      .map(r => (r.get(0), r.get(1), r.getLong(2)))
-    if (es.nonEmpty) {
-      require(es.map(_._3).min >= 0L, "PageRank edge weights must be >= 0")
-      val wmax = es.map(_._3).max
-      require(wmax < (1L << 22),
-        s"PageRank edge weight $wmax >= 2^22: r*w would overflow Long " +
-          "at scale=2^40 fixed point; rescale weights (ranks depend " +
-          "only on relative weight per source)")
-    }
-    (rows, es)
-  }
-
-  /** One damped integer sweep on the driver — [[prUpdate]] verbatim:
-    * per edge floor(r(src)·w / ow(src)) (a zero out-weight contributes
-    * nothing, as the distributed div-by-zero null does), per node
-    * tele + floor(damping·Σ / 100).
-    */
-  private def prSweepDriver(es: Seq[(Any, Any, Long)], nodes: Seq[Any],
-                            ow: collection.Map[Any, Long],
-                            r: collection.Map[Any, Long],
-                            teleFor: Any => Long,
-                            damping: Int): Map[Any, Long] = {
-    val s = scala.collection.mutable.HashMap.empty[Any, Long]
-    es.foreach { case (src, dst, w) =>
-      val o = ow.getOrElse(src, 0L)
-      if (o != 0L) s(dst) = s.getOrElse(dst, 0L) + r(src) * w / o
-    }
-    nodes.map(k => k ->
-      (teleFor(k) + damping * s.getOrElse(k, 0L) / 100)).toMap
-  }
-
-  /** Driver-side [[pageRank]] for a below-threshold edge list — the
-    * identical integer fixed point (spec-pinned via
-    * driverThreshold = 0), including the weight envelope and the
-    * empty-graph require.
-    */
-  private def pageRankDriver(ed: DataFrame, iters: Int, scale: Long,
-                             damping: Int): DataFrame = {
-    val spark = ed.sparkSession
-    val (rows, es) = collectPrEdges(ed)
-    val nodes: Seq[Any] = (rows.map(_.get(0)) ++ rows.map(_.get(1))).distinct
-    val n = nodes.length.toLong
-    require(n > 0, "PageRank over an empty graph")
-    val tele = ((100 - damping) * scale / 100) / n
-    val ow = es.groupBy(_._1).map { case (s0, xs) => s0 -> xs.map(_._3).sum }
-    var r: Map[Any, Long] = nodes.map(_ -> scale / n).toMap
-    for (_ <- 0 until iters)
-      r = prSweepDriver(es, nodes, ow, r, _ => tele, damping)
-    val schema = StructType(Seq(
-      StructField("k", ed.schema("src").dataType),
-      StructField("r", LongType)))
-    spark.createDataFrame(nodes.map(k => Row(k, r(k))).asJava, schema)
-      .orderBy(col("k"))
-  }
-
-  /** Driver-side [[pageRankRefresh]] — same integer sweeps seeded from
-    * the collected (bounded, node-sized) start snapshot; nodes absent
-    * from the seed (or with a null seed rank) start at the uniform
-    * floor, exactly as the distributed coalesce does.
-    */
-  private def pageRankRefreshDriver(ed: DataFrame, startRanks: DataFrame,
-                                    refreshIters: Int, scale: Long,
-                                    damping: Int): DataFrame = {
-    val spark = ed.sparkSession
-    val (rows, es) = collectPrEdges(ed)
-    val nodes: Seq[Any] = (rows.map(_.get(0)) ++ rows.map(_.get(1))).distinct
-    val n = nodes.length.toLong
-    require(n > 0, "PageRank over an empty graph")
-    val tele = ((100 - damping) * scale / 100) / n
-    val ow = es.groupBy(_._1).map { case (s0, xs) => s0 -> xs.map(_._3).sum }
-    val seedMap = startRanks.select(col("k"), col("r").cast("long"))
-      .collect().filterNot(_.isNullAt(1))
-      .map(r0 => r0.get(0) -> r0.getLong(1)).toMap
-    val start: Map[Any, Long] =
-      nodes.map(k => k -> seedMap.getOrElse(k, scale / n)).toMap
+      .map(r => (r.get(0), r.get(1), r.getAs[Number](2).longValue))
+    val ow = es.groupMapReduce(_._1)(_._3)(_ + _)
+    val moves = es.filter(e => e._1 != null && e._2 != null)
+    val m = nodes.count(teleports).toLong
+    require(m > 0, noTeleport)
+    val tele = ((100 - damping) * scale / 100) / m
+    val start = nodes.map(k =>
+      k -> warm.getOrElse(k, if (teleports(k)) scale / m else 0L)).toMap
     var r = start
-    for (_ <- 0 until refreshIters)
-      r = prSweepDriver(es, nodes, ow, r, _ => tele, damping)
-    val schema = StructType(Seq(
-      StructField("k", ed.schema("src").dataType),
-      StructField("r_start", LongType), StructField("r_warm", LongType)))
-    spark.createDataFrame(
-      nodes.map(k => Row(k, start(k), r(k))).asJava, schema)
-      .orderBy(col("k"))
-  }
-
-  /** Driver-side [[personalizedPageRank]] — teleport confined to the
-    * seed set, same integer sweeps and requires.
-    */
-  private def personalizedPageRankDriver(ed: DataFrame, seeds: DataFrame,
-                                         iters: Int, scale: Long,
-                                         damping: Int): DataFrame = {
-    val spark = ed.sparkSession
-    val (rows, es) = collectPrEdges(ed)
-    val nodes: Seq[Any] = (rows.map(_.get(0)) ++ rows.map(_.get(1))).distinct
-    val seedSet = seeds.select(col("k")).distinct().collect()
-      .map(_.get(0)).toSet
-    val ns = nodes.count(seedSet.contains).toLong
-    require(ns > 0, "personalized PageRank needs at least one seed in the graph")
-    val tele = ((100 - damping) * scale / 100) / ns
-    val ow = es.groupBy(_._1).map { case (s0, xs) => s0 -> xs.map(_._3).sum }
-    var r: Map[Any, Long] = nodes.map(k =>
-      k -> (if (seedSet.contains(k)) scale / ns else 0L)).toMap
-    for (_ <- 0 until iters)
-      r = prSweepDriver(es, nodes, ow, r,
-        k => if (seedSet.contains(k)) tele else 0L, damping)
-    val schema = StructType(Seq(
-      StructField("k", ed.schema("src").dataType),
-      StructField("is_seed", BooleanType, nullable = false),
-      StructField("r", LongType)))
-    spark.createDataFrame(
-      nodes.map(k => Row(k, seedSet.contains(k), r(k))).asJava, schema)
-      .orderBy(col("k"))
+    for (_ <- 0 until iters) {
+      val s = scala.collection.mutable.HashMap.empty[Any, Long]
+      moves.foreach { case (src, dst, w) =>
+        val o = ow.getOrElse(src, 0L)
+        if (o != 0L) s(dst) = s.getOrElse(dst, 0L) + r(src) * w / o
+      }
+      r = nodes.map(k => k -> ((if (teleports(k)) tele else 0L) +
+        damping * s.getOrElse(k, 0L) / 100)).toMap
+    }
+    nodes.map(k => (k, start(k), r(k)))
   }
 
   /** WARM-START PageRank refresh for a growing graph — the graph
@@ -241,7 +206,7 @@ object Graphs {
                         damping: Int = 85): DataFrame = {
     // the old cohort's derivation is read by BOTH phases (its own
     // fixed point and the merged refresh graph): materialize it once
-    // up front; pageRank's internal checkpoint then only re-scans it
+    // up front; pageRank's gate then measures it without re-writing it
     val old = oldEdges.select(col("src"), col("dst"), col("w")).cpGuard()
     val rOld = pageRank(old, baseIters, scale, damping)
     // cohort edge sets merge by ADDING weights (disjoint user cohorts
@@ -263,69 +228,49 @@ object Graphs {
     * makes this exactly [[pageRank]](edges, refreshIters). Output:
     * (k, r_start, r_warm). Same co-partitionable per-iteration shape
     * and integer envelope as pageRank; driver values are the node
-    * count and the envelope observation only.
+    * count and the envelope observation only. The driver shortcut also
+    * needs the snapshot to fit `driverThreshold` rows.
     */
   def pageRankRefresh(edges: DataFrame, startRanks: DataFrame,
                       refreshIters: Int = 1, scale: Long = 1L << 40,
                       damping: Int = 85,
-                      driverThreshold: Long = 1L << 20): DataFrame = {
+                      driverThreshold: Long = SmallInput.DefaultThreshold): DataFrame = {
     require(refreshIters >= 1, "refreshIters >= 1")
-    // merged edge table materialized ONCE (the pageRank contract): the
-    // out-weight, node and envelope jobs below otherwise each re-run
-    // the upstream derivation AND this merge groupBy from scratch
-    val ed = edges.select(col("src"), col("dst"), col("w"))
-      .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))
-      .cpGuard()
-    // below broadcast scale: one driver pass, identical integer sweeps
-    // (the pageRank threshold contract; spec-pinned)
-    if (ed.count() <= driverThreshold)
-      return pageRankRefreshDriver(ed, startRanks, refreshIters, scale,
-        damping)
-    val outw = ed.groupBy(col("src")).agg(sum(col("w")).as("ow"))
-    val nodes = ed.select(col("src").as("k"))
-      .union(ed.select(col("dst").as("k"))).distinct().cpGuard()
-    val n = nodes.count()
-    require(n > 0, "PageRank over an empty graph")
-    val tele = ((100 - damping) * scale / 100) / n
-    val edFull = envelopeCheckedEdges(ed, outw)
-    val start = nodes
-      .join(startRanks.select(col("k"), col("r").as("r_old")), Seq("k"), "left")
-      .select(col("k"), coalesce(col("r_old"), lit(scale / n)).as("r"))
-      .cpGuard() // read by every refresh round AND the final attach
-    var r = start
-    for (_ <- 0 until refreshIters)
-      r = prUpdate(edFull, nodes, r, tele, damping)
-    r.withColumnRenamed("r", "r_warm")
-      .join(start.withColumnRenamed("r", "r_start"), "k")
-      .select(col("k"), col("r_start"), col("r_warm"))
-  }
-
-  /** Shared [[pageRank]]/[[personalizedPageRank]] edge prep: attach
-    * per-source out-weight and enforce the fixed-point operand envelope
-    * before any iteration runs. The weight check rides on the
-    * checkpoint job via observe() — zero extra passes over the
-    * (possibly expensive) edge-derivation pipeline. r <= scale = 2^40
-    * and w < 2^22 keep r*w < 2^62; an over-envelope weight would
-    * silently overflow Long and corrupt EVERY rank downstream
-    * (mirrors kmeansCentsFromVecs' fixed-point require).
-    */
-  private def envelopeCheckedEdges(ed: DataFrame,
-                                   outw: DataFrame): DataFrame = {
-    val wObs = org.apache.spark.sql.Observation()
-    val edFull = ed.join(outw, "src")
-      .observe(wObs, max(col("w")).cast("long").as("wmax"),
-        min(col("w")).cast("long").as("wmin"))
-      .cpGuard()
-    (wObs.get("wmax"), wObs.get("wmin")) match {
-      case (wmax: Long, wmin: Long) =>
-        require(wmin >= 0L, "PageRank edge weights must be >= 0")
-        require(wmax < (1L << 22),
-          s"PageRank edge weight $wmax >= 2^22: r*w would overflow Long " +
-          "at scale=2^40 fixed point; rescale weights (ranks depend " +
-          "only on relative weight per source)")
-      case _ => // no edges with weights: nothing to overflow
+    // the gate materializes the MERGED edge table once (the pageRank
+    // contract): the out-weight, node and edge-join jobs below
+    // otherwise each re-run the upstream derivation AND this merge
+    val ek = keyed(edges)
+    val snapshot = startRanks.select(col("k").cast(ek.schema("src").dataType),
+      col("r").cast("long"))
+    SmallInput.gate(
+        ek.groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w")),
+        driverThreshold, prEnvelope, checkPrEnvelope, Seq(snapshot)) { small =>
+      // null keys and ranks never match the distributed left join, and
+      // its final inner join drops a null k
+      val warm = small.sides.head.filterNot(r => r.anyNull)
+        .map(r => r.get(0) -> r.getLong(1)).toMap
+      keyedFrame(small,
+        Seq(StructField("r_start", LongType), StructField("r_warm", LongType)),
+        prDriver(small.rows, refreshIters, scale, damping, _ => true,
+          warm = warm).collect { case (k, s, r) if k != null => Row(k, s, r) })
+    } { (ed, _) =>
+      val nodes = ed.select(col("src").as("k"))
+        .union(ed.select(col("dst").as("k"))).distinct().cpGuard()
+      val n = nodes.count()
+      require(n > 0, EmptyGraph)
+      val tele = ((100 - damping) * scale / 100) / n
+      val edFull = withOutWeight(ed)
+      val start = nodes
+        .join(startRanks.select(col("k"), col("r").as("r_old")), Seq("k"), "left")
+        .select(col("k"), coalesce(col("r_old"), lit(scale / n)).as("r"))
+        .cpGuard() // read by every refresh round AND the final attach
+      var r = start
+      for (_ <- 0 until refreshIters)
+        r = prUpdate(edFull, nodes, r, tele, damping)
+      r.withColumnRenamed("r", "r_warm")
+        .join(start.withColumnRenamed("r", "r_start"), "k")
+        .select(col("k"), col("r_start"), col("r_warm"))
     }
-    edFull
   }
 
   /** PERSONALIZED PageRank (random walk with restart to a seed set):
@@ -336,47 +281,55 @@ object Graphs {
     * nodes; non-seeds receive only propagated mass. Identical integer
     * envelope and per-iteration shuffle shape as [[pageRank]] (one
     * co-partitionable equi-join + groupBy(dst) per round); the only
-    * driver-side value is the seed count.
+    * driver-side value is the seed count. The driver shortcut also
+    * needs the seed set to fit `driverThreshold` rows.
     */
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame, iters: Int,
                            scale: Long = 1L << 40,
                            damping: Int = 85,
-                           driverThreshold: Long = 1L << 20): DataFrame = {
+                           driverThreshold: Long = SmallInput.DefaultThreshold): DataFrame = {
     require(iters >= 0 && damping > 0 && damping < 100,
       "iters >= 0, damping in (0, 100)")
-    // one edge materialization before the fan-out (the pageRank
-    // contract — see pageRank for why)
-    val ed = edges.select(col("src"), col("dst"), col("w")).cpGuard()
-    // below broadcast scale: one driver pass, identical integer sweeps
-    // (the pageRank threshold contract; spec-pinned)
-    if (ed.count() <= driverThreshold)
-      return personalizedPageRankDriver(ed, seeds, iters, scale, damping)
-    val outw = ed.groupBy(col("src")).agg(sum(col("w")).as("ow"))
-    val nodes = ed.select(col("src").as("k"))
-      .union(ed.select(col("dst").as("k"))).distinct()
-    val flagged = nodes
-      .join(seeds.select(col("k")).distinct().withColumn("__s", lit(true)),
-        Seq("k"), "left")
-      .select(col("k"), coalesce(col("__s"), lit(false)).as("is_seed"))
-      .cpGuard()
-    val ns = flagged.filter(col("is_seed")).count()
-    require(ns > 0, "personalized PageRank needs at least one seed in the graph")
-    val tele = ((100 - damping) * scale / 100) / ns
-    val edFull = envelopeCheckedEdges(ed, outw)
-    var r = flagged.select(col("k"), col("is_seed"),
-      when(col("is_seed"), lit(scale / ns)).otherwise(lit(0L)).as("r"))
-    for (_ <- 0 until iters) {
-      val contrib = edFull
-        .join(r.select(col("k").as("src"), col("r")), "src")
-        .select(col("dst"), expr("r * w div ow").as("c"))
-        .groupBy(col("dst")).agg(sum(col("c")).as("s"))
-      r = flagged.join(contrib, col("k") === col("dst"), "left")
-        .select(col("k"), col("is_seed"),
-          (when(col("is_seed"), lit(tele)).otherwise(lit(0L)) +
-            expr(s"(CAST($damping AS BIGINT) * coalesce(s, CAST(0 AS BIGINT))) div 100"))
-            .as("r"))
+    val noSeed = "personalized PageRank needs at least one seed in the graph"
+    val ek = keyed(edges)
+    val seedKeys = seeds.select(col("k").cast(ek.schema("src").dataType))
+      .distinct()
+    SmallInput.gate(ek, driverThreshold, prEnvelope, checkPrEnvelope,
+        Seq(seedKeys)) { small =>
+      // a null seed never matches the distributed left join
+      val seedSet = small.sides.head.filterNot(_.isNullAt(0)).map(_.get(0)).toSet
+      keyedFrame(small,
+        Seq(StructField("is_seed", BooleanType, nullable = false),
+          StructField("r", LongType)),
+        prDriver(small.rows, iters, scale, damping, seedSet, noSeed)
+          .map { case (k, _, r) => Row(k, seedSet(k), r) })
+    } { (ed, _) =>
+      val nodes = ed.select(col("src").as("k"))
+        .union(ed.select(col("dst").as("k"))).distinct()
+      val flagged = nodes
+        .join(seeds.select(col("k")).distinct().withColumn("__s", lit(true)),
+          Seq("k"), "left")
+        .select(col("k"), coalesce(col("__s"), lit(false)).as("is_seed"))
+        .cpGuard()
+      val ns = flagged.filter(col("is_seed")).count()
+      require(ns > 0, noSeed)
+      val tele = ((100 - damping) * scale / 100) / ns
+      val edFull = withOutWeight(ed)
+      var r = flagged.select(col("k"), col("is_seed"),
+        when(col("is_seed"), lit(scale / ns)).otherwise(lit(0L)).as("r"))
+      for (_ <- 0 until iters) {
+        val contrib = edFull
+          .join(r.select(col("k").as("src"), col("r")), "src")
+          .select(col("dst"), expr("r * w div ow").as("c"))
+          .groupBy(col("dst")).agg(sum(col("c")).as("s"))
+        r = flagged.join(contrib, col("k") === col("dst"), "left")
+          .select(col("k"), col("is_seed"),
+            (when(col("is_seed"), lit(tele)).otherwise(lit(0L)) +
+              expr(s"(CAST($damping AS BIGINT) * coalesce(s, CAST(0 AS BIGINT))) div 100"))
+              .as("r"))
+      }
+      r.select(col("k"), col("is_seed"), col("r")).orderBy(col("k"))
     }
-    r.select(col("k"), col("is_seed"), col("r")).orderBy(col("k"))
   }
 
   /** Fixed-point weighted HITS (Kleinberg 1999) over a directed edge
@@ -403,83 +356,75 @@ object Graphs {
     * renormalization. Output: (k, auth_fp, hub_fp) per node.
     */
   def hits(edges: DataFrame, iters: Int, scale: Long = 1L << 20,
-           driverThreshold: Long = 1L << 20): DataFrame = {
+           driverThreshold: Long = SmallInput.DefaultThreshold): DataFrame = {
     require(iters >= 1, "iters >= 1")
-    // Envelope enforcement rides on the ONE edge materialization (the
-    // pageRank observe() pattern): per-edge w < 2^22 and total weight
-    // < 2^41 keep w * score < 2^43 and every in/out sum < 2^62. The
-    // edge checkpoint comes FIRST so the node-set job below reads the
+    // Envelope enforcement rides on the ONE edge materialization the
+    // gate takes: per-edge w < 2^22 and total weight < 2^41 keep
+    // w * score < 2^43 and every in/out sum < 2^62. The edge
+    // checkpoint comes FIRST so the node-set job below reads the
     // materialized table instead of re-deriving the edge pipeline
-    // twice (once per union branch). The edge count for the driver
-    // threshold rides the same observe — zero extra jobs.
-    val wObs = org.apache.spark.sql.Observation("hits_w_envelope")
-    val edC = edges.select(col("src"), col("dst"), col("w")).observe(wObs,
-      max(col("w")).cast("long").as("wmax"),
-      min(col("w")).cast("long").as("wmin"),
-      sum(col("w")).cast("long").as("wtot"),
-      count(lit(1)).as("ne")).cpGuard()
-    (wObs.get("wmax"), wObs.get("wmin"), wObs.get("wtot")) match {
-      case (wmax: Long, wmin: Long, wtot: Long) =>
-        require(wmin >= 0L, "HITS edge weights must be >= 0")
-        require(wmax < (1L << 22) && wtot < (1L << 41),
-          s"HITS weight envelope exceeded (max $wmax, total $wtot): " +
-          "w must be < 2^22 and total weight < 2^41 so integer " +
-          "score sums cannot overflow Long; rescale weights")
-      case _ => // edge-free graph: nothing to overflow
+    // twice (once per union branch).
+    SmallInput.gate(keyed(edges), driverThreshold,
+      Seq(max(col("w")).cast("long").as("wmax"),
+        min(col("w")).cast("long").as("wmin"),
+        sum(col("w")).cast("long").as("wtot")),
+      stats => (stats("wmax"), stats("wmin"), stats("wtot")) match {
+        case (wmax: Long, wmin: Long, wtot: Long) =>
+          require(wmin >= 0L, "HITS edge weights must be >= 0")
+          require(wmax < (1L << 22) && wtot < (1L << 41),
+            s"HITS weight envelope exceeded (max $wmax, total $wtot): " +
+            "w must be < 2^22 and total weight < 2^41 so integer " +
+            "score sums cannot overflow Long; rescale weights")
+        case _ => // edge-free graph: nothing to overflow
+      })(hitsDriver(_, iters, scale)) { (edC, _) =>
+      val nodes = edC.select(col("src").as("k"))
+        .union(edC.select(col("dst").as("k"))).distinct().cpGuard()
+      def renorm(raw: DataFrame, c: String): DataFrame = {
+        val m = raw.agg(max(col(c)).as("m"))
+        raw.crossJoin(broadcast(m))
+          .select(col("k"),
+            expr(s"$c div greatest(CAST(1 AS BIGINT), m div $scale)").as(c))
+      }
+      var hub = nodes.withColumn("h", lit(scale))
+      var auth = nodes.withColumn("a", lit(0L))
+      for (_ <- 0 until iters) {
+        val aRaw = nodes.join(
+          edC.join(hub.select(col("k").as("src"), col("h")), "src")
+            .groupBy(col("dst")).agg(sum(expr("w * h")).as("ar")),
+          col("k") === col("dst"), "left")
+          .select(col("k"), coalesce(col("ar"), lit(0L)).as("ar"))
+        // ONE materialization per half-iteration (the kCore/bfs loop
+        // discipline): without it each renorm references its input twice
+        // (the max row and the main branch), so the lineage — and the
+        // recomputation — doubles per half-iteration (2^(2*iters) plan
+        // growth; the iters=2 plan carried 22 BNLJ nodes).
+        auth = renorm(aRaw, "ar").withColumnRenamed("ar", "a")
+          .cpGuard()
+        val hRaw = nodes.join(
+          edC.join(auth.select(col("k").as("dst"), col("a")), "dst")
+            .groupBy(col("src")).agg(sum(expr("w * a")).as("hr")),
+          col("k") === col("src"), "left")
+          .select(col("k"), coalesce(col("hr"), lit(0L)).as("hr"))
+        hub = renorm(hRaw, "hr").withColumnRenamed("hr", "h")
+          .cpGuard()
+      }
+      auth.join(hub, "k")
+        .select(col("k"), col("a").as("auth_fp"), col("h").as("hub_fp"))
+        .orderBy(col("k"))
     }
-    // the pageRank threshold contract: below broadcast scale, one
-    // driver pass runs the identical renormalized integer iterations
-    // (spec-pinned via driverThreshold = 0)
-    if (wObs.get("ne").asInstanceOf[Long] <= driverThreshold)
-      return hitsDriver(edC, iters, scale)
-    val nodes = edC.select(col("src").as("k"))
-      .union(edC.select(col("dst").as("k"))).distinct().cpGuard()
-    def renorm(raw: DataFrame, c: String): DataFrame = {
-      val m = raw.agg(max(col(c)).as("m"))
-      raw.crossJoin(broadcast(m))
-        .select(col("k"),
-          expr(s"$c div greatest(CAST(1 AS BIGINT), m div $scale)").as(c))
-    }
-    var hub = nodes.withColumn("h", lit(scale))
-    var auth = nodes.withColumn("a", lit(0L))
-    for (_ <- 0 until iters) {
-      val aRaw = nodes.join(
-        edC.join(hub.select(col("k").as("src"), col("h")), "src")
-          .groupBy(col("dst")).agg(sum(expr("w * h")).as("ar")),
-        col("k") === col("dst"), "left")
-        .select(col("k"), coalesce(col("ar"), lit(0L)).as("ar"))
-      // ONE materialization per half-iteration (the kCore/bfs loop
-      // discipline): without it each renorm references its input twice
-      // (the max row and the main branch), so the lineage — and the
-      // recomputation — doubles per half-iteration (2^(2*iters) plan
-      // growth; the iters=2 plan carried 22 BNLJ nodes).
-      auth = renorm(aRaw, "ar").withColumnRenamed("ar", "a")
-        .cpGuard()
-      val hRaw = nodes.join(
-        edC.join(auth.select(col("k").as("dst"), col("a")), "dst")
-          .groupBy(col("src")).agg(sum(expr("w * a")).as("hr")),
-        col("k") === col("src"), "left")
-        .select(col("k"), coalesce(col("hr"), lit(0L)).as("hr"))
-      hub = renorm(hRaw, "hr").withColumnRenamed("hr", "h")
-        .cpGuard()
-    }
-    auth.join(hub, "k")
-      .select(col("k"), col("a").as("auth_fp"), col("h").as("hub_fp"))
-      .orderBy(col("k"))
   }
 
   /** Driver-side [[hits]] for a below-threshold edge list — the same
     * renormalized integer iterations (spec-pinned via
-    * driverThreshold = 0); the weight envelope was already enforced by
-    * the caller's observe.
+    * driverThreshold = 0). As in the distributed joins, no score moves
+    * along an edge with a null endpoint and a null k is not reported.
     */
-  private def hitsDriver(edC: DataFrame, iters: Int, scale: Long): DataFrame = {
-    val spark = edC.sparkSession
-    val rows = edC.select(col("src"), col("dst"), col("w").cast("long"))
-      .collect().toSeq
-    val es = rows.filterNot(_.isNullAt(2))
-      .map(r => (r.get(0), r.get(1), r.getLong(2)))
-    val nodes: Seq[Any] = (rows.map(_.get(0)) ++ rows.map(_.get(1))).distinct
+  private def hitsDriver(small: SmallInput.Collected, iters: Int,
+                         scale: Long): DataFrame = {
+    val rows = small.rows
+    val es = rows.filterNot(r => r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2))
+      .map(r => (r.get(0), r.get(1), r.getAs[Number](2).longValue))
+    val nodes = (rows.map(_.get(0)) ++ rows.map(_.get(1))).distinct.toSeq
     var hub: Map[Any, Long] = nodes.map(_ -> scale).toMap
     var auth: Map[Any, Long] = nodes.map(_ -> 0L).toMap
     // m = max raw score over ALL nodes (no-in-edge nodes count as 0,
@@ -499,12 +444,9 @@ object Graphs {
         hr(src) = hr.getOrElse(src, 0L) + w * auth(dst) }
       hub = renorm(hr)
     }
-    val schema = StructType(Seq(
-      StructField("k", edC.schema("src").dataType),
-      StructField("auth_fp", LongType), StructField("hub_fp", LongType)))
-    spark.createDataFrame(
-      nodes.map(k => Row(k, auth(k), hub(k))).asJava, schema)
-      .orderBy(col("k"))
+    keyedFrame(small,
+      Seq(StructField("auth_fp", LongType), StructField("hub_fp", LongType)),
+      nodes.filter(_ != null).map(k => Row(k, auth(k), hub(k))))
   }
 
   /** Synchronous label propagation (Raghavan et al. 2007) over the
@@ -1175,47 +1117,50 @@ object Graphs {
     */
   def betweenness(edges: DataFrame, maxRounds: Int = 12,
                   maxNodes: Long = 4096, scaleBits: Int = 20,
-                  driverThreshold: Long = 1L << 20): DataFrame = {
+                  driverThreshold: Long = SmallInput.DefaultThreshold): DataFrame = {
     require(maxRounds >= 1 && scaleBits >= 0 && scaleBits <= 30,
       "maxRounds >= 1, scaleBits in [0, 30]")
     val scale = 1L << scaleBits
-    val eObs = org.apache.spark.sql.Observation()
-    val ed = edges.filter(col("src") =!= col("dst"))
+    // below the threshold one driver pass computes the IDENTICAL
+    // floored-triple sum (not Brandes' rational accumulation, which
+    // would round differently) without whole jobs per BFS level
+    SmallInput.gate(simpleEdges(edges), driverThreshold)(
+      betweennessDriver(_, maxRounds, maxNodes, scale)) { (ed, _) =>
+      val nodes = ed.select(col("src").as("k"))
+        .unionAll(ed.select(col("dst").as("k"))).distinct().cpGuard()
+      val n = nodes.count()
+      require(n <= maxNodes,
+        s"betweenness: $n nodes exceeds the exact all-pairs bound " +
+          s"$maxNodes — run from a source sample (Brandes-Pich) instead")
+      val sp = sigmaBfsFrom(nodes, ed, maxRounds)
+      val p1 = sp.filter(col("d") >= 1)
+        .select(col("s"), col("v"), col("d").as("d1"), col("sigma").as("sig1"))
+      val p2 = sp.filter(col("d") >= 1)
+        .select(col("s").as("v"), col("v").as("t"),
+          col("d").as("d2"), col("sigma").as("sig2"))
+      val p3 = sp.select(col("s"), col("v").as("t"),
+        col("d").as("dst_d"), col("sigma").as("sigst"))
+      val bc = p1.join(p2, "v")
+        .join(p3, Seq("s", "t"))
+        .filter(col("d1") + col("d2") === col("dst_d"))
+        .select(col("v"),
+          expr(s"sig1 * sig2 * CAST($scale AS BIGINT) div sigst").as("term"))
+        .groupBy(col("v")).agg(sum(col("term")).as("bc"))
+      nodes.join(bc, col("k") === col("v"), "left")
+        .select(col("k"), coalesce(col("bc"), lit(0L)).as("bc_q"))
+        .orderBy(col("k"))
+    }
+  }
+
+  /** Self-loop-free distinct BIGINT `(src, dst)` pairs — the edge
+    * normalization [[betweenness]], [[betweennessSampled]],
+    * [[betweennessSource]] and [[scc]] gate on.
+    */
+  private def simpleEdges(edges: DataFrame): DataFrame =
+    edges.filter(col("src") =!= col("dst"))
       .select(col("src").cast("long").as("src"),
         col("dst").cast("long").as("dst"))
       .distinct()
-      .observe(eObs, count(lit(1)).as("ne")).cpGuard()
-    // the scc/dupClusters driver-threshold contract: a below-broadcast-
-    // scale edge list pays whole jobs of fixed overhead per BFS level
-    // for no reason — one driver pass computes the IDENTICAL
-    // floored-triple sum (not Brandes' rational accumulation, which
-    // would round differently)
-    if (eObs.get("ne").asInstanceOf[Long] <= driverThreshold)
-      return betweennessDriver(ed, maxRounds, maxNodes, scaleBits)
-    val nodes = ed.select(col("src").as("k"))
-      .unionAll(ed.select(col("dst").as("k"))).distinct().cpGuard()
-    val n = nodes.count()
-    require(n <= maxNodes,
-      s"betweenness: $n nodes exceeds the exact all-pairs bound " +
-        s"$maxNodes — run from a source sample (Brandes-Pich) instead")
-    val sp = sigmaBfsFrom(nodes, ed, maxRounds)
-    val p1 = sp.filter(col("d") >= 1)
-      .select(col("s"), col("v"), col("d").as("d1"), col("sigma").as("sig1"))
-    val p2 = sp.filter(col("d") >= 1)
-      .select(col("s").as("v"), col("v").as("t"),
-        col("d").as("d2"), col("sigma").as("sig2"))
-    val p3 = sp.select(col("s"), col("v").as("t"),
-      col("d").as("dst_d"), col("sigma").as("sigst"))
-    val bc = p1.join(p2, "v")
-      .join(p3, Seq("s", "t"))
-      .filter(col("d1") + col("d2") === col("dst_d"))
-      .select(col("v"),
-        expr(s"sig1 * sig2 * CAST($scale AS BIGINT) div sigst").as("term"))
-      .groupBy(col("v")).agg(sum(col("term")).as("bc"))
-    nodes.join(bc, col("k") === col("v"), "left")
-      .select(col("k"), coalesce(col("bc"), lit(0L)).as("bc_q"))
-      .orderBy(col("k"))
-  }
 
   /** Level-synchronous multi-source BFS with shortest-path counts:
     * from each source in `sources` (column `k`), the (s, v, d, sigma)
@@ -1258,6 +1203,109 @@ object Graphs {
     sp
   }
 
+  /** A collected BIGINT `(src, dst)` edge list on dense node indices —
+    * what the betweenness and scc driver shortcuts walk: `ids`
+    * ascending, `out`/`in` adjacency by index.
+    */
+  private final class DenseGraph(rows: Array[Row]) {
+    val ids: Array[Long] =
+      rows.flatMap(r => Array(r.getLong(0), r.getLong(1))).distinct.sorted
+    val n: Int = ids.length
+    private val index = ids.zipWithIndex.toMap
+    private def adjacency(from: Int, to: Int): Array[List[Int]] = {
+      val a = Array.fill(n)(List.empty[Int])
+      rows.foreach(r => a(index(r.getLong(from))) ::= index(r.getLong(to)))
+      a
+    }
+    lazy val out: Array[List[Int]] = adjacency(0, 1)
+    lazy val in: Array[List[Int]] = adjacency(1, 0)
+  }
+
+  /** Driver twin of [[sigmaBfsFrom]] from ONE source over dense
+    * adjacency, shared by the three betweenness shortcuts: per node the
+    * BFS depth (-1 = unreached) and the shortest-path count σ, summed
+    * level-synchronously, with the same loud contracts — σ < 2^20 and
+    * closure within `maxRounds` levels.
+    */
+  private def sigmaBfsDriver(adj: Array[List[Int]], s: Int,
+                             maxRounds: Int): (Array[Int], Array[Long]) = {
+    val dist = Array.fill(adj.length)(-1)
+    val sig = new Array[Long](adj.length)
+    dist(s) = 0
+    sig(s) = 1L
+    var frontier = List(s)
+    var d = 0
+    while (frontier.nonEmpty) {
+      d += 1
+      require(d <= maxRounds,
+        s"betweenness: BFS did not close in $maxRounds rounds (graph " +
+          "diameter exceeds the declared unroll bound)")
+      var next = List.empty[Int]
+      for (v <- frontier; w <- adj(v) if dist(w) == -1 || dist(w) == d) {
+        if (dist(w) == -1) { dist(w) = d; next ::= w }
+        sig(w) += sig(v)
+        require(sig(w) < (1L << 20),
+          "betweenness: shortest-path count >= 2^20 would overflow the " +
+            "integer term envelope; reduce the graph or scaleBits")
+      }
+      frontier = next
+    }
+    (dist, sig)
+  }
+
+  /** The pivot rule [[betweennessSampled]] and [[betweennessSource]]
+    * share on both paths: the `numSources` nodes smallest by Lehmer
+    * hash (k·48271) mod (2^31 − 1), ties by k. Ids must be below
+    * 2^63 / 48271 (overflow-free hash) and non-negative: Spark's pmod
+    * and the oracle's sign-following % diverge on negatives, so the
+    * two engines would pick DIFFERENT pivots — negatives are out of
+    * contract, not silently re-hashed.
+    */
+  private def checkPivots(op: String, kmin: Long, kmax: Long, n: Long,
+                          minNodes: Int): Unit = {
+    require(kmax < Long.MaxValue / 48271L,
+      s"$op: node ids too large for the overflow-free Lehmer seed hash")
+    require(kmin >= 0L,
+      s"$op: negative node ids break the cross-engine Lehmer seed hash " +
+        "contract (pmod vs sign-following %); remap ids to non-negative " +
+        "first")
+    require(n >= minNodes,
+      if (minNodes > 1) s"$op: need at least $minNodes nodes"
+      else s"$op: empty graph")
+  }
+
+  /** Distributed [[checkPivots]]: the node table (id bounds observed on
+    * its checkpoint), n, K and the checkpointed K-row pivot table.
+    */
+  private def pivots(ed: DataFrame, op: String, numSources: Int,
+                     minNodes: Int): (DataFrame, Long, Long, DataFrame) = {
+    val mObs = org.apache.spark.sql.Observation()
+    val nodes = ed.select(col("src").as("k"))
+      .unionAll(ed.select(col("dst").as("k"))).distinct()
+      .observe(mObs, coalesce(max(col("k")), lit(0L)).as("kmax"),
+        coalesce(min(col("k")), lit(0L)).as("kmin"))
+      .cpGuard()
+    val n = nodes.count()
+    checkPivots(op, mObs.get("kmin").asInstanceOf[Long],
+      mObs.get("kmax").asInstanceOf[Long], n, minNodes)
+    val k2 = math.min(numSources.toLong, n)
+    // bounded TakeOrdered: K rows, never the corpus
+    val seeds = nodes
+      .withColumn("__h", pmod(col("k") * 48271L, lit(2147483647L)))
+      .orderBy(col("__h"), col("k")).limit(k2.toInt)
+      .select(col("k")).cpGuard()
+    (nodes, n, k2, seeds)
+  }
+
+  /** Driver [[checkPivots]]: the pivots' dense indices. */
+  private def pivots(g: DenseGraph, op: String, numSources: Int,
+                     minNodes: Int): Array[Int] = {
+    checkPivots(op, g.ids.headOption.getOrElse(0L),
+      g.ids.lastOption.getOrElse(0L), g.n, minNodes)
+    g.ids.indices.sortBy(i => (g.ids(i) * 48271L % 2147483647L, g.ids(i)))
+      .take(math.min(numSources, g.n)).toArray
+  }
+
   /** Sampled betweenness centrality — [[betweenness]]'s production
     * path at corpus scale (Brandes & Pich ETA'07 pivot estimation):
     * `numSources` PIVOT nodes are chosen hash-deterministically (the
@@ -1290,92 +1338,63 @@ object Graphs {
   def betweennessSampled(edges: DataFrame, numSources: Int,
                          maxRounds: Int = 12,
                          scaleBits: Int = 20,
-                         driverThreshold: Long = 1L << 20): DataFrame = {
+                         driverThreshold: Long = SmallInput.DefaultThreshold): DataFrame = {
     require(numSources >= 2 && maxRounds >= 1 &&
       scaleBits >= 0 && scaleBits <= 30,
       "numSources >= 2, maxRounds >= 1, scaleBits in [0, 30]")
     val scale = 1L << scaleBits
-    val eObs = org.apache.spark.sql.Observation()
-    val ed = edges.filter(col("src") =!= col("dst"))
-      .select(col("src").cast("long").as("src"),
-        col("dst").cast("long").as("dst"))
-      .distinct()
-      .observe(eObs, count(lit(1)).as("ne")).cpGuard()
-    // the betweenness/betweennessSource driver-threshold contract: a
-    // below-broadcast-scale edge list pays ~2·diameter whole jobs of
-    // level-synchronous overhead across the two σ-BFS pyramids; one
-    // driver pass computes the IDENTICAL floored pivot-pair triple sum
-    // (order-independent floors, spec-pinned via driverThreshold = 0)
-    if (eObs.get("ne").asInstanceOf[Long] <= driverThreshold)
-      return betweennessSampledDriver(ed, numSources, maxRounds, scaleBits)
-    val mObs = org.apache.spark.sql.Observation()
-    val nodes = ed.select(col("src").as("k"))
-      .unionAll(ed.select(col("dst").as("k"))).distinct()
-      .observe(mObs, coalesce(max(col("k")), lit(0L)).as("kmax"),
-        coalesce(min(col("k")), lit(0L)).as("kmin"))
-      .cpGuard()
-    require(mObs.get("kmax").asInstanceOf[Long] < Long.MaxValue / 48271L,
-      "betweennessSampled: node ids too large for the overflow-free " +
-        "Lehmer seed hash")
-    // pmod (Spark) and sign-following % (the oracle) diverge on
-    // negative ids — the two engines would pick DIFFERENT pivot sets,
-    // so negatives are out of contract, not silently re-hashed
-    require(mObs.get("kmin").asInstanceOf[Long] >= 0L,
-      "betweennessSampled: negative node ids break the cross-engine " +
-        "Lehmer seed hash contract (pmod vs sign-following %); " +
-        "remap ids to non-negative first")
-    val n = nodes.count()
-    require(n >= 2, "betweennessSampled: need at least 2 nodes")
-    val k2 = math.min(numSources.toLong, n)
-    // bounded TakeOrdered: K rows, never the corpus
-    val seeds = nodes
-      .withColumn("__h", pmod(col("k") * 48271L, lit(2147483647L)))
-      .orderBy(col("__h"), col("k")).limit(k2.toInt)
-      .select(col("k")).cpGuard()
-    // the forward and backward σ-BFS pyramids are independent (both
-    // read only the CHECKPOINTED ed/seeds): run their level jobs
-    // concurrently so one direction's frontier tail back-fills the
-    // other's idle capacity (guide §2.6 overlap-independent-jobs)
-    val (spF, spB) = graft.core.Par.eval2(
-      sigmaBfsFrom(seeds, ed, maxRounds),
-      sigmaBfsFrom(seeds,
-        ed.select(col("dst").as("src"), col("src").as("dst")), maxRounds))
-    val p1 = spF.filter(col("d") >= 1)
-      .select(col("s"), col("v"), col("d").as("d1"), col("sigma").as("sig1"))
-    val p2 = spB.filter(col("d") >= 1)
-      .select(col("s").as("t"), col("v"),
-        col("d").as("d2"), col("sigma").as("sig2"))
-    val p3 = spF.select(col("s"), col("v").as("t"),
-      col("d").as("dst_d"), col("sigma").as("sigst"))
-    // n is a driver value: guard n(n-1) itself (wraps past n ~ 3.04e9,
-    // exactly the corpus-scale regime this op exists for — Spark
-    // non-ANSI arithmetic would wrap SILENTLY, violating the repo's
-    // loud-overflow discipline)
-    require(n - 1 <= Long.MaxValue / n,
-      s"betweennessSampled: n(n-1) overflows Long for n=$n")
-    val factNum = n * (n - 1)
-    val factDen = k2 * (k2 - 1)
-    // bc_raw_q can reach ~K(K-1)·2^scaleBits, so bc_raw_q·factNum can
-    // wrap for large n; the largest safe raw value is a driver constant
-    val rawLim = Long.MaxValue / factNum
-    val bc = p1.join(p2, "v")
-      .join(p3, Seq("s", "t"))
-      .filter(col("d1") + col("d2") === col("dst_d"))
-      .select(col("v"),
-        expr(s"sig1 * sig2 * CAST($scale AS BIGINT) div sigst").as("term"))
-      .groupBy(col("v")).agg(sum(col("term")).as("bc"))
-    nodes.join(bc, col("k") === col("v"), "left")
-      .select(col("k"), coalesce(col("bc"), lit(0L)).as("bc_raw_q"))
-      // the guard lives INSIDE the consumed expression (a separate
-      // assert_true column would be pruned away as dead); raise_error's
-      // NullType coerces into the BIGINT branch
-      .withColumn("bc_est_q",
-        expr(s"CASE WHEN bc_raw_q > ${rawLim}L THEN raise_error(concat(" +
-          "'betweennessSampled: bc_raw_q ', CAST(bc_raw_q AS STRING), " +
-          s"' overflows the n(n-1)/K(K-1) extrapolation at n=$n; lower " +
-          "scaleBits')) ELSE " +
-          s"bc_raw_q * CAST($factNum AS BIGINT) div CAST($factDen AS BIGINT) END"))
-      .orderBy(col("k"))
+    // below the threshold the ~2·diameter level jobs of the two σ-BFS
+    // pyramids are pure fixed overhead; one driver pass computes the
+    // IDENTICAL floored pivot-pair triple sum (order-independent floors)
+    SmallInput.gate(simpleEdges(edges), driverThreshold)(
+      betweennessSampledDriver(_, numSources, maxRounds, scale)) { (ed, _) =>
+      val (nodes, n, k2, seeds) =
+        pivots(ed, "betweennessSampled", numSources, minNodes = 2)
+      // the forward and backward σ-BFS pyramids are independent (both
+      // read only the CHECKPOINTED ed/seeds): run their level jobs
+      // concurrently so one direction's frontier tail back-fills the
+      // other's idle capacity (guide §2.6 overlap-independent-jobs)
+      val (spF, spB) = graft.core.Par.eval2(
+        sigmaBfsFrom(seeds, ed, maxRounds),
+        sigmaBfsFrom(seeds,
+          ed.select(col("dst").as("src"), col("src").as("dst")), maxRounds))
+      val p1 = spF.filter(col("d") >= 1)
+        .select(col("s"), col("v"), col("d").as("d1"), col("sigma").as("sig1"))
+      val p2 = spB.filter(col("d") >= 1)
+        .select(col("s").as("t"), col("v"),
+          col("d").as("d2"), col("sigma").as("sig2"))
+      val p3 = spF.select(col("s"), col("v").as("t"),
+        col("d").as("dst_d"), col("sigma").as("sigst"))
+      // n is a driver value: guard n(n-1) itself (wraps past n ~ 3.04e9,
+      // exactly the corpus-scale regime this op exists for — Spark
+      // non-ANSI arithmetic would wrap SILENTLY, violating the repo's
+      // loud-overflow discipline)
+      require(n - 1 <= Long.MaxValue / n,
+        s"betweennessSampled: n(n-1) overflows Long for n=$n")
+      val factNum = n * (n - 1)
+      val factDen = k2 * (k2 - 1)
+      // bc_raw_q can reach ~K(K-1)·2^scaleBits, so bc_raw_q·factNum can
+      // wrap for large n; the largest safe raw value is a driver constant
+      val rawLim = Long.MaxValue / factNum
+      val bc = p1.join(p2, "v")
+        .join(p3, Seq("s", "t"))
+        .filter(col("d1") + col("d2") === col("dst_d"))
+        .select(col("v"),
+          expr(s"sig1 * sig2 * CAST($scale AS BIGINT) div sigst").as("term"))
+        .groupBy(col("v")).agg(sum(col("term")).as("bc"))
+      nodes.join(bc, col("k") === col("v"), "left")
+        .select(col("k"), coalesce(col("bc"), lit(0L)).as("bc_raw_q"))
+        // the guard lives INSIDE the consumed expression (a separate
+        // assert_true column would be pruned away as dead); raise_error's
+        // NullType coerces into the BIGINT branch
+        .withColumn("bc_est_q",
+          expr(s"CASE WHEN bc_raw_q > ${rawLim}L THEN raise_error(concat(" +
+            "'betweennessSampled: bc_raw_q ', CAST(bc_raw_q AS STRING), " +
+            s"' overflows the n(n-1)/K(K-1) extrapolation at n=$n; lower " +
+            "scaleBits')) ELSE " +
+            s"bc_raw_q * CAST($factNum AS BIGINT) div CAST($factDen AS BIGINT) END"))
+        .orderBy(col("k"))
+    }
   }
 
   /** Source-only sampled betweenness — the Brandes-Pich n/K estimator
@@ -1411,325 +1430,188 @@ object Graphs {
   def betweennessSource(edges: DataFrame, numSources: Int,
                         maxRounds: Int = 12,
                         scaleBits: Int = 20,
-                        driverThreshold: Long = 1L << 20): DataFrame = {
+                        driverThreshold: Long = SmallInput.DefaultThreshold): DataFrame = {
     require(numSources >= 1 && maxRounds >= 1 &&
       scaleBits >= 0 && scaleBits <= 30,
       "numSources >= 1, maxRounds >= 1, scaleBits in [0, 30]")
     val scale = 1L << scaleBits
-    val eObs = org.apache.spark.sql.Observation()
-    val ed = edges.filter(col("src") =!= col("dst"))
-      .select(col("src").cast("long").as("src"),
-        col("dst").cast("long").as("dst"))
-      .distinct()
-      .observe(eObs, count(lit(1)).as("ne")).cpGuard()
-    // the betweenness/scc driver-threshold contract: below broadcast
-    // scale the level-synchronous sweep pays ~2·diameter whole jobs of
-    // fixed overhead; the per-edge floors are ORDER-INDEPENDENT, so one
-    // driver pass computes the BYTE-identical result (spec-pinned via
-    // driverThreshold = 0). Memory is O(n + m) per seed — no all-pairs
-    // state, unlike the exact-betweenness driver path
-    if (eObs.get("ne").asInstanceOf[Long] <= driverThreshold)
-      return betweennessSourceDriver(ed, numSources, maxRounds, scaleBits)
-    val mObs = org.apache.spark.sql.Observation()
-    val nodes = ed.select(col("src").as("k"))
-      .unionAll(ed.select(col("dst").as("k"))).distinct()
-      .observe(mObs, coalesce(max(col("k")), lit(0L)).as("kmax"),
-        coalesce(min(col("k")), lit(0L)).as("kmin"))
-      .cpGuard()
-    // the g28 cross-engine seed-hash contract, verbatim
-    require(mObs.get("kmax").asInstanceOf[Long] < Long.MaxValue / 48271L,
-      "betweennessSource: node ids too large for the overflow-free " +
-        "Lehmer seed hash")
-    require(mObs.get("kmin").asInstanceOf[Long] >= 0L,
-      "betweennessSource: negative node ids break the cross-engine " +
-        "Lehmer seed hash contract (pmod vs sign-following %); " +
-        "remap ids to non-negative first")
-    val n = nodes.count()
-    require(n >= 1, "betweennessSource: empty graph")
-    val k2 = math.min(numSources.toLong, n)
-    val seeds = nodes
-      .withColumn("__h", pmod(col("k") * 48271L, lit(2147483647L)))
-      .orderBy(col("__h"), col("k")).limit(k2.toInt)
-      .select(col("k")).cpGuard()
-    val sp = sigmaBfsFrom(seeds, ed, maxRounds)
-    // closure depth: a 1-row bounded aggregate, the dup-threshold idiom
-    val dMax = sp.agg(max(col("d"))).head().getInt(0)
-    // backward sweep, deepest level first; level 0 (v = s itself) is
-    // never computed — Brandes accumulates δ only over w ≠ s
-    var delta = sp.filter(col("d") === dMax)
-      .select(col("s"), col("v"), lit(0L).as("dq")).cpGuard()
-    val levels = scala.collection.mutable.Buffer.empty[DataFrame]
-    if (dMax >= 1) levels += delta
-    for (l <- (dMax - 1) to 1 by -1) {
-      val cur = sp.filter(col("d") === l)
-        .select(col("s"), col("v"), col("sigma").as("sig_v"))
-      val succ = sp.filter(col("d") === l + 1)
-        .select(col("s"), col("v").as("w"), col("sigma").as("sig_w"))
-        .join(delta.select(col("s"), col("v").as("w"), col("dq")),
-          Seq("s", "w"))
-      val contrib = cur
-        .join(ed, col("v") === col("src"))
-        .join(succ.withColumnRenamed("w", "dst"), Seq("s", "dst"))
-        .select(col("s"), col("v"),
-          expr(s"sig_v * (CAST($scale AS BIGINT) + dq) div sig_w")
-            .as("term"))
-        .groupBy(col("s"), col("v")).agg(sum(col("term")).as("dqs"))
-      val obs = org.apache.spark.sql.Observation()
-      delta = cur.select(col("s"), col("v"))
-        .join(contrib, Seq("s", "v"), "left")
-        .select(col("s"), col("v"),
-          coalesce(col("dqs"), lit(0L)).as("dq"))
-        .observe(obs, coalesce(max(col("dq")), lit(0L)).as("dmax"))
-        .cpGuard()
-      // next level multiplies σ (< 2^20) by (2^b + δq): keep the
-      // product under 2^62, loudly
-      require(obs.get("dmax").asInstanceOf[Long] < (1L << 42) - scale,
-        s"betweennessSource: δq reaches 2^42 at level $l and the next " +
-          "level's σ·(2^b + δq) product would overflow — lower scaleBits")
-      levels += delta
+    // below the threshold the level-synchronous sweep pays ~2·diameter
+    // whole jobs of fixed overhead; the per-edge floors are
+    // ORDER-INDEPENDENT, so one driver pass computes the BYTE-identical
+    // result. Memory is O(n + m) per seed — no all-pairs state
+    SmallInput.gate(simpleEdges(edges), driverThreshold)(
+      betweennessSourceDriver(_, numSources, maxRounds, scale)) { (ed, _) =>
+      val (nodes, n, k2, seeds) =
+        pivots(ed, "betweennessSource", numSources, minNodes = 1)
+      val sp = sigmaBfsFrom(seeds, ed, maxRounds)
+      // closure depth: a 1-row bounded aggregate, the dup-threshold idiom
+      val dMax = sp.agg(max(col("d"))).head().getInt(0)
+      // backward sweep, deepest level first; level 0 (v = s itself) is
+      // never computed — Brandes accumulates δ only over w ≠ s
+      var delta = sp.filter(col("d") === dMax)
+        .select(col("s"), col("v"), lit(0L).as("dq")).cpGuard()
+      val levels = scala.collection.mutable.Buffer.empty[DataFrame]
+      if (dMax >= 1) levels += delta
+      for (l <- (dMax - 1) to 1 by -1) {
+        val cur = sp.filter(col("d") === l)
+          .select(col("s"), col("v"), col("sigma").as("sig_v"))
+        val succ = sp.filter(col("d") === l + 1)
+          .select(col("s"), col("v").as("w"), col("sigma").as("sig_w"))
+          .join(delta.select(col("s"), col("v").as("w"), col("dq")),
+            Seq("s", "w"))
+        val contrib = cur
+          .join(ed, col("v") === col("src"))
+          .join(succ.withColumnRenamed("w", "dst"), Seq("s", "dst"))
+          .select(col("s"), col("v"),
+            expr(s"sig_v * (CAST($scale AS BIGINT) + dq) div sig_w")
+              .as("term"))
+          .groupBy(col("s"), col("v")).agg(sum(col("term")).as("dqs"))
+        val obs = org.apache.spark.sql.Observation()
+        delta = cur.select(col("s"), col("v"))
+          .join(contrib, Seq("s", "v"), "left")
+          .select(col("s"), col("v"),
+            coalesce(col("dqs"), lit(0L)).as("dq"))
+          .observe(obs, coalesce(max(col("dq")), lit(0L)).as("dmax"))
+          .cpGuard()
+        // next level multiplies σ (< 2^20) by (2^b + δq): keep the
+        // product under 2^62, loudly
+        require(obs.get("dmax").asInstanceOf[Long] < (1L << 42) - scale,
+          s"betweennessSource: δq reaches 2^42 at level $l and the next " +
+            "level's σ·(2^b + δq) product would overflow — lower scaleBits")
+        levels += delta
+      }
+      val bc =
+        if (levels.isEmpty)
+          nodes.select(col("k").as("v"), lit(0L).as("bc")).limit(0)
+        else levels.reduce(_ unionByName _)
+          .groupBy(col("v")).agg(sum(col("dq")).as("bc"))
+      val rawLim = Long.MaxValue / n
+      nodes.join(bc, col("k") === col("v"), "left")
+        .select(col("k"), coalesce(col("bc"), lit(0L)).as("bc_raw_q"))
+        // the g28 discipline: the guard lives INSIDE the consumed
+        // expression, raise_error's NullType coercing into the branch
+        .withColumn("bc_est_q",
+          expr(s"CASE WHEN bc_raw_q > ${rawLim}L THEN raise_error(concat(" +
+            "'betweennessSource: bc_raw_q ', CAST(bc_raw_q AS STRING), " +
+            s"' overflows the n/K extrapolation at n=$n; lower scaleBits'" +
+            s")) ELSE bc_raw_q * CAST($n AS BIGINT) div CAST($k2 AS BIGINT) " +
+            "END"))
+        .orderBy(col("k"))
     }
-    val bc =
-      if (levels.isEmpty)
-        nodes.select(col("k").as("v"), lit(0L).as("bc")).limit(0)
-      else levels.reduce(_ unionByName _)
-        .groupBy(col("v")).agg(sum(col("dq")).as("bc"))
-    val rawLim = Long.MaxValue / n
-    nodes.join(bc, col("k") === col("v"), "left")
-      .select(col("k"), coalesce(col("bc"), lit(0L)).as("bc_raw_q"))
-      // the g28 discipline: the guard lives INSIDE the consumed
-      // expression, raise_error's NullType coercing into the branch
-      .withColumn("bc_est_q",
-        expr(s"CASE WHEN bc_raw_q > ${rawLim}L THEN raise_error(concat(" +
-          "'betweennessSource: bc_raw_q ', CAST(bc_raw_q AS STRING), " +
-          s"' overflows the n/K extrapolation at n=$n; lower scaleBits'" +
-          s")) ELSE bc_raw_q * CAST($n AS BIGINT) div CAST($k2 AS BIGINT) " +
-          "END"))
-      .orderBy(col("k"))
   }
 
   /** Driver-side [[betweennessSampled]] for a below-threshold edge
-    * list: the same Lehmer pivot rule, one forward and one backward
-    * σ-BFS per pivot, and the same floored pivot-pair triple terms
+    * list: the same pivot rule, one forward and one backward σ-BFS per
+    * pivot, and the same floored pivot-pair triple terms
     * floor(σ(s,v)·σ(v,t)·scale / σ(s,t)) — BYTE-equal to the
     * distributed pyramids (spec-pinned via driverThreshold = 0),
     * including every loud envelope: σ < 2^20, closure in maxRounds,
     * id bounds, n(n-1) and extrapolation overflow guards. State is
     * O(K·n), exactly the distributed contract.
     */
-  private def betweennessSampledDriver(e0: DataFrame, numSources: Int,
-                                       maxRounds: Int,
-                                       scaleBits: Int): DataFrame = {
-    val spark = e0.sparkSession
+  private def betweennessSampledDriver(small: SmallInput.Collected,
+                                       numSources: Int, maxRounds: Int,
+                                       scale: Long): DataFrame = {
+    val spark = small.input.sparkSession
     import spark.implicits._
-    val scale = 1L << scaleBits
-    val es = e0.as[(Long, Long)].collect()
-    val nodes = es.flatMap(e => Seq(e._1, e._2)).distinct.sorted
-    val n = nodes.length.toLong
-    require(n >= 2, "betweennessSampled: need at least 2 nodes")
-    require(nodes.last < Long.MaxValue / 48271L,
-      "betweennessSampled: node ids too large for the overflow-free " +
-        "Lehmer seed hash")
-    require(nodes.head >= 0L,
-      "betweennessSampled: negative node ids break the cross-engine " +
-        "Lehmer seed hash contract (pmod vs sign-following %); " +
-        "remap ids to non-negative first")
-    val k2 = math.min(numSources.toLong, n)
-    val seeds = nodes.sortBy(k => (k * 48271L % 2147483647L, k))
-      .take(k2.toInt)
-    val fwd = es.groupBy(_._1).map { case (s, xs) => s -> xs.map(_._2) }
-    val bwd = es.groupBy(_._2).map { case (d, xs) => d -> xs.map(_._1) }
-    // level-synchronous σ-BFS (the sigmaBfsFrom semantics: per-level σ
-    // sums over the frontier, σ < 2^20 checked on every NEW node,
-    // non-closure within maxRounds fails loudly)
-    def sigmaBfs(s: Long, adj: Map[Long, Array[Long]])
-        : scala.collection.mutable.HashMap[Long, (Int, Long)] = {
-      val reached = scala.collection.mutable.HashMap(s -> (0, 1L))
-      var frontier = Seq(s -> 1L)
-      var d = 0
-      while (frontier.nonEmpty && d < maxRounds) {
-        d += 1
-        val next = scala.collection.mutable.HashMap.empty[Long, Long]
-        for ((v, sg) <- frontier; w <- adj.getOrElse(v, Array.empty[Long])
-             if !reached.contains(w))
-          next(w) = next.getOrElse(w, 0L) + sg
-        for ((w, sg) <- next) {
-          require(sg < (1L << 20),
-            "betweenness: shortest-path count >= 2^20 would overflow the " +
-              "integer term envelope; reduce the graph or scaleBits")
-          reached(w) = (d, sg)
-        }
-        frontier = next.toSeq
-      }
-      require(frontier.isEmpty,
-        s"betweenness: BFS did not close in $maxRounds rounds (graph " +
-          "diameter exceeds the declared unroll bound)")
-      reached
-    }
-    val spF = seeds.map(s => s -> sigmaBfs(s, fwd)).toMap
-    val spB = seeds.map(t => t -> sigmaBfs(t, bwd)).toMap
+    val g = new DenseGraph(small.rows)
+    val seeds = pivots(g, "betweennessSampled", numSources, minNodes = 2)
+    val spF = seeds.map(sigmaBfsDriver(g.out, _, maxRounds))
+    val spB = seeds.map(sigmaBfsDriver(g.in, _, maxRounds))
+    val (n, k2) = (g.n.toLong, seeds.length.toLong)
     require(n - 1 <= Long.MaxValue / n,
       s"betweennessSampled: n(n-1) overflows Long for n=$n")
     val factNum = n * (n - 1)
     val factDen = k2 * (k2 - 1)
     val rawLim = Long.MaxValue / factNum
-    val bc = scala.collection.mutable.HashMap.empty[Long, Long]
-    for (s <- seeds; t <- seeds; (dstD, sigst) <- spF(s).get(t).toSeq;
-         (v, (d1, sig1)) <- spF(s) if d1 >= 1;
-         (d2, sig2) <- spB(t).get(v).toSeq if d2 >= 1 && d1 + d2 == dstD)
-      bc(v) = bc.getOrElse(v, 0L) + sig1 * sig2 * scale / sigst
-    val rows = nodes.map { k =>
-      val raw = bc.getOrElse(k, 0L)
-      require(raw <= rawLim,
-        s"betweennessSampled: bc_raw_q $raw overflows the " +
+    val bc = new Array[Long](g.n)
+    for (i <- seeds.indices; j <- seeds.indices) {
+      val (d1, sig1) = spF(i)
+      val (d2, sig2) = spB(j)
+      val t = seeds(j)
+      if (d1(t) >= 0)
+        for (v <- 0 until g.n
+             if d1(v) >= 1 && d2(v) >= 1 && d1(v) + d2(v) == d1(t))
+          bc(v) += sig1(v) * sig2(v) * scale / sig1(t)
+    }
+    g.ids.indices.map { i =>
+      require(bc(i) <= rawLim,
+        s"betweennessSampled: bc_raw_q ${bc(i)} overflows the " +
           s"n(n-1)/K(K-1) extrapolation at n=$n; lower scaleBits")
-      (k, raw, raw * factNum / factDen)
-    }.toSeq
-    rows.toDF("k", "bc_raw_q", "bc_est_q").orderBy(col("k"))
+      (g.ids(i), bc(i), bc(i) * factNum / factDen)
+    }.toDF("k", "bc_raw_q", "bc_est_q").orderBy(col("k"))
   }
 
   /** Driver-side [[betweennessSource]] for a below-threshold edge
-    * list: the same Lehmer seed rule, level-synchronous σ-BFS per
-    * seed, and the same per-edge floored δ terms (order-independent,
-    * so this is BYTE-equal to the distributed sweep and the unrolled
-    * oracle), including every loud envelope — σ < 2^20, δ < 2^42,
-    * non-closure, id bounds, the n/K extrapolation limit. State is
-    * O(n + m) per seed — there is no all-pairs table here, so no
-    * maxNodes bound applies.
+    * list: the same pivot rule, level-synchronous σ-BFS per seed, and
+    * the same per-edge floored δ terms (order-independent, so this is
+    * BYTE-equal to the distributed sweep and the unrolled oracle),
+    * including every loud envelope — σ < 2^20, δ < 2^42, non-closure,
+    * id bounds, the n/K extrapolation limit. State is O(n + m) per
+    * seed — there is no all-pairs table here, so no maxNodes bound
+    * applies.
     */
-  private def betweennessSourceDriver(e0: DataFrame, numSources: Int,
-                                      maxRounds: Int,
-                                      scaleBits: Int): DataFrame = {
-    val spark = e0.sparkSession
+  private def betweennessSourceDriver(small: SmallInput.Collected,
+                                      numSources: Int, maxRounds: Int,
+                                      scale: Long): DataFrame = {
+    val spark = small.input.sparkSession
     import spark.implicits._
-    val scale = 1L << scaleBits
-    val es = e0.as[(Long, Long)].collect()
-    require(es.nonEmpty, "betweennessSource: empty graph")
-    val nodes = es.flatMap(e => Seq(e._1, e._2)).distinct.sorted
-    require(nodes.last < Long.MaxValue / 48271L,
-      "betweennessSource: node ids too large for the overflow-free " +
-        "Lehmer seed hash")
-    require(nodes.head >= 0L,
-      "betweennessSource: negative node ids break the cross-engine " +
-        "Lehmer seed hash contract (pmod vs sign-following %); " +
-        "remap ids to non-negative first")
-    val n = nodes.length.toLong
-    val k2 = math.min(numSources.toLong, n)
-    val seeds = nodes.sortBy(k => (k * 48271L % 2147483647L, k))
-      .take(k2.toInt)
-    val adj = es.groupBy(_._1).map { case (s, xs) => s -> xs.map(_._2) }
-    val bc = scala.collection.mutable.HashMap.empty[Long, Long]
+    val g = new DenseGraph(small.rows)
+    val seeds = pivots(g, "betweennessSource", numSources, minNodes = 1)
+    val bc = new Array[Long](g.n)
     for (s <- seeds) {
-      val dist = scala.collection.mutable.HashMap(s -> 0)
-      val sig = scala.collection.mutable.HashMap(s -> 1L)
-      val levels = scala.collection.mutable.Buffer(Seq(s))
-      var frontier = Seq(s)
-      var d = 0
-      while (frontier.nonEmpty && d < maxRounds) {
-        d += 1
-        val newSig = scala.collection.mutable.HashMap.empty[Long, Long]
-        for (v <- frontier; w <- adj.getOrElse(v, Array.empty[Long])
-             if !dist.contains(w))
-          newSig(w) = newSig.getOrElse(w, 0L) + sig(v)
-        for ((w, sg) <- newSig) {
-          require(sg < (1L << 20),
-            "betweenness: shortest-path count >= 2^20 would overflow " +
-              "the integer term envelope; reduce the graph or scaleBits")
-          dist(w) = d; sig(w) = sg
-        }
-        frontier = newSig.keys.toSeq
-        if (frontier.nonEmpty) levels += frontier
-      }
-      require(frontier.isEmpty,
-        s"betweenness: BFS did not close in $maxRounds rounds (graph " +
-          "diameter exceeds the declared unroll bound)")
+      val (dist, sig) = sigmaBfsDriver(g.out, s, maxRounds)
+      val levels = g.ids.indices.filter(dist(_) >= 1).groupBy(dist(_))
       // backward δ, deepest level first; level 0 (v = s) never counts
-      val dq = scala.collection.mutable.HashMap.empty[Long, Long]
-      for (l <- (levels.size - 1) to 1 by -1; v <- levels(l)) {
+      val dq = new Array[Long](g.n)
+      for (l <- levels.keys.toSeq.sorted.reverse; v <- levels(l)) {
         var acc = 0L
-        for (w <- adj.getOrElse(v, Array.empty[Long])
-             if dist.get(w).contains(l + 1))
-          acc += sig(v) * (scale + dq.getOrElse(w, 0L)) / sig(w)
+        for (w <- g.out(v) if dist(w) == l + 1)
+          acc += sig(v) * (scale + dq(w)) / sig(w)
         require(acc < (1L << 42) - scale,
           s"betweennessSource: δq reaches 2^42 at level $l and the " +
             "next level's σ·(2^b + δq) product would overflow — lower " +
             "scaleBits")
         dq(v) = acc
-        bc(v) = bc.getOrElse(v, 0L) + acc
+        bc(v) += acc
       }
     }
+    val (n, k2) = (g.n.toLong, seeds.length.toLong)
     val rawLim = Long.MaxValue / n
-    val rows = nodes.map { k =>
-      val raw = bc.getOrElse(k, 0L)
-      require(raw <= rawLim,
-        s"betweennessSource: bc_raw_q $raw overflows the n/K " +
+    g.ids.indices.map { i =>
+      require(bc(i) <= rawLim,
+        s"betweennessSource: bc_raw_q ${bc(i)} overflows the n/K " +
           s"extrapolation at n=$n; lower scaleBits")
-      (k, raw, raw * n / k2)
-    }.toSeq
-    rows.toDF("k", "bc_raw_q", "bc_est_q").orderBy(col("k"))
+      (g.ids(i), bc(i), bc(i) * n / k2)
+    }.toDF("k", "bc_raw_q", "bc_est_q").orderBy(col("k"))
   }
 
   /** Driver-side [[betweenness]] for a below-threshold edge list: one
-    * BFS per source (queue-based, computing dist and σ), then the same
-    * per-triple floor(σ_sv·σ_vt·scale/σ_st) accumulation — BYTE-equal
-    * to the distributed path and the unrolled oracle, including the
+    * σ-BFS per source, then the same per-triple
+    * floor(σ_sv·σ_vt·scale/σ_st) accumulation — BYTE-equal to the
+    * distributed path and the unrolled oracle, including the
     * maxRounds closure and σ < 2^20 envelope requires.
     */
-  private def betweennessDriver(e0: DataFrame, maxRounds: Int,
-                                maxNodes: Long, scaleBits: Int): DataFrame = {
-    val spark = e0.sparkSession
+  private def betweennessDriver(small: SmallInput.Collected, maxRounds: Int,
+                                maxNodes: Long, scale: Long): DataFrame = {
+    val spark = small.input.sparkSession
     import spark.implicits._
-    val scale = 1L << scaleBits
-    val es = e0.as[(Long, Long)].collect()
-    if (es.isEmpty)
-      return spark.emptyDataFrame
-        .select(lit(0L).as("k"), lit(0L).as("bc_q")).limit(0)
-    val nodes = es.flatMap(e => Seq(e._1, e._2)).distinct.sorted
-    val idx = nodes.zipWithIndex.toMap
-    val n = nodes.length
+    val g = new DenseGraph(small.rows)
     // the distributed path's contract, enforced HERE too: a sparse
     // graph can sit under the edge driverThreshold yet carry ~1M
     // nodes, and the O(n^2) dist/sigma arrays + O(n^3) triple loop
     // below would OOM/hang the driver instead of failing attributably
-    require(n <= maxNodes,
-      s"betweenness: $n nodes exceeds the exact all-pairs bound " +
+    require(g.n <= maxNodes,
+      s"betweenness: ${g.n} nodes exceeds the exact all-pairs bound " +
         s"$maxNodes — run from a source sample (Brandes-Pich) instead")
-    val adj = Array.fill(n)(List.empty[Int])
-    es.foreach { case (s, d) => adj(idx(s)) ::= idx(d) }
-    val dist = Array.ofDim[Int](n, n)
-    val sig = Array.ofDim[Long](n, n)
-    for (s <- 0 until n) {
-      java.util.Arrays.fill(dist(s), -1)
-      dist(s)(s) = 0; sig(s)(s) = 1L
-      var frontier = List(s)
-      var d = 0
-      while (frontier.nonEmpty) {
-        d += 1
-        require(d <= maxRounds,
-          s"betweenness: BFS did not close in $maxRounds rounds (graph " +
-            "diameter exceeds the declared unroll bound)")
-        var next = List.empty[Int]
-        frontier.foreach { v =>
-          adj(v).foreach { w =>
-            if (dist(s)(w) == -1 || dist(s)(w) == d) {
-              if (dist(s)(w) == -1) { dist(s)(w) = d; next ::= w }
-              sig(s)(w) += sig(s)(v)
-              require(sig(s)(w) < (1L << 20),
-                "betweenness: shortest-path count >= 2^20 would overflow " +
-                  "the integer term envelope; reduce the graph or scaleBits")
-            }
-          }
-        }
-        frontier = next
-      }
-    }
-    val bc = Array.fill(n)(0L)
-    for (s <- 0 until n; v <- 0 until n
-         if v != s && dist(s)(v) >= 1;
-         t <- 0 until n
-         if t != v && dist(v)(t) >= 1 && dist(s)(t) >= 0 &&
-           dist(s)(v) + dist(v)(t) == dist(s)(t))
-      bc(v) += sig(s)(v) * sig(v)(t) * scale / sig(s)(t)
-    nodes.indices.map(i => (nodes(i), bc(i))).toDF("k", "bc_q")
+    val sp = Array.tabulate(g.n)(sigmaBfsDriver(g.out, _, maxRounds))
+    val bc = new Array[Long](g.n)
+    for (s <- 0 until g.n; v <- 0 until g.n if sp(s)._1(v) >= 1;
+         t <- 0 until g.n
+         if sp(v)._1(t) >= 1 && sp(s)._1(t) >= 0 &&
+           sp(s)._1(v) + sp(v)._1(t) == sp(s)._1(t))
+      bc(v) += sp(s)._2(v) * sp(v)._2(t) * scale / sp(s)._2(t)
+    g.ids.indices.map(i => (g.ids(i), bc(i))).toDF("k", "bc_q")
       .orderBy(col("k"))
   }
 
@@ -1768,226 +1650,204 @@ object Graphs {
     *
     * Output: (k, scc_id = min node id in the component, scc_size).
     */
-  def scc(edges: DataFrame, maxPhases: Int = 10,
-          maxIters: Int = 40, driverThreshold: Long = 1L << 20): DataFrame = {
+  def scc(edges: DataFrame, maxPhases: Int = 10, maxIters: Int = 40,
+          driverThreshold: Long = SmallInput.DefaultThreshold): DataFrame = {
     require(maxPhases >= 1 && maxIters >= 1, "maxPhases, maxIters >= 1")
-    val eObs = org.apache.spark.sql.Observation()
-    val e0 = edges.filter(col("src") =!= col("dst"))
-      .select(col("src").cast("long").as("src"),
-        col("dst").cast("long").as("dst"))
-      .distinct()
-      .observe(eObs, count(lit(1)).as("n")).cpGuard()
-    // An edge list at or below broadcast scale (1M edges = 16 MB of
-    // longs) doesn't need iterative shuffle rounds: each distributed
-    // round costs whole jobs of fixed overhead regardless of size —
-    // the dupClusters driver-threshold contract. Same (k, scc_id =
-    // min member, scc_size) answer from one linear-time driver Tarjan
-    // pass; the phase loop below remains the shape for graphs that
-    // genuinely don't fit. g17's top-150-edge backbone is CONSTANT
-    //-sized at any corpus scale, so this is its scale-correct plan.
-    if (eObs.get("n").asInstanceOf[Long] <= driverThreshold)
-      return sccDriver(e0)
-    val allNodes = e0.select(col("src").as("k"))
-      .unionAll(e0.select(col("dst").as("k"))).distinct().cpGuard()
-    var remaining = allNodes
-    var nRemaining = remaining.count()
-    // assignment pieces are filters of already-checkpointed frames, so
-    // deferring the union to the end costs ZERO extra jobs (the old
-    // per-call union-and-checkpoint paid one job per trim round)
-    val assignedParts = scala.collection.mutable.Buffer.empty[DataFrame]
-    def accumulate(a: DataFrame): Unit = { assignedParts += a; () }
-    var phase = 0
-    // (f, b) cells of the previous phase's unassigned nodes — the FW-BW
-    // refinement: cross-cell edges are never intra-SCC
-    var cells: DataFrame = null
-    while (phase < maxPhases && nRemaining > 0) {
-      phase += 1
-      // edges among remaining nodes, restricted to same-(f,b)-cell
-      // pairs once a phase has run
-      var re = e0
-        .join(remaining.select(col("k").as("src")), Seq("src"), "left_semi")
-        .join(remaining.select(col("k").as("dst")), Seq("dst"), "left_semi")
-        .cpGuard()
-      if (cells != null) {
-        re = re
-          .join(cells.select(col("k").as("src"), col("cf").as("sf"),
-            col("cb").as("sb")), Seq("src"))
-          .join(cells.select(col("k").as("dst"), col("cf").as("df"),
-            col("cb").as("db")), Seq("dst"))
-          .filter(col("sf") === col("df") && col("sb") === col("db"))
-          .select(col("src"), col("dst")).cpGuard()
-      }
-      // (1) TRIM: peel zero-in/zero-out nodes as singleton SCCs — ONE
-      // observed checkpoint job per round (keep/peel split rides as a
-      // flag column; the g17 iteration cost is JOB latency, not data)
-      var trimming = true
-      var it = 0
-      while (trimming && it < maxIters) {
-        it += 1
-        val pObs = org.apache.spark.sql.Observation()
-        val marked = remaining
-          .join(re.select(col("dst").as("k")).distinct()
-            .withColumn("__hi", lit(true)), Seq("k"), "left_outer")
-          .join(re.select(col("src").as("k")).distinct()
-            .withColumn("__ho", lit(true)), Seq("k"), "left_outer")
-          .select(col("k"),
-            (col("__hi").isNotNull && col("__ho").isNotNull).as("__keep"))
-          .observe(pObs, count(when(!col("__keep"), lit(1))).as("n"))
+    // An edge list at or below the threshold doesn't need iterative
+    // shuffle rounds: each distributed round costs whole jobs of fixed
+    // overhead regardless of size. Same (k, scc_id = min member,
+    // scc_size) answer from one linear-time driver Tarjan pass; the
+    // phase loop below remains the shape for graphs that genuinely
+    // don't fit. g17's top-150-edge backbone is CONSTANT-sized at any
+    // corpus scale, so the driver pass is its scale-correct plan.
+    SmallInput.gate(simpleEdges(edges), driverThreshold)(sccDriver) { (e0, _) =>
+      val allNodes = e0.select(col("src").as("k"))
+        .unionAll(e0.select(col("dst").as("k"))).distinct().cpGuard()
+      var remaining = allNodes
+      var nRemaining = remaining.count()
+      // assignment pieces are filters of already-checkpointed frames, so
+      // deferring the union to the end costs ZERO extra jobs (the old
+      // per-call union-and-checkpoint paid one job per trim round)
+      val assignedParts = scala.collection.mutable.Buffer.empty[DataFrame]
+      def accumulate(a: DataFrame): Unit = { assignedParts += a; () }
+      var phase = 0
+      // (f, b) cells of the previous phase's unassigned nodes — the FW-BW
+      // refinement: cross-cell edges are never intra-SCC
+      var cells: DataFrame = null
+      while (phase < maxPhases && nRemaining > 0) {
+        phase += 1
+        // edges among remaining nodes, restricted to same-(f,b)-cell
+        // pairs once a phase has run
+        var re = e0
+          .join(remaining.select(col("k").as("src")), Seq("src"), "left_semi")
+          .join(remaining.select(col("k").as("dst")), Seq("dst"), "left_semi")
           .cpGuard()
-        val nPeeled = pObs.get("n").asInstanceOf[Long]
-        if (nPeeled == 0) trimming = false
-        else {
-          accumulate(marked.filter(!col("__keep"))
-            .select(col("k"), col("k").as("scc_id")))
-          val keep = marked.filter(col("__keep")).select(col("k"))
-          remaining = keep
-          nRemaining -= nPeeled
+        if (cells != null) {
           re = re
-            .join(keep.select(col("k").as("src")), Seq("src"), "left_semi")
-            .join(keep.select(col("k").as("dst")), Seq("dst"), "left_semi")
+            .join(cells.select(col("k").as("src"), col("cf").as("sf"),
+              col("cb").as("sb")), Seq("src"))
+            .join(cells.select(col("k").as("dst"), col("cf").as("df"),
+              col("cb").as("db")), Seq("dst"))
+            .filter(col("sf") === col("df") && col("sb") === col("db"))
+            .select(col("src"), col("dst")).cpGuard()
+        }
+        // (1) TRIM: peel zero-in/zero-out nodes as singleton SCCs — ONE
+        // observed checkpoint job per round (keep/peel split rides as a
+        // flag column; the g17 iteration cost is JOB latency, not data)
+        var trimming = true
+        var it = 0
+        while (trimming && it < maxIters) {
+          it += 1
+          val pObs = org.apache.spark.sql.Observation()
+          val marked = remaining
+            .join(re.select(col("dst").as("k")).distinct()
+              .withColumn("__hi", lit(true)), Seq("k"), "left_outer")
+            .join(re.select(col("src").as("k")).distinct()
+              .withColumn("__ho", lit(true)), Seq("k"), "left_outer")
+            .select(col("k"),
+              (col("__hi").isNotNull && col("__ho").isNotNull).as("__keep"))
+            .observe(pObs, count(when(!col("__keep"), lit(1))).as("n"))
             .cpGuard()
+          val nPeeled = pObs.get("n").asInstanceOf[Long]
+          if (nPeeled == 0) trimming = false
+          else {
+            accumulate(marked.filter(!col("__keep"))
+              .select(col("k"), col("k").as("scc_id")))
+            val keep = marked.filter(col("__keep")).select(col("k"))
+            remaining = keep
+            nRemaining -= nPeeled
+            re = re
+              .join(keep.select(col("k").as("src")), Seq("src"), "left_semi")
+              .join(keep.select(col("k").as("dst")), Seq("dst"), "left_semi")
+              .cpGuard()
+          }
+        }
+        require(!trimming, s"scc: trim did not converge in $maxIters rounds")
+        if (nRemaining > 0) {
+          // (2) FUSED fixpoint: forward rows (fw=true) carry f(u) = min
+          // id reaching u, reversed rows (fw=false) carry b(u) = min id
+          // u reaches — one direction-tagged join + groupBy per step.
+          // dirEdges and the initial labels are narrow derivations of
+          // already-checkpointed frames: no extra materialization jobs
+          val dirEdges = re.select(lit(true).as("fw"), col("src"), col("dst"))
+            .unionAll(re.select(lit(false).as("fw"),
+              col("dst").as("src"), col("src").as("dst")))
+          var lab = remaining
+            .withColumn("fw", explode(array(lit(true), lit(false))))
+            .select(col("fw"), col("k"), col("k").as("c"))
+          def stepOnce(df: DataFrame): DataFrame = {
+            val prop = dirEdges
+              .join(df.select(col("fw"), col("k").as("src"), col("c")),
+                Seq("fw", "src"))
+              .groupBy(col("fw"), col("dst").as("k")).agg(min(col("c")).as("pc"))
+            df.join(prop, Seq("fw", "k"), "left_outer")
+              .select(col("fw"), col("k"),
+                least(col("c"), coalesce(col("pc"), col("c"))).as("c"),
+                (col("pc").isNotNull && col("pc") < col("c")).as("chg"))
+          }
+          // one observed checkpoint job per step (unrolling several steps
+          // into one job was MEASURED SLOWER at sf0.1 — the floor is
+          // shuffle-stage latency, which unrolling does not reduce)
+          var changed = true
+          it = 0
+          while (changed && it < maxIters) {
+            it += 1
+            val fObs = org.apache.spark.sql.Observation()
+            val nl = stepOnce(lab).observe(fObs,
+              count(when(col("chg"), lit(1))).as("nchg")).cpGuard()
+            changed = fObs.get("nchg").asInstanceOf[Long] > 0L
+            lab = nl.select(col("fw"), col("k"), col("c"))
+          }
+          require(!changed,
+            s"scc: fused labeling did not converge in $maxIters rounds")
+          // (3)+(4) assign complete components (f = b), keep the (f, b)
+          // cells of the rest for the next phase's edge refinement; the
+          // unassigned count rides on the cells checkpoint job
+          val fb = lab.groupBy(col("k")).agg(
+            min(when(col("fw"), col("c"))).as("cf"),
+            min(when(!col("fw"), col("c"))).as("cb"))
+          val rObs = org.apache.spark.sql.Observation()
+          val fbCp = fb.observe(rObs,
+            count(when(col("cf") =!= col("cb"), lit(1))).as("n")).cpGuard()
+          accumulate(fbCp.filter(col("cf") === col("cb"))
+            .select(col("k"), col("cf").as("scc_id")))
+          nRemaining = rObs.get("n").asInstanceOf[Long]
+          cells = fbCp.filter(col("cf") =!= col("cb"))
+          remaining = cells.select(col("k"))
         }
       }
-      require(!trimming, s"scc: trim did not converge in $maxIters rounds")
-      if (nRemaining > 0) {
-        // (2) FUSED fixpoint: forward rows (fw=true) carry f(u) = min
-        // id reaching u, reversed rows (fw=false) carry b(u) = min id
-        // u reaches — one direction-tagged join + groupBy per step.
-        // dirEdges and the initial labels are narrow derivations of
-        // already-checkpointed frames: no extra materialization jobs
-        val dirEdges = re.select(lit(true).as("fw"), col("src"), col("dst"))
-          .unionAll(re.select(lit(false).as("fw"),
-            col("dst").as("src"), col("src").as("dst")))
-        var lab = remaining
-          .withColumn("fw", explode(array(lit(true), lit(false))))
-          .select(col("fw"), col("k"), col("k").as("c"))
-        def stepOnce(df: DataFrame): DataFrame = {
-          val prop = dirEdges
-            .join(df.select(col("fw"), col("k").as("src"), col("c")),
-              Seq("fw", "src"))
-            .groupBy(col("fw"), col("dst").as("k")).agg(min(col("c")).as("pc"))
-          df.join(prop, Seq("fw", "k"), "left_outer")
-            .select(col("fw"), col("k"),
-              least(col("c"), coalesce(col("pc"), col("c"))).as("c"),
-              (col("pc").isNotNull && col("pc") < col("c")).as("chg"))
-        }
-        // one observed checkpoint job per step (unrolling several steps
-        // into one job was MEASURED SLOWER at sf0.1 — the floor is
-        // shuffle-stage latency, which unrolling does not reduce)
-        var changed = true
-        it = 0
-        while (changed && it < maxIters) {
-          it += 1
-          val fObs = org.apache.spark.sql.Observation()
-          val nl = stepOnce(lab).observe(fObs,
-            count(when(col("chg"), lit(1))).as("nchg")).cpGuard()
-          changed = fObs.get("nchg").asInstanceOf[Long] > 0L
-          lab = nl.select(col("fw"), col("k"), col("c"))
-        }
-        require(!changed,
-          s"scc: fused labeling did not converge in $maxIters rounds")
-        // (3)+(4) assign complete components (f = b), keep the (f, b)
-        // cells of the rest for the next phase's edge refinement; the
-        // unassigned count rides on the cells checkpoint job
-        val fb = lab.groupBy(col("k")).agg(
-          min(when(col("fw"), col("c"))).as("cf"),
-          min(when(!col("fw"), col("c"))).as("cb"))
-        val rObs = org.apache.spark.sql.Observation()
-        val fbCp = fb.observe(rObs,
-          count(when(col("cf") =!= col("cb"), lit(1))).as("n")).cpGuard()
-        accumulate(fbCp.filter(col("cf") === col("cb"))
-          .select(col("k"), col("cf").as("scc_id")))
-        nRemaining = rObs.get("n").asInstanceOf[Long]
-        cells = fbCp.filter(col("cf") =!= col("cb"))
-        remaining = cells.select(col("k"))
+      require(nRemaining == 0,
+        s"scc: $nRemaining nodes unassigned after $maxPhases phases")
+      if (assignedParts.isEmpty) // no edges at all -> no nodes, empty result
+        e0.sparkSession.emptyDataFrame
+          .select(lit(0L).as("k"), lit(0L).as("scc_id"),
+            lit(0L).as("scc_size")).limit(0)
+      else {
+        val assignedAcc = assignedParts.reduce(_ unionAll _)
+        val sizes = assignedAcc.groupBy(col("scc_id"))
+          .agg(count(lit(1)).as("scc_size"))
+        assignedAcc.join(sizes, Seq("scc_id"))
+          .select(col("k"), col("scc_id"), col("scc_size"))
+          .orderBy(col("k"))
       }
     }
-    require(nRemaining == 0,
-      s"scc: $nRemaining nodes unassigned after $maxPhases phases")
-    if (assignedParts.isEmpty) // no edges at all -> no nodes, empty result
-      return edges.sparkSession.emptyDataFrame
-        .select(lit(0L).as("k"), lit(0L).as("scc_id"),
-          lit(0L).as("scc_size")).limit(0)
-    val assignedAcc = assignedParts.reduce(_ unionAll _)
-    val sizes = assignedAcc.groupBy(col("scc_id"))
-      .agg(count(lit(1)).as("scc_size"))
-    assignedAcc.join(sizes, Seq("scc_id"))
-      .select(col("k"), col("scc_id"), col("scc_size"))
-      .orderBy(col("k"))
   }
 
   /** Driver-side SCC for a below-threshold edge list: one iterative
     * (explicit-stack) Tarjan pass — linear in nodes+edges, no
     * recursion, so a million-edge graph can't overflow the JVM stack.
-    * `e0` must already be self-loop-free and distinct (the [[scc]]
-    * normalization). Output contract identical to the distributed
-    * phase loop: (k, scc_id = min node id in the component, scc_size).
+    * Output contract identical to the distributed phase loop:
+    * (k, scc_id = min node id in the component, scc_size).
     */
-  private def sccDriver(e0: DataFrame): DataFrame = {
-    val spark = e0.sparkSession
+  private def sccDriver(small: SmallInput.Collected): DataFrame = {
+    val spark = small.input.sparkSession
     import spark.implicits._
-    val es = e0.as[(Long, Long)].collect()
-    if (es.isEmpty)
-      return spark.emptyDataFrame
-        .select(lit(0L).as("k"), lit(0L).as("scc_id"),
-          lit(0L).as("scc_size")).limit(0)
-    val adj = scala.collection.mutable.HashMap
-      .empty[Long, scala.collection.mutable.ArrayBuffer[Long]]
-    val nodes = scala.collection.mutable.TreeSet.empty[Long] // sorted: determinism
-    es.foreach { case (s, d) =>
-      adj.getOrElseUpdate(s, scala.collection.mutable.ArrayBuffer.empty) += d
-      nodes += s; nodes += d
-    }
-    val index = scala.collection.mutable.HashMap.empty[Long, Int]
-    val low = scala.collection.mutable.HashMap.empty[Long, Int]
-    val onStk = scala.collection.mutable.HashSet.empty[Long]
-    val stk = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val compOf = scala.collection.mutable.HashMap.empty[Long, Long]
+    val g = new DenseGraph(small.rows)
+    val adj = g.out.map(_.toArray)
+    val index = Array.fill(g.n)(-1)
+    val low = new Array[Int](g.n)
+    val onStk = new Array[Boolean](g.n)
+    val stk = scala.collection.mutable.ArrayBuffer.empty[Int]
+    val comp = new Array[Long](g.n)
     var counter = 0
-    val empty = scala.collection.mutable.ArrayBuffer.empty[Long]
-    nodes.foreach { root =>
-      if (!index.contains(root)) {
-        // work frames: (node, next-neighbor offset to resume at)
-        val work = scala.collection.mutable.ArrayBuffer((root, 0))
-        while (work.nonEmpty) {
-          val (v, pi) = work.remove(work.length - 1)
-          if (pi == 0) {
-            index(v) = counter; low(v) = counter; counter += 1
-            stk += v; onStk += v
+    for (root <- 0 until g.n if index(root) < 0) {
+      // work frames: (node, next-neighbor offset to resume at)
+      val work = scala.collection.mutable.ArrayBuffer((root, 0))
+      while (work.nonEmpty) {
+        val (v, pi) = work.remove(work.length - 1)
+        if (pi == 0) {
+          index(v) = counter; low(v) = counter; counter += 1
+          stk += v; onStk(v) = true
+        }
+        var i = pi
+        var descended = false
+        while (i < adj(v).length && !descended) {
+          val w = adj(v)(i)
+          if (index(w) < 0) {
+            work += ((v, i + 1)); work += ((w, 0)); descended = true
+          } else if (onStk(w)) low(v) = math.min(low(v), index(w))
+          i += 1
+        }
+        if (!descended) {
+          if (low(v) == index(v)) {
+            // pop the component; label with its min node id (ids are
+            // ascending, so the min index)
+            val j = stk.lastIndexOf(v)
+            val members = stk.slice(j, stk.length)
+            stk.remove(j, stk.length - j)
+            val cid = g.ids(members.min)
+            members.foreach { m => onStk(m) = false; comp(m) = cid }
           }
-          val nbrs = adj.getOrElse(v, empty)
-          var i = pi
-          var descended = false
-          while (i < nbrs.length && !descended) {
-            val w = nbrs(i)
-            if (!index.contains(w)) {
-              work += ((v, i + 1)); work += ((w, 0)); descended = true
-            } else if (onStk(w)) low(v) = math.min(low(v), index(w))
-            i += 1
-          }
-          if (!descended) {
-            if (low(v) == index(v)) {
-              // pop the component; label with its min node id
-              var j = stk.length - 1
-              while (stk(j) != v) j -= 1
-              val members = stk.slice(j, stk.length)
-              stk.remove(j, stk.length - j)
-              val cid = members.min
-              members.foreach { m => onStk -= m; compOf(m) = cid }
-            }
-            if (work.nonEmpty) {
-              val (p, _) = work.last
-              low(p) = math.min(low(p), low(v))
-            }
+          if (work.nonEmpty) {
+            val (p, _) = work.last
+            low(p) = math.min(low(p), low(v))
           }
         }
       }
     }
-    val sizes = compOf.values.groupBy(identity).map { case (c, xs) =>
-      c -> xs.size.toLong
-    }
-    compOf.toSeq.map { case (k, c) => (k, c, sizes(c)) }
-      .sortBy(_._1).toDF("k", "scc_id", "scc_size")
+    val sizes = comp.groupMapReduce(identity)(_ => 1L)(_ + _)
+    g.ids.indices.map(i => (g.ids(i), comp(i), sizes(comp(i))))
+      .toDF("k", "scc_id", "scc_size")
   }
 
   /** Weighted single-source-set shortest paths — synchronous

@@ -50,6 +50,78 @@ class GraphOpsSpec extends SparkSpec {
     assert(sortedRows(Graphs.pageRankRefresh(edges, start, refreshIters = 2)) ==
       sortedRows(Graphs.pageRankRefresh(edges, start, refreshIters = 2,
         driverThreshold = 0)))
+
+    // INT src beside BIGINT dst: both paths key nodes by the
+    // union-coerced BIGINT, so the driver pass must equal the
+    // all-BIGINT distributed sweep
+    val mixed = edges.select(col("src").cast("int").as("src"), col("dst"),
+      col("w"))
+    assert(rows(Graphs.pageRank(mixed, iters = 3)) ==
+      rows(Graphs.pageRank(edges, iters = 3, driverThreshold = 0)))
+    assert(rows(Graphs.hits(mixed, iters = 2)) ==
+      rows(Graphs.hits(edges, iters = 2, driverThreshold = 0)))
+    assert(rows(Graphs.personalizedPageRank(mixed, seeds, iters = 3)) ==
+      rows(Graphs.personalizedPageRank(edges, seeds, iters = 3,
+        driverThreshold = 0)))
+    assert(sortedRows(Graphs.pageRankRefresh(mixed, start, refreshIters = 2)) ==
+      sortedRows(Graphs.pageRankRefresh(edges, start, refreshIters = 2,
+        driverThreshold = 0)))
+
+    // an over-envelope weight on a null-src edge: it carries no rank
+    // mass, but both paths must refuse the input alike
+    val nullSrc = edges.union(
+      Seq((Option.empty[Long], 2L, 1L << 22)).toDF("src", "dst", "w"))
+    def refusal(body: => Any): String =
+      intercept[IllegalArgumentException](body).getMessage
+    for (thr <- Seq(Long.MaxValue, 0L)) {
+      assert(refusal(Graphs.pageRank(nullSrc, iters = 1,
+        driverThreshold = thr)).contains("2^22"))
+      assert(refusal(Graphs.personalizedPageRank(nullSrc, seeds, iters = 1,
+        driverThreshold = thr)).contains("2^22"))
+      assert(refusal(Graphs.pageRankRefresh(nullSrc, start, refreshIters = 1,
+        driverThreshold = thr)).contains("2^22"))
+      assert(refusal(Graphs.hits(nullSrc, iters = 1,
+        driverThreshold = thr)).contains("envelope"))
+    }
+    // in-envelope edges with a null endpoint: the distributed joins move
+    // no mass along them, and the driver pass must not either
+    val nullEnds = edges.union(Seq((Option.empty[Long], Option(2L), 1L),
+      (Option(3L), Option.empty[Long], 2L)).toDF("src", "dst", "w"))
+    assert(rows(Graphs.pageRank(nullEnds, iters = 3)) ==
+      rows(Graphs.pageRank(nullEnds, iters = 3, driverThreshold = 0)))
+    assert(rows(Graphs.hits(nullEnds, iters = 2)) ==
+      rows(Graphs.hits(nullEnds, iters = 2, driverThreshold = 0)))
+    assert(rows(Graphs.personalizedPageRank(nullEnds, seeds, iters = 3)) ==
+      rows(Graphs.personalizedPageRank(nullEnds, seeds, iters = 3,
+        driverThreshold = 0)))
+    assert(sortedRows(Graphs.pageRankRefresh(nullEnds, start, refreshIters = 2)) ==
+      sortedRows(Graphs.pageRankRefresh(nullEnds, start, refreshIters = 2,
+        driverThreshold = 0)))
+
+    // the six edges fit driverThreshold = 6, but a 7-row rank snapshot
+    // or seed set does not: the gate must take the distributed path
+    // (its result reads checkpoints, not a driver-built local relation)
+    // and still equal the driverThreshold = 0 sweep
+    def onDriver(df: org.apache.spark.sql.DataFrame): Boolean =
+      df.queryExecution.analyzed.collectLeaves().forall(
+        _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    val bigStart = (1L to 7L).map(k => (k, k * 1000L)).toDF("k", "r")
+    val bigSeeds = (1L to 7L).toDF("k")
+    assert(onDriver(Graphs.pageRankRefresh(edges, start, refreshIters = 2,
+      driverThreshold = 6)))
+    val refreshBig = Graphs.pageRankRefresh(edges, bigStart, refreshIters = 2,
+      driverThreshold = 6)
+    assert(!onDriver(refreshBig))
+    assert(sortedRows(refreshBig) ==
+      sortedRows(Graphs.pageRankRefresh(edges, bigStart, refreshIters = 2,
+        driverThreshold = 0)))
+    assert(onDriver(Graphs.personalizedPageRank(edges, seeds, iters = 3,
+      driverThreshold = 6)))
+    val pprBig = Graphs.personalizedPageRank(edges, bigSeeds, iters = 3,
+      driverThreshold = 6)
+    assert(!onDriver(pprBig))
+    assert(rows(pprBig) == rows(Graphs.personalizedPageRank(edges, bigSeeds,
+      iters = 3, driverThreshold = 0)))
   }
 
   test("pageRank: rank mass is bounded by scale and deterministic across runs") {
