@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 
@@ -13,15 +13,27 @@ import graft.publish.PublishJob
 /** Parity against the REAL shipped artifact (/root/reference/
   * matchwise_data.csv, 3037 matches 2005-2025) and source/sink
   * round-trips the reference relies on (SURVEY S6/K5/K8).
+  *
+  * The shipped artifact belongs to the read-only reference snapshot,
+  * which lives outside the repository. The two tests that read it run
+  * only where that file exists and are canceled elsewhere; every other
+  * test here runs on the in-repo fixtures.
   */
 class ParitySpec extends SparkSpec {
 
+  val shippedPath = "/root/reference/matchwise_data.csv"
+
   lazy val shipped = spark.read
     .option("header", "true").option("inferSchema", "true")
-    .csv("/root/reference/matchwise_data.csv")
+    .csv(shippedPath)
     .cache()
 
+  private def assumeShipped(): Unit =
+    assume(Files.exists(Paths.get(shippedPath)),
+      s"shipped artifact $shippedPath is absent (reference snapshot not mounted)")
+
   test("shipped artifact invariants hold (SURVEY §5.2)") {
+    assumeShipped()
     assert(shipped.count() == 3037)
     assert(shipped.columns.toSeq == Cricsheet.matchwiseColumns)
 
@@ -44,6 +56,7 @@ class ParitySpec extends SparkSpec {
   }
 
   test("A-workload runs on the real 3037-match table") {
+    assumeShipped()
     val years = CricketQueries.matchesPerYear(shipped).collect()
     assert(years.head.getInt(0) == 2005 && years.last.getInt(0) == 2025)
     assert(years.map(_.getLong(1)).sum == 3037)
@@ -77,13 +90,16 @@ class ParitySpec extends SparkSpec {
   test("run listener observes job outcomes (K8 hook)") {
     val seen = scala.collection.mutable.Buffer.empty[String]
     val l = RunListener.attach(spark, m => seen += m)
-    shipped.limit(5).count()
-    // listener bus is async; poll briefly for delivery
+    Cricsheet.read(spark, fixturesDir).limit(5).count()
+    // listener bus is async; poll briefly for delivery. RunListener.record
+    // appends to both buffers under the listener's lock on the bus thread,
+    // so read them under that lock too.
+    def events = l.synchronized(l.events.toList)
     val deadline = System.currentTimeMillis() + 10000
-    while (!l.events.exists(_.contains("finished: JobSucceeded")) &&
+    while (!events.exists(_.contains("finished: JobSucceeded")) &&
            System.currentTimeMillis() < deadline) Thread.sleep(50)
-    assert(l.events.exists(_.contains("finished: JobSucceeded")))
-    assert(seen.nonEmpty)
+    assert(events.exists(_.contains("finished: JobSucceeded")))
+    assert(l.synchronized(seen.nonEmpty))
     spark.sparkContext.removeSparkListener(l)
   }
 
