@@ -1,18 +1,15 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
-
-import scala.collection.mutable
 
 /** Dev-only per-BATCH job profiler for the streaming operators:
   * `runMain graft.StreamProfile [sfDir]` seeds each operator's state
   * with a batch-0 call, then profiles a representative warm batch
   * (batch 1) — every Spark job's duration and count for ONE
   * processBatch step, the number a per-batch latency budget actually
-  * pays. Mirrors [[JobProfile]] (which profiles registered queries;
-  * streaming steps are not in the registry). Measurement tooling only;
-  * never on any query path.
+  * pays, through [[JobProfile.profiled]] (JobProfile profiles
+  * registered queries; streaming steps are not in the registry).
+  * Measurement tooling only; never on any query path.
   */
 object StreamProfile {
   def main(args: Array[String]): Unit = {
@@ -20,30 +17,6 @@ object StreamProfile {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = graft.core.Sessions.local(cpus.toInt)
     val tmp = java.nio.file.Files.createTempDirectory("streamprofile").toString
-
-    def profiled(name: String)(body: => Unit): Unit = {
-      val starts = mutable.Map[Int, Long]()
-      val rows = mutable.ArrayBuffer[(Int, Long)]()
-      val listener = new SparkListener {
-        override def onJobStart(js: SparkListenerJobStart): Unit =
-          starts.synchronized { starts(js.jobId) = js.time }
-        override def onJobEnd(je: SparkListenerJobEnd): Unit =
-          starts.synchronized {
-            starts.remove(je.jobId).foreach(t0 => rows += ((je.jobId, je.time - t0)))
-          }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      val t0 = System.nanoTime()
-      body
-      val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300) // drain the async bus BEFORE removal
-      spark.sparkContext.removeSparkListener(listener)
-      println(f"== $name%s: wall $wall%.2f s, ${rows.size}%d jobs ==")
-      rows.sortBy(_._1).foreach { case (id, ms) =>
-        println(f"  job $id%4d  ${ms / 1000.0}%6.2f s")
-      }
-      println(f"  (sum of job times ${rows.map(_._2).sum / 1000.0}%.2f s)")
-    }
 
     val embs = graft.core.Tables.load(spark, sfDir, "embeddings")
     val ev = graft.core.Tables.load(spark, sfDir, "events")
@@ -53,7 +26,7 @@ object StreamProfile {
     graft.streaming.StreamSimilarity.processBatch(spark,
       embs.filter(col("vec_id") % 2 === 0), 0L,
       s"$tmp/sim_state", s"$tmp/sim_out", nPlanes = 8, threshold = 0.9)
-    profiled("StreamSimilarity.processBatch(warm)") {
+    JobProfile.profiled(spark, "StreamSimilarity.processBatch(warm)") {
       graft.streaming.StreamSimilarity.processBatch(spark,
         embs.filter(col("vec_id") % 2 === 1), 1L,
         s"$tmp/sim_state", s"$tmp/sim_out", nPlanes = 8, threshold = 0.9)
@@ -63,7 +36,7 @@ object StreamProfile {
     val users = ev.select(col("event_id"), col("user_id"))
     graft.streaming.StreamSketch.processBatch(spark,
       users.filter(col("event_id") % 2 === 0), 0L, s"$tmp/sk_state", p = 8)
-    profiled("StreamSketch.processBatch(warm)") {
+    JobProfile.profiled(spark, "StreamSketch.processBatch(warm)") {
       graft.streaming.StreamSketch.processBatch(spark,
         users.filter(col("event_id") % 2 === 1), 1L, s"$tmp/sk_state", p = 8)
     }
@@ -78,7 +51,7 @@ object StreamProfile {
     graft.streaming.StreamPageRank.processBatch(spark,
       edges.filter(col("src") % 2 === 0), 0L, "graft_streamprofile_pr",
       s"$tmp/pr_state", refreshIters = 2, buckets = 8)
-    profiled("StreamPageRank.processBatch(warm)") {
+    JobProfile.profiled(spark, "StreamPageRank.processBatch(warm)") {
       graft.streaming.StreamPageRank.processBatch(spark,
         edges.filter(col("src") % 2 === 1), 1L, "graft_streamprofile_pr",
         s"$tmp/pr_state", refreshIters = 2, buckets = 8)

@@ -1,6 +1,6 @@
 package graft.model
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -87,11 +87,17 @@ object Cricsheet {
     * One input file = one Spark partition split, so per-file parallelism
     * matches the reference's per-file Lambda fan-out for free.
     */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    // ANSI mode: cast('') throws, so a non-numeric filename must map to
-    // null match_id explicitly rather than through a failed cast
-    val idStr = regexp_extract(input_file_name(), "(\\d+)\\.json", 1)
+  def read(spark: SparkSession, path: String): DataFrame =
     spark.read.schema(schema).option("multiLine", "true").json(path)
-      .withColumn("match_id", when(idStr =!= "", idStr.cast("int")))
+      .withColumn("match_id", matchId(input_file_name()))
+
+  /** match_id from a file or entry name: the digits before `.json`, or
+    * null when there are none. ANSI mode makes cast('') throw, so a
+    * non-numeric name must map to null explicitly rather than through
+    * a failed cast.
+    */
+  def matchId(name: Column): Column = {
+    val idStr = regexp_extract(name, "(\\d+)\\.json", 1)
+    when(idStr =!= "", idStr.cast("int"))
   }
 }

@@ -20,8 +20,10 @@ object PublishJob {
     * (P3/P4).
     */
   def buildMatchwise(extracted: DataFrame): DataFrame = {
-    // primary-key semantics of the Mongo _id (K2): last-write-wins dedup
-    // on match_id instead of the reference's crash-on-duplicate insert
+    // primary-key semantics of the Mongo _id (K2): one row per match_id
+    // instead of the reference's crash-on-duplicate insert. Which copy
+    // survives is unspecified — dropDuplicates keeps whichever row its
+    // aggregate meets first; ROADMAP direction 1 defines the rule
     extracted.dropDuplicates("match_id")
       .withColumn("match_number",
         row_number().over(Window.orderBy(col("date"), col("match_id"))))

@@ -1,186 +1,134 @@
 package graft.sources
 
-import java.io.ByteArrayInputStream
+import java.io.{BufferedInputStream, InputStream}
+import java.nio.charset.StandardCharsets
 import java.util.zip.ZipInputStream
 
+import scala.util.Try
 import scala.util.control.NonFatal
 
+import org.apache.hadoop.fs.Path
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.model.Cricsheet
 
 /** Distributed zip expansion (SURVEY S1/S2): the reference downloads
   * the Cricsheet archive and extracts it on Lambda local disk; here
-  * each zip is one `binaryFile` row and its entries are expanded
-  * per-partition in executor memory — no local-disk staging, and many
-  * archives expand in parallel. With [[readEntries]] a whole archive
-  * must fit in executor memory (the Cricsheet zip is tens of MB);
-  * [[readEntriesStreamed]] lifts that bound to a single ENTRY by
-  * streaming the archive off the filesystem.
+  * Spark's `binaryFile` source lists the archives (one row each) and
+  * every archive is streamed off its filesystem on an executor and
+  * decoded one entry at a time — no local-disk staging, no archive-sized
+  * byte array, and many archives expand in parallel. Peak memory per
+  * task is a single decompressed ENTRY, whatever the archive's size.
   */
 object ZipSource {
 
-  /** (zip_path, entry, text) for every file entry matching `suffix`. */
+  private type Entry = (String, String, String, String)
+
+  /** (zip_path, entry, text) for every file entry matching `suffix`;
+    * corrupt archives keep their salvaged entries, markers dropped (the
+    * engine's malformed-input contract — null/absent rows, never job
+    * failure).
+    */
   def readEntries(spark: SparkSession, path: String,
                   suffix: String = ".json"): DataFrame =
-    expandEntries(spark.read.format("binaryFile").load(path), suffix)
+    expandEntriesWithErrors(spark.read.format("binaryFile").load(path), suffix)
+      .filter(col("zip_error").isNull)
+      .drop("zip_error")
 
-  /** Expand a (path, content) DataFrame of zip payloads into
-    * (zip_path, entry, text, zip_error) — works on a batch binaryFile
-    * scan and equally on a streaming micro-batch (StreamIngest.runZip),
-    * which is what keeps the zip→publish chain a single code path in
-    * both modes.
+  /** Expand a `binaryFile` frame of zip archives into
+    * (zip_path, entry, text, zip_error). Only its `path` column is
+    * read — each archive is opened through its Hadoop filesystem on
+    * the executor, so the scan never loads `content` — and it works on
+    * a batch scan and equally on a streaming micro-batch
+    * (StreamIngest.runZip), which keeps the zip→publish chain a single
+    * code path in both modes.
     *
     * A corrupt archive must not kill the job: entries decoded before
     * the corruption are kept (their zip_error is null) and ONE extra
     * row (null entry/text, zip_error = the decoder's complaint) marks
     * the archive as partially read, so callers choose their policy —
-    * the lenient batch path drops the marker, the streaming path
-    * quarantines it durably (the checkpoint would otherwise mark the
-    * file processed forever with no trace). Any non-fatal throwable is
-    * salvaged: hostile archives surface IllegalArgumentException and
-    * friends from the zip decoder, not just IOException.
+    * the batch path drops the marker, the streaming path quarantines it
+    * durably (the checkpoint would otherwise mark the file processed
+    * forever with no trace). Any non-fatal throwable is salvaged:
+    * hostile archives surface IllegalArgumentException and friends from
+    * the zip decoder, not just IOException. An archive that cannot be
+    * opened at all fails the task, as a failed file read does.
     */
   def expandEntriesWithErrors(files: DataFrame,
                               suffix: String = ".json"): DataFrame = {
     val spark = files.sparkSession
     import spark.implicits._
-    files
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (zipPath, bytes) =>
-        val out = scala.collection.mutable.ArrayBuffer
-          .empty[(String, String, String, String)]
-        // ZipInputStream scans for a PK local-header signature and
-        // treats a signature-free payload as an EMPTY archive — garbage
-        // under a .zip name would silently yield nothing. All real zips
-        // (including empty ones: the end-of-central-directory record)
-        // start with "PK".
-        if (bytes.length < 2 || bytes(0) != 'P'.toByte || bytes(1) != 'K'.toByte) {
-          out += ((zipPath, null, null, "not a zip archive (no PK signature)"))
-        } else {
-          val zis = new ZipInputStream(new ByteArrayInputStream(bytes))
-          try {
-            var e = zis.getNextEntry
-            while (e != null) {
-              if (!e.isDirectory && e.getName.endsWith(suffix)) {
-                out += ((zipPath, e.getName,
-                  new String(zis.readAllBytes(),
-                    java.nio.charset.StandardCharsets.UTF_8), null))
-              }
-              e = zis.getNextEntry
-            }
-          } catch {
-            case NonFatal(ex) =>
-              out += ((zipPath, null, null,
-                s"${ex.getClass.getName}: ${ex.getMessage}"))
-          }
-        }
-        out
+    // the session's Hadoop conf carries fs.<scheme>.impl and credentials,
+    // so graftfs:// and s3a:// archives resolve on the executors
+    val conf = new SerializableConfiguration(spark.sessionState.newHadoopConf())
+    files.select(col("path")).as[String]
+      .flatMap { zipPath =>
+        val p = new Path(zipPath)
+        entries(zipPath, p.getFileSystem(conf.value).open(p), suffix)
       }
       .toDF("zip_path", "entry", "text", "zip_error")
   }
 
-  /** Lenient batch form of [[expandEntriesWithErrors]]: salvaged
-    * entries only, corruption markers dropped (the engine's
-    * malformed-input contract — null/absent rows, never job failure).
+  /** Lazy (zip_path, entry, text, zip_error) rows of one archive: one
+    * entry decompressed at a time, the salvage cut-off as the last row,
+    * and `in` closed on exhaustion or at task completion, whichever
+    * comes first.
     */
-  def expandEntries(files: DataFrame, suffix: String = ".json"): DataFrame =
-    expandEntriesWithErrors(files, suffix)
-      .filter(col("zip_error").isNull)
-      .drop("zip_error")
-
-  /** Bounded-memory variant of [[readEntries]]: archives are opened as
-    * filesystem streams on the executors (never materialized as one
-    * byte array), so peak memory per task is a single decompressed
-    * ENTRY regardless of archive size — the shape for multi-GB
-    * archives. One task per archive; parallelism across archives.
-    * Same salvage contract as [[expandEntriesWithErrors]].
-    */
-  def readEntriesStreamed(spark: SparkSession, path: String,
-                          suffix: String = ".json"): DataFrame = {
-    import spark.implicits._
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(hconf)
-    val stats = fs.globStatus(p) match {
-      case null => Array.empty[org.apache.hadoop.fs.FileStatus]
-      case gs => gs.flatMap { s =>
-        if (s.isDirectory) fs.listStatus(s.getPath).filter(_.isFile)
-        else Array(s)
-      }
-    }
-    val paths = stats.map(_.getPath.toString).toSeq
-    val sconf = new org.apache.spark.util.SerializableConfiguration(hconf)
-    val parts = math.max(1, math.min(paths.size,
-      spark.sessionState.conf.numShufflePartitions))
-    spark.createDataset(paths).repartition(parts)
-      .flatMap { zipPath =>
-        val zp = new org.apache.hadoop.fs.Path(zipPath)
-        val in = zp.getFileSystem(sconf.value).open(zp)
-        // same no-PK-signature detection as the in-memory path. The
-        // positional readFully never short-reads (a plain read() may
-        // legally return 1 byte and misclassify a valid archive) and
-        // never moves the stream offset; a <2-byte file is EOF = not a
-        // zip.
-        val magic = new Array[Byte](2)
-        val magicOk =
-          try { in.readFully(0L, magic); true }
-          catch { case _: java.io.EOFException => false }
-        if (!magicOk || magic(0) != 'P'.toByte || magic(1) != 'K'.toByte) {
-          try in.close() catch { case NonFatal(_) => }
-          Iterator.single((zipPath, null: String, null: String,
-            "not a zip archive (no PK signature)"))
-        } else {
-          val zis = new ZipInputStream(in)
-          // a downstream operator may stop consuming mid-archive
-          // (limit, short-circuited join): close-on-exhaustion never
-          // fires then, so the task-completion hook reclaims the FS
-          // handle (ZipInputStream.close is idempotent — the double
-          // close on the normal path is harmless)
-          Option(org.apache.spark.TaskContext.get()).foreach(
-            _.addTaskCompletionListener[Unit] { _ =>
-              try zis.close() catch { case NonFatal(_) => }
-            })
-          // lazy iterator: one entry decompressed at a time; the stream
-          // closes on exhaustion (including the salvage cut-off)
-          new Iterator[(String, String, String, String)] {
-            private var nextRow: (String, String, String, String) = _
-            private var done = false
-            private def close(): Unit = {
-              done = true
-              try zis.close() catch { case NonFatal(_) => }
-            }
-            private def advance(): Unit = {
-              nextRow = null
-              if (done) return
-              try {
-                var e = zis.getNextEntry
-                while (e != null && nextRow == null) {
-                  if (!e.isDirectory && e.getName.endsWith(suffix)) {
-                    nextRow = (zipPath, e.getName,
-                      new String(zis.readAllBytes(),
-                        java.nio.charset.StandardCharsets.UTF_8), null)
-                  } else e = zis.getNextEntry
-                }
-                if (nextRow == null) close()
-              } catch {
-                case NonFatal(ex) =>
-                  nextRow = (zipPath, null, null,
-                    s"${ex.getClass.getName}: ${ex.getMessage}")
-                  close()
-              }
-            }
-            advance()
-            override def hasNext: Boolean = nextRow != null
-            override def next(): (String, String, String, String) = {
-              val r = nextRow; advance(); r
-            }
+  private def entries(zipPath: String, in: InputStream,
+                      suffix: String): Iterator[Entry] = {
+    // ZipInputStream pulls 512 bytes per read; the buffer keeps that
+    // off the filesystem stream's per-call overhead
+    val buffered = new BufferedInputStream(in)
+    val zis = new ZipInputStream(buffered)
+    def close(): Unit = { Try(zis.close()); () }
+    // a downstream operator may stop consuming mid-archive (limit,
+    // short-circuited join), so exhaustion never comes: the
+    // task-completion hook reclaims the FS handle (close is idempotent)
+    Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => close()))
+    // ZipInputStream scans for a PK local-header signature and treats a
+    // signature-free payload as an EMPTY archive — garbage under a .zip
+    // name would silently yield nothing. All real zips (including empty
+    // ones: the end-of-central-directory record) start with "PK".
+    // readNBytes never short-reads before EOF, so a valid archive is
+    // never misclassified on a 1-byte read.
+    buffered.mark(2)
+    val magic = buffered.readNBytes(2)
+    buffered.reset()
+    if (magic.length < 2 || magic(0) != 'P'.toByte || magic(1) != 'K'.toByte) {
+      close()
+      Iterator.single((zipPath, null, null, "not a zip archive (no PK signature)"))
+    } else new Iterator[Entry] {
+      private var nextRow: Entry = _
+      private var done = false
+      private def finish(): Unit = { done = true; close() }
+      private def advance(): Unit = {
+        nextRow = null
+        if (done) return
+        try {
+          var e = zis.getNextEntry
+          while (e != null && nextRow == null) {
+            if (!e.isDirectory && e.getName.endsWith(suffix)) {
+              nextRow = (zipPath, e.getName,
+                new String(zis.readAllBytes(), StandardCharsets.UTF_8), null)
+            } else e = zis.getNextEntry
           }
+          if (nextRow == null) finish()
+        } catch {
+          case NonFatal(ex) =>
+            nextRow = (zipPath, null, null,
+              s"${ex.getClass.getName}: ${ex.getMessage}")
+            finish()
         }
       }
-      .toDF("zip_path", "entry", "text", "zip_error")
+      advance()
+      override def hasNext: Boolean = nextRow != null
+      override def next(): Entry = {
+        val r = nextRow; advance(); r
+      }
+    }
   }
 
   /** Cricsheet matches parsed straight out of the archive: same shape
@@ -191,14 +139,12 @@ object ZipSource {
     matchesFrom(readEntries(spark, zipPath))
 
   /** Parse expanded entries into the [[Cricsheet.read]] shape. */
-  def matchesFrom(entries: DataFrame): DataFrame = {
-    val idStr = regexp_extract(col("entry"), "(\\d+)\\.json", 1)
+  def matchesFrom(entries: DataFrame): DataFrame =
     entries
       .withColumn("parsed", from_json(col("text"), Cricsheet.schema))
       .select(
         col("parsed.meta").as("meta"),
         col("parsed.info").as("info"),
         col("parsed.innings").as("innings"),
-        when(idStr =!= "", idStr.cast("int")).as("match_id"))
-  }
+        Cricsheet.matchId(col("entry")).as("match_id"))
 }

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.datasources.binaryfile.BinaryFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 
@@ -33,8 +34,7 @@ object StreamIngest {
       .option("multiLine", "true")
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .json(landingDir)
-      .withColumn("match_id",
-        regexp_extract(input_file_name(), "(\\d+)\\.json", 1).cast("int"))
+      .withColumn("match_id", Cricsheet.matchId(input_file_name()))
 
     MicroBatch.run(raw, checkpointDir, OutputMode.Append) { (batch, _) =>
       val b = batch.persist()
@@ -66,23 +66,16 @@ object StreamIngest {
     */
   def runZip(spark: SparkSession, zipLandingDir: String, stagingDir: String,
              checkpointDir: String, maxFilesPerTrigger: Int = 10): StreamingQuery = {
-    // binaryFile's schema is fixed, but streaming sources require it
-    // spelled out (no inference pass on a stream)
-    val binaryFileSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("path",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("modificationTime",
-        org.apache.spark.sql.types.TimestampType),
-      org.apache.spark.sql.types.StructField("length",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("content",
-        org.apache.spark.sql.types.BinaryType)))
     val raw = spark.readStream
       .format("binaryFile")
-      .schema(binaryFileSchema)
+      // streaming sources take no inference pass: spell the fixed schema
+      .schema(BinaryFileFormat.schema)
       .option("pathGlobFilter", "*.zip")
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .load(zipLandingDir)
+      // foreachBatch receives an already-planned batch, so `content` is
+      // pruned here: expansion reopens each archive by path
+      .select(col("path"))
 
     MicroBatch.run(raw, checkpointDir, OutputMode.Append) { (batch, _) =>
       val expanded = ZipSource.expandEntriesWithErrors(batch).persist()

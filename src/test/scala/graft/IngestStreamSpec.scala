@@ -275,6 +275,22 @@ class IngestStreamSpec extends SparkSpec {
       batch.orderBy("match_id").collect().toSeq)
   }
 
+  test("streaming: a landing file with no digits in its name stages with a null match_id") {
+    val landing = tmp("n_landing"); val staging = tmp("n_staging")
+    val checkpoint = tmp("n_ckpt")
+    copyFixtures(landing,
+      Seq("1001.json", "1002.json", "1003.json", "1004.json", "1005.json", "1006.json"))
+    Files.copy(Paths.get(fixturesDir, "1001.json"), Paths.get(landing, "notes.json"))
+
+    StreamIngest.run(spark, landing, staging, checkpoint).awaitTermination()
+
+    val mw = spark.read.parquet(s"$staging/matchwise")
+    val batch = Extractors.matchwise(Cricsheet.read(spark, landing))
+    assert(mw.filter(col("match_id").isNull).count() == 1)
+    assert(mw.orderBy("match_id").collect().toSeq ==
+      batch.orderBy("match_id").collect().toSeq)
+  }
+
   test("staging backend is config-pluggable (json stand-in for a connector)") {
     // the same StreamIngest code path writes through whatever DataSource
     // the session config names — json here stands in for s3a:// parquet
@@ -425,6 +441,26 @@ class IngestStreamSpec extends SparkSpec {
     // re-quarantine (no duplicate rows) nor re-stage
     StreamIngest.runZip(spark, landing, staging, checkpoint).awaitTermination()
     assert(spark.read.parquet(s"$staging/quarantine").count() == 1)
+    assert(spark.read.parquet(s"$staging/matchwise").count() == 1)
+  }
+
+  test("streaming: zip expansion scans only the path column of each archive") {
+    import java.io.{File, FileOutputStream}
+    import java.util.zip.{ZipEntry, ZipOutputStream}
+    val landing = tmp("p_landing"); val staging = tmp("p_staging")
+    val checkpoint = tmp("p_ckpt")
+    val zos = new ZipOutputStream(new FileOutputStream(new File(landing, "a.zip")))
+    zos.putNextEntry(new ZipEntry("t/1001.json"))
+    zos.write(Files.readAllBytes(Paths.get(fixturesDir, "1001.json")))
+    zos.closeEntry(); zos.close()
+
+    val q = StreamIngest.runZip(spark, landing, staging, checkpoint)
+    q.awaitTermination()
+    // the archive is opened once, by the expansion; the stream's own
+    // scan must not load `content` too
+    val plan = new java.io.ByteArrayOutputStream()
+    Console.withOut(plan)(q.explain())
+    assert(plan.toString.contains("ReadSchema: struct<path:string>"), plan.toString)
     assert(spark.read.parquet(s"$staging/matchwise").count() == 1)
   }
 

@@ -2,7 +2,9 @@ package graft
 
 import java.io.{FileOutputStream, File}
 import java.nio.file.{Files, Paths}
-import java.util.zip.{ZipEntry, ZipOutputStream}
+import java.util.zip.{ZipEntry, ZipFile, ZipOutputStream}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 
@@ -59,26 +61,39 @@ class ZipSourceSpec extends SparkSpec {
     assert(again == landed)
   }
 
-  test("streamed reader equals the in-memory reader, salvage included") {
-    val a = ZipSource.readEntries(spark, zipPath)
-    val b = ZipSource.readEntriesStreamed(spark, zipPath)
-      .filter(col("zip_error").isNull).drop("zip_error")
-    assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0)
-    assert(b.count() == 6)
+  /** (entry, text) of every .json entry, read on the driver with
+    * java.util.zip.ZipFile — independent of the Spark expansion path.
+    */
+  private def zipFileEntries(zip: String): Set[(String, String)] = {
+    val zf = new ZipFile(zip)
+    try zf.entries().asScala.filter(e => !e.isDirectory && e.getName.endsWith(".json"))
+      .map(e => e.getName -> new String(zf.getInputStream(e).readAllBytes(), "UTF-8"))
+      .toSet
+    finally zf.close()
+  }
+
+  private def entryTexts(df: org.apache.spark.sql.DataFrame): Seq[(String, String)] =
+    df.select("entry", "text").collect().map(r => r.getString(0) -> r.getString(1)).toSeq
+
+  test("readEntries equals a ZipFile read; a truncated archive salvages with one marker") {
+    val got = entryTexts(ZipSource.readEntries(spark, zipPath))
+    assert(got.size == 6)
+    assert(got.toSet == zipFileEntries(zipPath))
 
     // truncated archive: salvages the leading entries + one error row
     val dir = Files.createTempDirectory("graft_zs_stream")
     val whole = Files.readAllBytes(Paths.get(zipPath))
     Files.write(Paths.get(dir.toString, "trunc.zip"),
       java.util.Arrays.copyOf(whole, whole.length - whole.length / 4))
-    val s = ZipSource.readEntriesStreamed(spark, dir.toString + "/trunc.zip")
+    val s = ZipSource.expandEntriesWithErrors(
+      spark.read.format("binaryFile").load(dir.toString + "/trunc.zip"))
     val errs = s.filter(col("zip_error").isNotNull).count()
     val oks = s.filter(col("zip_error").isNull).count()
     assert(errs == 1, s"expected one error marker, got $errs")
     assert(oks >= 1 && oks < 6, s"expected partial salvage, got $oks")
   }
 
-  test("streamed reader handles a many-entry archive entry-by-entry") {
+  test("readEntries expands a many-entry archive entry for entry") {
     val dir = Files.createTempDirectory("graft_zs_many")
     val zip = new File(dir.toFile, "many.zip")
     val zos = new ZipOutputStream(new FileOutputStream(zip))
@@ -88,13 +103,34 @@ class ZipSourceSpec extends SparkSpec {
       zos.closeEntry()
     }
     zos.close()
-    val s = ZipSource.readEntriesStreamed(spark, zip.getAbsolutePath)
-    assert(s.filter(col("zip_error").isNull).count() == 500)
-    assert(s.filter(col("zip_error").isNotNull).count() == 0)
-    // equal to the in-memory expansion, entry for entry
-    val m = ZipSource.readEntries(spark, zip.getAbsolutePath)
-    assert(s.drop("zip_error").exceptAll(m).count() == 0)
-    assert(m.exceptAll(s.drop("zip_error")).count() == 0)
+    val got = entryTexts(ZipSource.readEntries(spark, zip.getAbsolutePath))
+    assert(got.size == 500)
+    assert(got.toSet == zipFileEntries(zip.getAbsolutePath))
+  }
+
+  test("expansion reads only the path column of the binaryFile scan") {
+    val plan = ZipSource.expandEntriesWithErrors(
+      spark.read.format("binaryFile").load(zipPath)).queryExecution.executedPlan
+    val scans = plan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s.requiredSchema
+    }
+    assert(scans.map(_.fieldNames.toSeq) == Seq(Seq("path")), plan.toString)
+  }
+
+  test("an archive whose name needs URL escaping reopens on the executor") {
+    val dir = Files.createTempDirectory("graft_zs_escape")
+    val zip = Paths.get(dir.toString, "t20s 100%.zip")
+    Files.copy(Paths.get(zipPath), zip)
+    val m = ZipSource.readMatches(spark, dir.toString)
+    assert(m.count() == 6)
+  }
+
+  test("readEntries on a missing path raises") {
+    val missing = Files.createTempDirectory("graft_zs_missing").toString + "/none.zip"
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      ZipSource.readEntries(spark, missing).count()
+    }
+    assert(e.getMessage.contains("PATH_NOT_FOUND"), e.getMessage)
   }
 
   test("fetch leaves no temp files behind") {
