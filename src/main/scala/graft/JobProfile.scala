@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 import scala.collection.mutable
 
@@ -32,17 +34,37 @@ object JobProfile {
   }
 
   /** Run `body` under a job-timing listener, then print its wall time
-    * and every Spark job's duration and first-stage call site.
+    * and every Spark job's duration and call site; returns the printed
+    * (job id, ms, call site) rows.
+    *
+    * A job's call site is the first `graft` frame of its first stage.
+    * Jobs AQE launches from its broadcast and subquery threads have no
+    * such frame; they carry their query's SQL execution id, so they are
+    * named by the frame (or short call site) that started that
+    * execution.
     */
-  def profiled(spark: SparkSession, name: String)(body: => Unit): Unit = {
+  def profiled(spark: SparkSession, name: String)(
+      body: => Unit): Seq[(Int, Long, String)] = {
     val starts = mutable.Map[Int, (Long, String)]()
+    val execSites = mutable.Map[Long, String]()
     val rows = mutable.ArrayBuffer[(Int, Long, String)]()
+    def graftFrame(details: String): Option[String] =
+      details.split('\n').find(l => l.contains("graft") && !l.contains("Profile"))
     val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart => starts.synchronized {
+          execSites(x.executionId) = graftFrame(x.details).getOrElse(x.description)
+        }
+        case _ =>
+      }
       override def onJobStart(js: SparkListenerJobStart): Unit =
         starts.synchronized {
-          val site = js.stageInfos.headOption.map(_.details.split('\n')
-            .find(l => l.contains("graft") && !l.contains("Profile"))
-            .getOrElse(js.stageInfos.head.name)).getOrElse("?")
+          val execSite = Option(js.properties)
+            .flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
+            .flatMap(id => execSites.get(id.toLong))
+          val site = js.stageInfos.headOption.flatMap(s => graftFrame(s.details))
+            .orElse(execSite)
+            .orElse(js.stageInfos.headOption.map(_.name)).getOrElse("?")
           starts(js.jobId) = (js.time, site)
         }
       override def onJobEnd(je: SparkListenerJobEnd): Unit =
@@ -60,11 +82,13 @@ object JobProfile {
     // removal — events still queued at removeSparkListener are
     // silently dropped and would undercount tail jobs
     spark.sparkContext.removeSparkListener(listener)
-    println(f"== $name%s: wall $wall%.2f s, ${rows.size}%d jobs ==")
-    rows.sortBy(_._1).foreach { case (id, ms, site) =>
+    val sorted = rows.sortBy(_._1).toSeq
+    println(f"== $name%s: wall $wall%.2f s, ${sorted.size}%d jobs ==")
+    sorted.foreach { case (id, ms, site) =>
       println(f"  job $id%4d  ${ms / 1000.0}%6.2f s  $site%s")
     }
-    val sum = rows.map(_._2).sum / 1000.0
+    val sum = sorted.map(_._2).sum / 1000.0
     println(f"  (sum of job times $sum%.2f s; gap to wall = driver/planning)")
+    sorted
   }
 }

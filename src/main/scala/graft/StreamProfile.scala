@@ -47,14 +47,13 @@ object StreamProfile {
     val edges = ev.select((col("event_id") % 97).as("src"),
         (col("event_id") % 89).as("dst"))
       .filter(col("src") =!= col("dst"))
-    spark.sql("DROP TABLE IF EXISTS graft_streamprofile_pr")
     graft.streaming.StreamPageRank.processBatch(spark,
-      edges.filter(col("src") % 2 === 0), 0L, "graft_streamprofile_pr",
-      s"$tmp/pr_state", refreshIters = 2, buckets = 8)
+      edges.filter(col("src") % 2 === 0), 0L, s"$tmp/pr_state",
+      refreshIters = 2, buckets = 8)
     JobProfile.profiled(spark, "StreamPageRank.processBatch(warm)") {
       graft.streaming.StreamPageRank.processBatch(spark,
-        edges.filter(col("src") % 2 === 1), 1L, "graft_streamprofile_pr",
-        s"$tmp/pr_state", refreshIters = 2, buckets = 8)
+        edges.filter(col("src") % 2 === 1), 1L, s"$tmp/pr_state",
+        refreshIters = 2, buckets = 8)
     }
 
     spark.stop()

@@ -270,8 +270,8 @@ object Dedup {
     * near-contained in something we already hold?") without re-pairing
     * the corpus with itself. At cluster scale the corpus index is what
     * you'd persist bucketed by `h` (exactly the
-    * [[graft.operators.Layout.ensureBucketedBatchTable]] shape
-    * StreamDedup uses for minhash bands) so the per-batch probe joins
+    * [[graft.streaming.BatchState]] shape StreamDedup uses for minhash
+    * bands) so the per-batch probe joins
     * the corpus side exchange-free; probe rows stay K per new doc
     * regardless of corpus size. doc_ids must be disjoint across the
     * two inputs. Output: DIRECTED (doc_a = new contained candidate,
@@ -447,9 +447,8 @@ object Dedup {
     * buckets capped on both sides, emitting DIRECTED raw candidates
     * (doc_a = new, doc_b = corpus). Factored out so plan tests can
     * assert the scale contract directly: when `corpusBands` is a table
-    * bucketed by the two join keys ([[graft.operators.Layout
-    * .ensureBucketedBatchTable]] — [[graft.streaming.StreamDedup]]'s
-    * state shape), this join plans with NO Exchange on the corpus side;
+    * bucketed by the two join keys (a [[graft.streaming.BatchState]] —
+    * [[graft.streaming.StreamDedup]]'s state shape), this join plans with NO Exchange on the corpus side;
     * only the O(batch) new side shuffles.
     */
   private[graft] def bandProbeJoin(corpusBands: DataFrame, newBands: DataFrame,

@@ -116,7 +116,7 @@ object Similarity {
     * LITERAL float arrays, so bucketing either side is one codegen'd
     * map pass with no join; at cluster scale the corpus bucket table is
     * what you'd persist (bucketed by `bucket`, the
-    * [[graft.operators.Layout.ensureBucketedBatchTable]] shape) and
+    * [[graft.streaming.BatchState]] shape) and
     * only the O(batch) side buckets per probe. Candidates come from the
     * bucket equi-join (never new x corpus), hot buckets capped on both
     * sides, each verified with the exact codegen'd cosine. vec_ids must

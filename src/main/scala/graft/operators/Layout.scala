@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Physical-layout operators for the 100 TB design point.
@@ -36,86 +36,6 @@ object Layout {
       .bucketBy(buckets, keys.head, keys.tail: _*)
       .sortBy(keys.head, keys.tail: _*)
       .format("parquet").saveAsTable(table)
-
-  /** Catalog name for a persisted-state table over `path`: MD5 of the
-    * path keeps the name collision-free across distinct state dirs in
-    * one session (31-bit `String.hashCode` cannot, and
-    * `math.abs(Int.MinValue)` is negative — an invalid identifier).
-    */
-  def stateTableName(prefix: String, path: String): String =
-    prefix + "_" + java.security.MessageDigest.getInstance("MD5")
-      .digest(path.getBytes("UTF-8"))
-      .map(b => f"$b%02x").mkString.take(12)
-
-  /** Ensure an EXTERNAL parquet table named `table` exists over `path`,
-    * partitioned by a `batch BIGINT` column and bucketed+sorted by
-    * `keys`. This is the persisted-state shape for incremental
-    * operators (e.g. streaming dedup's band table): each micro-batch
-    * overwrites only its own `batch=<id>` partition ([[overwriteBatch]])
-    * while every probe reads the table bucket-partitioned — the corpus
-    * side of a probe equi-join on `keys` plans with NO Exchange.
-    *
-    * The files under `path` are the durable state; the catalog entry is
-    * not (local sessions use an in-memory catalog), so re-registration
-    * after a restart recovers the existing `batch=` partitions from the
-    * filesystem.
-    */
-  def ensureBucketedBatchTable(spark: SparkSession, table: String, path: String,
-                               dataCols: Seq[(String, String)],
-                               keys: Seq[String], buckets: Int): Unit = {
-    if (!spark.catalog.tableExists(table)) {
-      // RECOVER PARTITIONS lists the location; make sure it exists even
-      // before the first batch has written anything
-      val p = new org.apache.hadoop.fs.Path(path)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(p)
-      val colsDdl = (dataCols.map { case (n, t) => s"$n $t" } :+ "batch BIGINT")
-        .mkString(", ")
-      spark.sql(
-        s"""CREATE TABLE $table ($colsDdl) USING parquet
-           |PARTITIONED BY (batch)
-           |CLUSTERED BY (${keys.mkString(", ")})
-           |SORTED BY (${keys.mkString(", ")}) INTO $buckets BUCKETS
-           |LOCATION '$path'""".stripMargin)
-      spark.sql(s"ALTER TABLE $table RECOVER PARTITIONS")
-      ()
-    }
-  }
-
-  /** Overwrite EXACTLY the `batch=<batchId>` partition of a
-    * [[ensureBucketedBatchTable]] table with `df` (which must carry the
-    * table's data columns; order-insensitive). Dynamic partition
-    * overwrite makes the write idempotent under at-least-once replay:
-    * re-running the same (df, batchId) rewrites the same partition with
-    * the same content, and never touches other batches.
-    */
-  /** The partitionOverwriteMode toggle below mutates SESSION-global
-    * conf; two concurrent foreachBatch writers on one session (e.g.
-    * StreamDedup + StreamSimilarity) could interleave so one restores
-    * "static" while the other's insertInto is still planning — which
-    * would truncate every batch partition. All toggle+write sequences
-    * are serialized through this lock (driver-side only; the writes
-    * themselves still run distributed).
-    */
-  private val overwriteModeLock = new Object
-
-  def overwriteBatch(df: DataFrame, table: String, batchId: Long): Unit =
-    overwriteModeLock.synchronized {
-      val spark = df.sparkSession
-      val ordered = spark.table(table).columns.toSeq
-      // insertInto ignores writer options; dynamic-vs-static lives in the
-      // session conf (static would truncate ALL batches, not just this one)
-      val key = "spark.sql.sources.partitionOverwriteMode"
-      val prior = spark.conf.getOption(key)
-      spark.conf.set(key, "dynamic")
-      try df.withColumn("batch", lit(batchId))
-        .select(ordered.map(col): _*)
-        .write.mode(SaveMode.Overwrite)
-        .insertInto(table)
-      finally prior match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
 
   /** Salted equi-join of a skewed left side with a smaller right side
     * on `key`: left rows get a deterministic salt from a high-entropy

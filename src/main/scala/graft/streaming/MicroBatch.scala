@@ -1,6 +1,10 @@
 package graft.streaming
 
+import scala.util.Try
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
@@ -19,10 +23,10 @@ import org.apache.spark.sql.types.StructType
   *    replays the same batch under the same id. So every write a step
   *    makes is keyed by batch id — [[writeBatch]] overwrites the
   *    `batch=<id>` partition of a parquet dir, and
-  *    [[graft.operators.Layout.overwriteBatch]] the same partition of a
-  *    bucketed state table — and every probe of accumulated state reads
-  *    only STRICTLY EARLIER batches, so a replay rewrites identical rows
-  *    instead of appending a second copy.
+  *    [[BatchState.overwrite]] the same partition of a bucketed state
+  *    table — and every probe of accumulated state reads only STRICTLY
+  *    EARLIER batches ([[readBefore]], [[BatchState.before]]), so a
+  *    replay rewrites identical rows instead of appending a second copy.
   */
 object MicroBatch {
 
@@ -58,4 +62,35 @@ object MicroBatch {
   /** Overwrite batch `batchId`'s partition of the parquet dir `dir`. */
   def writeBatch(df: DataFrame, dir: String, batchId: Long): Unit =
     df.write.mode("overwrite").parquet(partition(dir, batchId))
+
+  /** Rows of the parquet dir `dir` from batches strictly before
+    * `batchId`, without the `batch` column; None while `dir` holds no
+    * parquet. A dir written before the batch-keyed layout has no
+    * `batch` column: every row in it was committed by a completed
+    * batch, so all of it is prior state.
+    */
+  def readBefore(spark: SparkSession, dir: String,
+                 batchId: Long): Option[DataFrame] =
+    Try(spark.read.parquet(dir)).toOption.map { df =>
+      if (df.columns.contains("batch"))
+        df.filter(col("batch") < batchId).drop("batch")
+      else df
+    }
+
+  /** Run `write` to derive `dir` once per stream, unless `dir` already
+    * holds committed output. The guard is the `_SUCCESS` commit marker,
+    * not bare existence: a crash mid-write leaves the dir present but
+    * uncommitted (e.g. only `_temporary/`), and an existence guard would
+    * pin that unreadable state forever. Uncommitted leftovers are wiped
+    * first; `write` must be deterministic, so a re-derivation is
+    * byte-identical.
+    */
+  def deriveOnce(spark: SparkSession, dir: String)(write: => Unit): Unit = {
+    val p = new Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(new Path(p, "_SUCCESS"))) {
+      fs.delete(p, true)
+      write
+    }
+  }
 }

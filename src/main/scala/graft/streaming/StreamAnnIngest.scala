@@ -7,7 +7,6 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructField, StructType}
 
 import graft.ext.Similarity
-import graft.operators.Layout
 
 /** Streaming vector-index ingestion — the streaming twin of the s25
   * batch append: a stream of (vec_id, embedding) rows continuously
@@ -39,8 +38,8 @@ object StreamAnnIngest {
   /** Ingest json-lines vector files landing in `landingDir` into the
     * batch-partitioned, cell-bucketed index table over `statePath`.
     */
-  def run(spark: SparkSession, landingDir: String, table: String,
-          statePath: String, checkpointDir: String, original: DataFrame,
+  def run(spark: SparkSession, landingDir: String, statePath: String,
+          checkpointDir: String, original: DataFrame,
           nCentroids: Int, nQueries: Int,
           buckets: Int = 8): StreamingQuery = {
     // derive the frozen centroids ONCE at stream start — a 16-odd-row
@@ -51,8 +50,7 @@ object StreamAnnIngest {
       .cpGuard()
     MicroBatch.run(spark, vecSchema, landingDir, checkpointDir) {
       (batch, batchId) =>
-        processBatchUnder(spark, batch, batchId, table, statePath, cents,
-          buckets)
+        processBatchUnder(spark, batch, batchId, statePath, cents, buckets)
     }
   }
 
@@ -61,9 +59,9 @@ object StreamAnnIngest {
     * partition only.
     */
   def processBatch(spark: SparkSession, batch: DataFrame, batchId: Long,
-                   table: String, statePath: String, original: DataFrame,
+                   statePath: String, original: DataFrame,
                    nCentroids: Int, nQueries: Int, buckets: Int): Unit =
-    processBatchUnder(spark, batch, batchId, table, statePath,
+    processBatchUnder(spark, batch, batchId, statePath,
       Similarity.ivfCentsFor(original, nCentroids, nQueries), buckets)
 
   /** [[processBatch]] under an already-derived (checkpointed) centroid
@@ -71,24 +69,26 @@ object StreamAnnIngest {
     * scanned once per stream, not once per trigger.
     */
   def processBatchUnder(spark: SparkSession, batch: DataFrame,
-                        batchId: Long, table: String, statePath: String,
+                        batchId: Long, statePath: String,
                         cents: DataFrame, buckets: Int): Unit = {
-    Layout.ensureBucketedBatchTable(spark, table, statePath, StateCols,
-      Seq("cell"), buckets)
     val clean = batch.filter(col("vec_id").isNotNull &&
       col("embedding").isNotNull)
-    Layout.overwriteBatch(Similarity.assignCellsUnder(clean, cents),
-      table, batchId)
+    state(spark, statePath, buckets)
+      .overwrite(Similarity.assignCellsUnder(clean, cents), batchId)
   }
+
+  private def state(spark: SparkSession, statePath: String,
+                    buckets: Int): BatchState =
+    BatchState.open(spark, statePath, StateCols, Seq("cell"), buckets)
 
   /** Query the accumulated streamed index: identical semantics to
     * [[Similarity.ivfTopKFromIndex]] over whatever batches have landed
     * (bit-identical to a batch build whenever the same vectors have
     * streamed in — the spec pins this against the live build).
     */
-  def probe(spark: SparkSession, table: String, embs: DataFrame,
-            nCentroids: Int, nProbe: Int, nQueries: Int,
-            k: Int): DataFrame =
-    Similarity.ivfTopKFromIndex(spark, table, embs, nCentroids, nProbe,
-      nQueries, k)
+  def probe(spark: SparkSession, statePath: String, embs: DataFrame,
+            nCentroids: Int, nProbe: Int, nQueries: Int, k: Int,
+            buckets: Int = 8): DataFrame =
+    Similarity.ivfTopKFromIndex(spark, state(spark, statePath, buckets).table,
+      embs, nCentroids, nProbe, nQueries, k)
 }

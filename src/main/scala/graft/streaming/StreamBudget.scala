@@ -7,7 +7,6 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.ext.TextOps
-import graft.operators.Layout
 
 /** Streaming token-budget admission — the streaming twin of the
   * c07/c10 batch budget operators: documents arrive continuously and
@@ -28,12 +27,12 @@ import graft.operators.Layout
   * table. Tokens consumed before batch B = one groupBy(stratum) over
   * the admitted table filtered to `batch < B` — the filter is what
   * makes a [[MicroBatch]] replay (at-least-once) idempotent: the
-  * replayed batch never sees its own earlier write. The table is
-  * BUCKETED by stratum ([[Layout.ensureBucketedBatchTable]], the
-  * StreamDedup/StreamUpsert state contract), so the consumed-tokens
-  * groupBy plans with ZERO Exchange at any corpus size; the per-batch
-  * prefix sum is a stratum-PARTITIONED window over just the
-  * micro-batch (never corpus-wide, never unpartitioned).
+  * replayed batch never sees its own earlier write. The table is a
+  * [[BatchState]] BUCKETED by stratum (the StreamDedup/StreamUpsert
+  * state contract), so the consumed-tokens groupBy plans with ZERO
+  * Exchange at any corpus size; the per-batch prefix sum is a
+  * stratum-PARTITIONED window over just the micro-batch (never
+  * corpus-wide, never unpartitioned).
   */
 object StreamBudget {
 
@@ -45,32 +44,33 @@ object StreamBudget {
   val StateCols: Seq[(String, String)] = Seq(
     "doc_id" -> "BIGINT", "stratum" -> "STRING", "n_tokens" -> "BIGINT")
 
-  def run(spark: SparkSession, landingDir: String, table: String,
-          statePath: String, quotas: Map[String, Long],
-          checkpointDir: String, buckets: Int = 8): StreamingQuery = {
+  def run(spark: SparkSession, landingDir: String, statePath: String,
+          quotas: Map[String, Long], checkpointDir: String,
+          buckets: Int = 8): StreamingQuery = {
     MicroBatch.run(spark, docSchema, landingDir, checkpointDir) {
       (batch, batchId) =>
-        processBatch(spark, batch, batchId, table, statePath, quotas,
-          buckets)
+        processBatch(spark, batch, batchId, statePath, quotas, buckets)
     }
   }
 
   /** Tokens already consumed per stratum by batches BEFORE `batchId` —
     * a zero-Exchange groupBy on the bucket key (spec-asserted). The
     * strict inequality is the replay-idempotency seam. */
-  def consumedBefore(spark: SparkSession, table: String,
-                     batchId: Long): DataFrame =
-    spark.table(table).filter(col("batch") < batchId)
+  def consumedBefore(spark: SparkSession, statePath: String, batchId: Long,
+                     buckets: Int = 8): DataFrame =
+    state(spark, statePath, buckets).before(batchId)
       .groupBy(col("stratum")).agg(sum(col("n_tokens")).as("consumed"))
+
+  private def state(spark: SparkSession, statePath: String,
+                    buckets: Int): BatchState =
+    BatchState.open(spark, statePath, StateCols, Seq("stratum"), buckets)
 
   /** One idempotent micro-batch step (public for replay tests). */
   def processBatch(spark: SparkSession, batch: DataFrame, batchId: Long,
-                   table: String, statePath: String,
-                   quotas: Map[String, Long], buckets: Int): Unit = {
+                   statePath: String, quotas: Map[String, Long],
+                   buckets: Int): Unit = {
     require(quotas.nonEmpty && quotas.values.forall(_ > 0),
       "quotas must be positive")
-    Layout.ensureBucketedBatchTable(spark, table, statePath, StateCols,
-      Seq("stratum"), buckets)
     import spark.implicits._
     val qDf = quotas.toSeq.toDF("stratum", "quota")
     val toks = batch
@@ -85,10 +85,11 @@ object StreamBudget {
     val admitted = toks
       .withColumn("prefix", sum(col("n_tokens")).over(w))
       .join(broadcast(qDf), "stratum") // unquota'd strata admit nothing
-      .join(consumedBefore(spark, table, batchId), Seq("stratum"), "left")
+      .join(consumedBefore(spark, statePath, batchId, buckets), Seq("stratum"),
+        "left")
       .filter(coalesce(col("consumed"), lit(0L)) + col("prefix")
         <= col("quota"))
       .select(col("doc_id"), col("stratum"), col("n_tokens"))
-    Layout.overwriteBatch(admitted, table, batchId)
+    state(spark, statePath, buckets).overwrite(admitted, batchId)
   }
 }

@@ -1,8 +1,5 @@
 package graft.streaming
 
-import java.security.MessageDigest
-
-import scala.util.Try
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -10,7 +7,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ext.Dedup
-import graft.operators.Layout
 
 /** Streaming asymmetric-containment dedup — the ingestion-time gate
   * "is this fresh document near-CONTAINED in something the corpus
@@ -21,8 +17,7 @@ import graft.operators.Layout
   * State is TWO tables (the [[StreamDedup]] discipline): the raw docs
   * (batch-keyed parquet, read only to exact-verify candidates) and the
   * INVERTED SHINGLE INDEX — per-doc distinct shingle hashes exploded to
-  * (doc_id, h) postings, persisted as an external table BUCKETED by h
-  * ([[Layout.ensureBucketedBatchTable]]) and partitioned by batch. Each
+  * (doc_id, h) postings, persisted as a [[BatchState]] BUCKETED by h. Each
   * micro-batch probes its docs' bottom-K shingle hashes against the
   * bucketed postings — the bucket key IS the probe join's key, so the
   * corpus side of the probe (and the hot-posting cap's count) plans
@@ -65,14 +60,10 @@ object StreamContainment {
     try {
       val docsPath = s"$stateDir/docs"
       StreamDedup.refuseFlatLegacyDir(spark, outDir)
-      val table = ensurePostingState(spark, s"$stateDir/postings", buckets)
-      val corpusPostings = spark.table(table)
-        .filter(col("batch") < batchId).drop("batch")
-      val corpusDocs = Try(spark.read.parquet(docsPath)).toOption.map { df =>
-        if (df.columns.contains("batch"))
-          df.filter(col("batch") < batchId).drop("batch")
-        else df
-      }
+      val postings = BatchState.open(spark, s"$stateDir/postings",
+        Seq("doc_id" -> "BIGINT", "h" -> "BIGINT"), Seq("h"), buckets)
+      val corpusPostings = postings.before(batchId).drop("batch")
+      val corpusDocs = MicroBatch.readBefore(spark, docsPath, batchId)
       val cross = corpusDocs.map { cd =>
         Dedup.containmentDupAsymAgainstPostings(corpusPostings, cd, batch,
           threshold, probeK, minProbeHits)
@@ -81,7 +72,7 @@ object StreamContainment {
         minProbeHits)
       val all = cross.map(_.unionByName(intra)).getOrElse(intra)
       MicroBatch.writeBatch(all, outDir, batchId)
-      Layout.overwriteBatch(postingsOf(batch), table, batchId)
+      postings.overwrite(postingsOf(batch), batchId)
       MicroBatch.writeBatch(batch.select(col("doc_id"), col("text")),
         docsPath, batchId)
     } finally {
@@ -99,18 +90,4 @@ object StreamContainment {
         graft.functions.ShingleHashesOf(col("text"), Dedup.ShingleSize).as("hs"))
       .filter(col("hs").isNotNull)
       .select(col("doc_id"), explode(col("hs")).as("h"))
-
-  private[graft] def postingTableName(path: String): String =
-    "graft_postings_" + MessageDigest.getInstance("MD5")
-      .digest(path.getBytes("UTF-8"))
-      .map(b => f"$b%02x").mkString.take(12)
-
-  private def ensurePostingState(spark: SparkSession, path: String,
-                                 buckets: Int): String = {
-    val table = postingTableName(path)
-    Layout.ensureBucketedBatchTable(spark, table, path,
-      Seq("doc_id" -> "BIGINT", "h" -> "BIGINT"),
-      Seq("h"), buckets)
-    table
-  }
 }

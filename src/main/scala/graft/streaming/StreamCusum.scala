@@ -7,8 +7,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType, TimestampType}
 
-import graft.operators.Layout
-
 /** Streaming CUSUM — the stateful twin of the batch
   * [[graft.ext.TimeSeries.cusum]] (query w27). The batch side computes
   * the clamp recursion s_i = max(0, s_{i-1} + x_i - k) WITHOUT
@@ -100,9 +98,9 @@ object StreamCusum {
     }
   }
 
-  def run(spark: SparkSession, landingDir: String, table: String,
-          statePath: String, checkpointDir: String, kCents: Long,
-          hCents: Long, buckets: Int = 8): StreamingQuery = {
+  def run(spark: SparkSession, landingDir: String, statePath: String,
+          checkpointDir: String, kCents: Long, hCents: Long,
+          buckets: Int = 8): StreamingQuery = {
     import spark.implicits._
     val events = MicroBatch.landing(spark, eventSchema, landingDir)
       .filter(col("user_id").isNotNull && col("ts").isNotNull &&
@@ -110,29 +108,22 @@ object StreamCusum {
       .as[CusumEvent]
     MicroBatch.run(snapshots(events, kCents, hCents), checkpointDir,
       OutputMode.Update) { (batch, batchId) =>
-      writeSnapshots(spark, batch.toDF(), batchId, table, statePath, buckets)
+      writeSnapshots(spark, batch.toDF(), batchId, statePath, buckets)
     }
   }
 
   def writeSnapshots(spark: SparkSession, snaps: DataFrame, batchId: Long,
-                     table: String, statePath: String,
-                     buckets: Int): Unit = {
-    Layout.ensureBucketedBatchTable(spark, table, statePath, SnapCols,
-      Seq("user_id"), buckets)
-    Layout.overwriteBatch(
-      snaps.select(col("user_id"), col("n"), col("n_alarms"),
-        col("cusum_cents"), col("n_dropped")), table, batchId)
-  }
+                     statePath: String, buckets: Int): Unit =
+    state(spark, statePath, buckets).overwrite(snaps, batchId)
+
+  private def state(spark: SparkSession, statePath: String,
+                    buckets: Int): BatchState =
+    BatchState.open(spark, statePath, SnapCols, Seq("user_id"), buckets)
 
   /** Latest running snapshot per user — zero Exchange over the
     * user-bucketed history (the [[StreamEma.emaNow]] plan). */
-  def cusumNow(spark: SparkSession, table: String): DataFrame =
-    spark.table(table)
-      .groupBy(col("user_id"))
-      .agg(max_by(struct(col("n"), col("n_alarms"), col("cusum_cents"),
-        col("n_dropped")), col("batch")).as("s"))
-      .select(col("user_id"), col("s.n").as("n"),
-        col("s.n_alarms").as("n_alarms"),
-        col("s.cusum_cents").as("cusum_cents"),
-        col("s.n_dropped").as("n_dropped"))
+  def cusumNow(spark: SparkSession, statePath: String,
+               buckets: Int = 8): DataFrame =
+    state(spark, statePath, buckets).latest(Seq("user_id"),
+      Seq("n", "n_alarms", "cusum_cents", "n_dropped"))
 }

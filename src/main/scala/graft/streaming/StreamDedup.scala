@@ -1,9 +1,6 @@
 package graft.streaming
 import graft.core.PlanCapture.CheckpointOps
 
-import java.security.MessageDigest
-
-import scala.util.Try
 import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.Path
@@ -13,7 +10,6 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.ext.Dedup
-import graft.operators.Layout
 
 /** Streaming near-duplicate detection: document batches arriving as
   * files are MinHash-deduplicated incrementally — each micro-batch
@@ -25,16 +21,12 @@ import graft.operators.Layout
   *
   * State is TWO tables: the raw docs (texts, needed only for exact
   * verification of candidate docs; plain batch-keyed parquet) and the
-  * minhash BAND table — an external table BUCKETED by (band_idx,
-  * band_key) ([[Layout.ensureBucketedBatchTable]]) and partitioned by
-  * batch. Each batch bands ITSELF, probes the bucketed table, and
+  * minhash BAND table — a [[BatchState]] BUCKETED by (band_idx,
+  * band_key). Each batch bands ITSELF, probes the bucketed table, and
   * overwrites its own batch partition — per-batch work is O(batch),
   * not O(corpus) ([[Dedup.minhashDupAgainstBands]]), and because the
   * bucket keys ARE the probe join's keys, the corpus side of every
   * probe plans with NO Exchange: only the O(batch) new side shuffles.
-  * The parquet files are the durable state; the (in-memory) catalog
-  * entry is re-registered per session with existing batch partitions
-  * recovered from the filesystem.
   *
   * [[MicroBatch]] is AT-LEAST-ONCE: a crash after any write but before
   * the checkpoint commit replays the whole batch. Every write is
@@ -91,29 +83,20 @@ object StreamDedup {
     try {
       val docsPath = s"$stateDir/docs"
       refuseFlatLegacyDir(spark, outDir)
-      val bandsTable = ensureBandState(spark, s"$stateDir/bands", bandBuckets)
+      val bands = bandState(spark, stateDir, bandBuckets)
       // state = strictly earlier batches only; a replayed batch must not
-      // probe the partial writes of its own failed attempt. Bands come
-      // from the bucketed table (batch=-1 holds any folded legacy
-      // state); docs written by the pre-batch-keyed layout have no
-      // `batch` partition column: all of them were committed by
-      // completed batches, so they are prior state wholesale (and must
-      // not crash column resolution).
-      val corpusBands = spark.table(bandsTable)
-        .filter(col("batch") < batchId).drop("batch")
-      val corpusDocs = Try(spark.read.parquet(docsPath)).toOption.map { df =>
-        if (df.columns.contains("batch"))
-          df.filter(col("batch") < batchId).drop("batch")
-        else df
-      }
+      // probe the partial writes of its own failed attempt (batch=-1
+      // holds any folded legacy bands)
+      val corpusBands = bands.before(batchId).drop("batch")
+      val corpusDocs = MicroBatch.readBefore(spark, docsPath, batchId)
       val crossDups = corpusDocs.map { cd =>
         Dedup.minhashDupAgainstBands(corpusBands, cd, batch, threshold)
       }
       val intraDups = Dedup.minhashDup(batch, threshold)
       val all = crossDups.map(_.unionByName(intraDups)).getOrElse(intraDups)
       MicroBatch.writeBatch(all, outDir, batchId)
-      Layout.overwriteBatch(
-        Dedup.minhashBands(Dedup.minhashSignatures(batch)), bandsTable, batchId)
+      bands.overwrite(
+        Dedup.minhashBands(Dedup.minhashSignatures(batch)), batchId)
       MicroBatch.writeBatch(batch.select(col("doc_id"), col("text")),
         docsPath, batchId)
     } finally {
@@ -122,22 +105,15 @@ object StreamDedup {
     }
   }
 
-  /** Catalog name for the band-state table over `path` — deterministic
-    * per state dir so restarts (and concurrent streams on different
-    * state dirs) resolve to the right files.
-    */
-  private[graft] def bandTableName(path: String): String =
-    Layout.stateTableName("graft_bands", path)
-
-  /** Ensure the bucketed band table over `path` is registered, folding
-    * any flat pre-batch-keyed band files into the `batch=-1` partition
+  /** The bucketed band table under `stateDir`, with any flat
+    * pre-batch-keyed band files folded into the `batch=-1` partition
     * (re-written through the bucketed writer — bucketed reads reject
     * files that lack a bucket id in their name).
     */
-  private def ensureBandState(spark: SparkSession, path: String,
-                              buckets: Int): String = {
-    val table = bandTableName(path)
-    Layout.ensureBucketedBatchTable(spark, table, path,
+  private[graft] def bandState(spark: SparkSession, stateDir: String,
+                               buckets: Int): BatchState = {
+    val path = s"$stateDir/bands"
+    val state = BatchState.open(spark, path,
       Seq("doc_id" -> "BIGINT", "band_idx" -> "INT", "band_key" -> "STRING"),
       Seq("band_idx", "band_key"), buckets)
     val p = new Path(path)
@@ -155,11 +131,11 @@ object StreamDedup {
         // read lists partition directories only, so lingering root
         // files are invisible to it.
         val legacy = spark.read.parquet(flat.map(_.getPath.toString).toSeq: _*)
-        Layout.overwriteBatch(legacy, table, -1L)
+        state.overwrite(legacy, -1L)
         flat.foreach(f => fs.delete(f.getPath, false))
       }
     }
-    table
+    state
   }
 
   /** The dup report accumulated under the pre-batch-keyed layout (flat

@@ -7,8 +7,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType, TimestampType}
 
-import graft.operators.Layout
-
 /** Streaming exponential moving average — the stateful twin of the
   * batch [[graft.ext.TimeSeries.ema]] fold (query w23): as events
   * arrive, each user's EMA advances by ema' = ema + alpha*(x - ema)
@@ -105,9 +103,8 @@ object StreamEma {
     }
   }
 
-  def run(spark: SparkSession, landingDir: String, table: String,
-          statePath: String, checkpointDir: String,
-          buckets: Int = 8): StreamingQuery = {
+  def run(spark: SparkSession, landingDir: String, statePath: String,
+          checkpointDir: String, buckets: Int = 8): StreamingQuery = {
     import spark.implicits._
     val events = MicroBatch.landing(spark, eventSchema, landingDir)
       .filter(col("user_id").isNotNull && col("ts").isNotNull &&
@@ -115,32 +112,25 @@ object StreamEma {
       .as[EmaEvent]
     MicroBatch.run(snapshots(events), checkpointDir, OutputMode.Update) {
       (batch, batchId) =>
-        writeSnapshots(spark, batch.toDF(), batchId, table, statePath,
-          buckets)
+        writeSnapshots(spark, batch.toDF(), batchId, statePath, buckets)
     }
   }
 
   /** One idempotent per-batch write of the touched users' running
     * snapshots (public for replay tests). */
   def writeSnapshots(spark: SparkSession, snaps: DataFrame, batchId: Long,
-                     table: String, statePath: String,
-                     buckets: Int): Unit = {
-    Layout.ensureBucketedBatchTable(spark, table, statePath, SnapCols,
-      Seq("user_id"), buckets)
-    Layout.overwriteBatch(
-      snaps.select(col("user_id"), col("n"), col("ema"),
-        col("n_dropped")), table, batchId)
-  }
+                     statePath: String, buckets: Int): Unit =
+    state(spark, statePath, buckets).overwrite(snaps, batchId)
+
+  private def state(spark: SparkSession, statePath: String,
+                    buckets: Int): BatchState =
+    BatchState.open(spark, statePath, SnapCols, Seq("user_id"), buckets)
 
   /** Latest running (n, ema, n_dropped) per user — max_by over the
     * batch id, planned with ZERO Exchange over the user-bucketed
     * snapshot history. */
-  def emaNow(spark: SparkSession, table: String): DataFrame =
-    spark.table(table)
-      .groupBy(col("user_id"))
-      .agg(
-        max_by(struct(col("n"), col("ema"), col("n_dropped")),
-          col("batch")).as("s"))
-      .select(col("user_id"), col("s.n").as("n"), col("s.ema").as("ema"),
-        col("s.n_dropped").as("n_dropped"))
+  def emaNow(spark: SparkSession, statePath: String,
+             buckets: Int = 8): DataFrame =
+    state(spark, statePath, buckets)
+      .latest(Seq("user_id"), Seq("n", "ema", "n_dropped"))
 }

@@ -8,7 +8,6 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType, TimestampType}
 
 import graft.core.PlanCapture.CheckpointOps
-import graft.operators.Layout
 
 /** Streaming twin of [[graft.ext.Funnels.eventFunnel]]: per-user funnel
   * progress carried as flatMapGroupsWithState state across
@@ -107,9 +106,9 @@ object StreamFunnel {
     }
   }
 
-  def run(spark: SparkSession, landingDir: String, table: String,
-          statePath: String, checkpointDir: String, stages: Seq[String],
-          windowMinutes: Int, buckets: Int = 8): StreamingQuery = {
+  def run(spark: SparkSession, landingDir: String, statePath: String,
+          checkpointDir: String, stages: Seq[String], windowMinutes: Int,
+          buckets: Int = 8): StreamingQuery = {
     import spark.implicits._
     val events = MicroBatch.landing(spark, eventSchema, landingDir)
       .filter(col("user_id").isNotNull && col("ts").isNotNull &&
@@ -117,21 +116,23 @@ object StreamFunnel {
       .as[FunnelEvent]
     MicroBatch.run(conversions(events, stages, windowMinutes), checkpointDir,
       OutputMode.Append) { (batch, batchId) =>
-      Layout.ensureBucketedBatchTable(spark, table, statePath, ConvCols,
-        Seq("user_id"), buckets)
-      Layout.overwriteBatch(batch.toDF(), table, batchId)
+      state(spark, statePath, buckets).overwrite(batch.toDF(), batchId)
     }
   }
+
+  private def state(spark: SparkSession, statePath: String,
+                    buckets: Int): BatchState =
+    BatchState.open(spark, statePath, ConvCols, Seq("user_id"), buckets)
 
   /** Per-stage funnel counts over every conversion accumulated so far —
     * the [[graft.ext.Funnels.eventFunnel]] output shape, computed from
     * O(conversions) state. Late markers (stage 0) are excluded here;
     * [[dropsNow]] serves them.
     */
-  def funnelNow(spark: SparkSession, table: String,
-                stages: Seq[String]): DataFrame = {
+  def funnelNow(spark: SparkSession, statePath: String, stages: Seq[String],
+                buckets: Int = 8): DataFrame = {
     import spark.implicits._
-    val counts = spark.table(table)
+    val counts = state(spark, statePath, buckets).all
       .filter(!col("late"))
       .groupBy(col("stage")).agg(count(lit(1)).cast("long").as("n_users"))
       .cpGuard() // three bounded consumers below (|stages| rows)
@@ -158,8 +159,9 @@ object StreamFunnel {
   }
 
   /** Per-batch per-user late-drop counts — the alertable meter. */
-  def dropsNow(spark: SparkSession, table: String): DataFrame =
-    spark.table(table).filter(col("late"))
+  def dropsNow(spark: SparkSession, statePath: String,
+               buckets: Int = 8): DataFrame =
+    state(spark, statePath, buckets).all.filter(col("late"))
       .groupBy(col("batch"), col("user_id"))
       .agg(count(lit(1)).as("n_dropped"))
 }

@@ -7,8 +7,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType, TimestampType}
 
-import graft.operators.Layout
-
 /** Streaming Holt linear-trend smoother — the stateful twin of the
   * batch [[graft.ext.TimeSeries.holt]] fold (query w32): as events
   * arrive, each user's (level, trend) advances by
@@ -114,9 +112,8 @@ object StreamHolt {
     }
   }
 
-  def run(spark: SparkSession, landingDir: String, table: String,
-          statePath: String, checkpointDir: String,
-          buckets: Int = 8): StreamingQuery = {
+  def run(spark: SparkSession, landingDir: String, statePath: String,
+          checkpointDir: String, buckets: Int = 8): StreamingQuery = {
     import spark.implicits._
     val events = MicroBatch.landing(spark, eventSchema, landingDir)
       .filter(col("user_id").isNotNull && col("ts").isNotNull &&
@@ -124,37 +121,33 @@ object StreamHolt {
       .as[HoltEvent]
     MicroBatch.run(snapshots(events), checkpointDir, OutputMode.Update) {
       (batch, batchId) =>
-        writeSnapshots(spark, batch.toDF(), batchId, table, statePath,
-          buckets)
+        writeSnapshots(spark, batch.toDF(), batchId, statePath, buckets)
     }
   }
 
   /** One idempotent per-batch write of the touched users' running
     * snapshots (public for replay tests). */
   def writeSnapshots(spark: SparkSession, snaps: DataFrame, batchId: Long,
-                     table: String, statePath: String,
-                     buckets: Int): Unit = {
-    Layout.ensureBucketedBatchTable(spark, table, statePath, SnapCols,
-      Seq("user_id"), buckets)
-    Layout.overwriteBatch(
-      snaps.select(col("user_id"), col("n"), col("level_s20"),
-        col("trend_s20"), col("n_dropped")), table, batchId)
-  }
+                     statePath: String, buckets: Int): Unit =
+    state(spark, statePath, buckets).overwrite(snaps, batchId)
+
+  private def state(spark: SparkSession, statePath: String,
+                    buckets: Int): BatchState =
+    BatchState.open(spark, statePath, SnapCols, Seq("user_id"), buckets)
 
   /** Latest running state per user, derived to doubles EXACTLY as the
     * batch w32 operator derives them — max_by over the batch id,
     * planned with ZERO Exchange over the user-bucketed history. */
-  def holtNow(spark: SparkSession, table: String): DataFrame = {
+  def holtNow(spark: SparkSession, statePath: String,
+              buckets: Int = 8): DataFrame = {
     val outDiv = 104857600.0 // 2^20 * 100 cents
-    spark.table(table)
-      .groupBy(col("user_id"))
-      .agg(max_by(struct(col("n"), col("level_s20"), col("trend_s20"),
-        col("n_dropped")), col("batch")).as("s"))
-      .select(col("user_id"), col("s.n").as("n"),
-        (col("s.level_s20").cast("double") / outDiv).as("level"),
-        (col("s.trend_s20").cast("double") / outDiv).as("trend"),
-        ((col("s.level_s20") + lit(4L) * col("s.trend_s20"))
+    state(spark, statePath, buckets)
+      .latest(Seq("user_id"), Seq("n", "level_s20", "trend_s20", "n_dropped"))
+      .select(col("user_id"), col("n"),
+        (col("level_s20").cast("double") / outDiv).as("level"),
+        (col("trend_s20").cast("double") / outDiv).as("trend"),
+        ((col("level_s20") + lit(4L) * col("trend_s20"))
           .cast("double") / outDiv).as("forecast4"),
-        col("s.n_dropped").as("n_dropped"))
+        col("n_dropped"))
   }
 }

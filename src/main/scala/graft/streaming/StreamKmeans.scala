@@ -5,8 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructField, StructType}
 
-import graft.operators.Layout
-
 /** Streaming MINI-BATCH k-means — the online twin of
   * [[graft.ext.Similarity.kmeansLloyd]] (Sculley WWW'10's mini-batch
   * update re-expressed as idempotent batch-keyed state): each arriving
@@ -52,9 +50,8 @@ object StreamKmeans {
                    stateDir: String, outDir: String, k: Int,
                    buckets: Int): Unit = {
     import spark.implicits._
-    val table = Layout.stateTableName("graft_kmeans_moments", stateDir)
-    Layout.ensureBucketedBatchTable(spark, table, s"$stateDir/moments",
-      MomentCols, Seq("c_id"), buckets)
+    val moments = BatchState.open(spark, s"$stateDir/moments", MomentCols,
+      Seq("c_id"), buckets)
     val quant = batch0
       .filter(col("vec_id").isNotNull && col("embedding").isNotNull)
       .select(col("vec_id"),
@@ -62,14 +59,12 @@ object StreamKmeans {
           x => floor(x.cast("double") * 1024d).cast("float")).as("qv"))
       .localCheckpoint()
     val seedPath = s"$stateDir/seed"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(seedPath), spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(seedPath))) {
-      // batch 0 (or its replay before any write): seed from this
-      // batch's k lowest ids — deterministic, so a replay re-derives
-      // the identical seed before the exists() check short-circuits.
-      // Validate BEFORE persisting: an undersized first batch must stay
-      // a transient failure, not wedge every later batch on a short seed.
+    MicroBatch.deriveOnce(spark, seedPath) {
+      // batch 0 (or its replay before the seed committed): seed from
+      // this batch's k lowest ids — deterministic, so a replay
+      // re-derives the identical seed. Validate BEFORE persisting: an
+      // undersized first batch must stay a transient failure, not wedge
+      // every later batch on a short seed.
       val rows = quant.orderBy(col("vec_id")).limit(k).collect()
       require(rows.length == k,
         s"first batch must carry at least k=$k vectors to seed, got ${rows.length}")
@@ -85,7 +80,7 @@ object StreamKmeans {
       .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
     require(seed.keys.map(_._1).toSet.size == k,
       s"seed table at $seedPath does not carry k=$k centroids")
-    val prior = spark.table(table).filter(col("batch") < batchId)
+    val prior = moments.before(batchId)
       .groupBy(col("c_id"), col("pos"))
       .agg(sum(col("s")).as("s"), sum(col("n")).as("n"))
       .collect().map(r => (r.getInt(0), r.getInt(1)) ->
@@ -109,11 +104,11 @@ object StreamKmeans {
       .agg(min_by(col("c_id"), struct(col("dist"), col("c_id"))).as("c_id"))
       .localCheckpoint() // feeds the output write AND the moment write
     MicroBatch.writeBatch(assigned.coalesce(1), outDir, batchId)
-    val moments = assigned
+    moments.overwrite(assigned
       .join(quant, "vec_id")
       .select(col("c_id"), posexplode(col("qv")).as(Seq("pos", "x")))
       .groupBy(col("c_id"), col("pos"))
-      .agg(sum(col("x").cast("long")).as("s"), count(lit(1)).as("n"))
-    Layout.overwriteBatch(moments, table, batchId)
+      .agg(sum(col("x").cast("long")).as("s"), count(lit(1)).as("n")),
+      batchId)
   }
 }

@@ -1,14 +1,11 @@
 package graft.streaming
 import graft.core.PlanCapture.CheckpointOps
 
-import java.security.MessageDigest
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ext.Dedup
-import graft.operators.Layout
 
 /** Streaming NOVELTY scoring — the grow-only first-occurrence shingle
   * index that [[graft.ext.TextAnalysis.noveltyScore]]'s batch form
@@ -30,20 +27,6 @@ import graft.operators.Layout
   */
 object StreamNovelty {
 
-  private[graft] def stateTableName(path: String): String =
-    "graft_novelty_" + MessageDigest.getInstance("MD5")
-      .digest(path.getBytes("UTF-8"))
-      .map(b => f"$b%02x").mkString.take(12)
-
-  private def ensureState(spark: SparkSession, path: String,
-                          buckets: Int): String = {
-    val table = stateTableName(path)
-    Layout.ensureBucketedBatchTable(spark, table, path,
-      Seq("s" -> "BIGINT", "first_doc" -> "BIGINT"),
-      Seq("s"), buckets)
-    table
-  }
-
   def run(spark: SparkSession, landingDir: String, stateDir: String,
           outDir: String, checkpointDir: String,
           buckets: Int = 8): StreamingQuery = {
@@ -59,7 +42,8 @@ object StreamNovelty {
   def processBatch(spark: SparkSession, batch0: DataFrame, batchId: Long,
                    stateDir: String, outDir: String,
                    buckets: Int = 8): Unit = {
-    val table = ensureState(spark, s"$stateDir/index", buckets)
+    val index = BatchState.open(spark, s"$stateDir/index",
+      Seq("s" -> "BIGINT", "first_doc" -> "BIGINT"), Seq("s"), buckets)
     val batch = batch0.filter(col("doc_id").isNotNull)
     // per-doc SORTED DISTINCT shingle hashes in one compiled pass
     // (the containmentDupAsym discipline), exploded to (doc_id, s)
@@ -68,8 +52,7 @@ object StreamNovelty {
         explode(graft.functions.ShingleHashesOf(col("text"),
           Dedup.ShingleSize)).as("s"))
       .cpGuard() // probe + claim + score all read it
-    val corpus = spark.table(table)
-      .filter(col("batch") < batchId).select(col("s"))
+    val corpus = index.before(batchId).select(col("s"))
     // shingles NEW to the corpus, claimed by the batch's smallest doc
     val fresh = sh.join(corpus, Seq("s"), "left_anti")
       .groupBy(col("s")).agg(min(col("doc_id")).as("first_doc"))
@@ -89,6 +72,6 @@ object StreamNovelty {
         (col("n_novel").cast("double") / col("n_shingles").cast("double"))
           .as("novelty"))
     MicroBatch.writeBatch(scores, outDir, batchId)
-    Layout.overwriteBatch(fresh, table, batchId)
+    index.overwrite(fresh, batchId)
   }
 }

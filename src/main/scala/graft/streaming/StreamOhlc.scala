@@ -7,8 +7,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType, TimestampType}
 
-import graft.operators.Layout
-
 /** Streaming OHLC bars — the stateful twin of the batch
   * [[graft.ext.TimeSeries.ohlc]] (query w25), keyed by (user, hour).
   *
@@ -112,9 +110,8 @@ object StreamOhlc {
     }
   }
 
-  def run(spark: SparkSession, landingDir: String, table: String,
-          statePath: String, checkpointDir: String,
-          buckets: Int = 8): StreamingQuery = {
+  def run(spark: SparkSession, landingDir: String, statePath: String,
+          checkpointDir: String, buckets: Int = 8): StreamingQuery = {
     import spark.implicits._
     val events = MicroBatch.landing(spark, eventSchema, landingDir)
       .filter(col("user_id").isNotNull && col("ts").isNotNull &&
@@ -122,33 +119,24 @@ object StreamOhlc {
       .as[OhlcEvent]
     MicroBatch.run(snapshots(events), checkpointDir, OutputMode.Update) {
       (batch, batchId) =>
-        writeSnapshots(spark, batch.toDF(), batchId, table, statePath,
-          buckets)
+        writeSnapshots(spark, batch.toDF(), batchId, statePath, buckets)
     }
   }
 
   def writeSnapshots(spark: SparkSession, snaps: DataFrame, batchId: Long,
-                     table: String, statePath: String,
-                     buckets: Int): Unit = {
-    Layout.ensureBucketedBatchTable(spark, table, statePath, SnapCols,
-      Seq("user_id"), buckets)
-    Layout.overwriteBatch(
-      snaps.select(col("user_id"), col("hour_us"), col("open"),
-        col("high"), col("low"), col("close"), col("vol_cents"),
-        col("n")), table, batchId)
-  }
+                     statePath: String, buckets: Int): Unit =
+    state(spark, statePath, buckets).overwrite(snaps, batchId)
+
+  private def state(spark: SparkSession, statePath: String,
+                    buckets: Int): BatchState =
+    BatchState.open(spark, statePath, SnapCols, Seq("user_id"), buckets)
 
   /** Latest bar per (user, hour) — zero-Exchange read is not claimed
     * here: the grouping key (user, hour) is finer than the bucket key
     * (user), so one narrow exchange may appear; user-bucketing still
     * co-locates each user's bars. */
-  def barsNow(spark: SparkSession, table: String): DataFrame =
-    spark.table(table)
-      .groupBy(col("user_id"), col("hour_us"))
-      .agg(max_by(struct(col("open"), col("high"), col("low"),
-        col("close"), col("vol_cents"), col("n")), col("batch")).as("s"))
-      .select(col("user_id"), col("hour_us"), col("s.open").as("open"),
-        col("s.high").as("high"), col("s.low").as("low"),
-        col("s.close").as("close"), col("s.vol_cents").as("vol_cents"),
-        col("s.n").as("n"))
+  def barsNow(spark: SparkSession, statePath: String,
+              buckets: Int = 8): DataFrame =
+    state(spark, statePath, buckets).latest(Seq("user_id", "hour_us"),
+      Seq("open", "high", "low", "close", "vol_cents", "n"))
 }

@@ -6,7 +6,6 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.ext.Graphs
-import graft.operators.Layout
 
 /** Streaming PageRank maintenance — the streaming twin of
   * [[graft.ext.Graphs.pageRankWarmStart]] (g26), closing the last
@@ -41,59 +40,57 @@ object StreamPageRank {
   private val RankCols: Seq[(String, String)] =
     Seq("k" -> "BIGINT", "r" -> "BIGINT")
 
-  def run(spark: SparkSession, landingDir: String, table: String,
-          statePath: String, checkpointDir: String, refreshIters: Int,
+  def run(spark: SparkSession, landingDir: String, statePath: String,
+          checkpointDir: String, refreshIters: Int,
           buckets: Int = 8): StreamingQuery =
     MicroBatch.run(MicroBatch.landing(spark, edgeSchema, landingDir)
         .filter(col("src").isNotNull && col("dst").isNotNull),
       checkpointDir, OutputMode.Append) { (batch, batchId) =>
-      processBatch(spark, batch, batchId, table, statePath,
-        refreshIters, buckets)
+      processBatch(spark, batch, batchId, statePath, refreshIters, buckets)
     }
 
   /** One idempotent micro-batch step (public for replay tests):
     * edge-delta write, then the warm rank refresh.
     */
   def processBatch(spark: SparkSession, transDf: DataFrame, batchId: Long,
-                   table: String, statePath: String, refreshIters: Int,
+                   statePath: String, refreshIters: Int,
                    buckets: Int): Unit = {
     StreamTransitions.writeEdges(spark, transDf.select(col("src"), col("dst")),
-      batchId, table, statePath, buckets)
-    refreshRanks(spark, table, statePath, batchId, refreshIters, buckets)
+      batchId, statePath, buckets)
+    refreshRanks(spark, statePath, batchId, refreshIters, buckets)
   }
 
   /** Warm-refresh the rank snapshot for `batchId` from the latest
     * strictly-earlier snapshot over edge partitions `<= batchId`.
     */
-  def refreshRanks(spark: SparkSession, table: String, statePath: String,
-                   batchId: Long, refreshIters: Int, buckets: Int): Unit = {
-    val ranksTable = s"${table}_ranks"
-    Layout.ensureBucketedBatchTable(spark, ranksTable, s"${statePath}_ranks",
-      RankCols, Seq("k"), buckets)
-    val edges = spark.table(table).filter(col("batch") <= batchId)
+  def refreshRanks(spark: SparkSession, statePath: String, batchId: Long,
+                   refreshIters: Int, buckets: Int): Unit = {
+    val ranks = rankState(spark, statePath, buckets)
+    val edges = StreamTransitions.edgeState(spark, statePath, buckets)
+      .through(batchId)
       .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))
-    val prior = spark.table(ranksTable).filter(col("batch") < batchId)
-    // bounded 1-row collect: which snapshot seeds this batch
-    val latest = prior.agg(max(col("batch"))).collect()(0)
-    val seed =
-      if (latest.isNullAt(0))
-        spark.range(0).select(col("id").as("k"), col("id").as("r"))
-      else prior.filter(col("batch") === latest.getLong(0))
-        .select(col("k"), col("r"))
-    val ranks = Graphs.pageRankRefresh(edges, seed, refreshIters)
-      .select(col("k"), col("r_warm").as("r"))
-    Layout.overwriteBatch(ranks, ranksTable, batchId)
+    val seed = newestSnapshot(ranks.before(batchId))
+    ranks.overwrite(Graphs.pageRankRefresh(edges, seed, refreshIters)
+      .select(col("k"), col("r_warm").as("r")), batchId)
   }
 
-  /** The freshest rank snapshot (k, r) — bounded 1-row collect for the
-    * latest batch id, then one partition read.
+  /** The freshest rank snapshot (k, r). */
+  def ranksNow(spark: SparkSession, statePath: String,
+               buckets: Int = 8): DataFrame =
+    newestSnapshot(rankState(spark, statePath, buckets).all)
+
+  /** (k, r) of the highest batch in `ranks` — empty when there is none;
+    * a bounded 1-row collect for the batch id, then one partition read.
     */
-  def ranksNow(spark: SparkSession, table: String): DataFrame = {
-    val ranks = spark.table(s"${table}_ranks")
+  private def newestSnapshot(ranks: DataFrame): DataFrame = {
     val latest = ranks.agg(max(col("batch"))).collect()(0)
     if (latest.isNullAt(0))
-      spark.range(0).select(col("id").as("k"), col("id").as("r"))
+      ranks.sparkSession.range(0).select(col("id").as("k"), col("id").as("r"))
     else ranks.filter(col("batch") === latest.getLong(0))
       .select(col("k"), col("r"))
   }
+
+  private def rankState(spark: SparkSession, statePath: String,
+                        buckets: Int): BatchState =
+    BatchState.open(spark, s"${statePath}_ranks", RankCols, Seq("k"), buckets)
 }

@@ -1,14 +1,11 @@
 package graft.streaming
 import graft.core.PlanCapture.CheckpointOps
 
-import java.security.MessageDigest
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ext.{Dedup, Multimodal}
-import graft.operators.Layout
 
 /** Streaming PERCEPTUAL dedup: image batches are dHash-fingerprinted
   * ([[Multimodal.dhash64]] — real codec decode) and probed against the
@@ -37,21 +34,6 @@ object StreamPhash {
         shiftright(col("fp"), Dedup.SimhashBandBits * k)
           .bitwiseAND(lit(Dedup.SimhashBandMask))): _*))
         .as(Seq("band_idx", "band_key")))
-
-  private[graft] def bandTableName(path: String): String =
-    "graft_phash_" + MessageDigest.getInstance("MD5")
-      .digest(path.getBytes("UTF-8"))
-      .map(b => f"$b%02x").mkString.take(12)
-
-  private def ensureState(spark: SparkSession, path: String,
-                          buckets: Int): String = {
-    val table = bandTableName(path)
-    Layout.ensureBucketedBatchTable(spark, table, path,
-      Seq("doc_id" -> "BIGINT", "fp" -> "BIGINT",
-        "band_idx" -> "INT", "band_key" -> "BIGINT"),
-      Seq("band_idx", "band_key"), buckets)
-    table
-  }
 
   /** Default hasher: the image path (synthetic pattern PNGs -> real
     * dHash decode). Any 64-bit fingerprint plugs in — [[audioHasher]]
@@ -92,9 +74,11 @@ object StreamPhash {
     val hashed = hasher(batch)
       .select(col("doc_id"), col("fp"))
       .cpGuard()
-    val table = ensureState(spark, s"$stateDir/bands", buckets)
-    val corpus = spark.table(table)
-      .filter(col("batch") < batchId).drop("batch")
+    val bands = BatchState.open(spark, s"$stateDir/bands",
+      Seq("doc_id" -> "BIGINT", "fp" -> "BIGINT",
+        "band_idx" -> "INT", "band_key" -> "BIGINT"),
+      Seq("band_idx", "band_key"), buckets)
+    val corpus = bands.before(batchId).drop("batch")
     val nb = bandsOf(hashed)
     val cross = Dedup.bandProbeJoin(corpus, nb).distinct()
       .join(hashed.toDF("doc_a", "fp_a"), "doc_a")
@@ -106,6 +90,6 @@ object StreamPhash {
     val intra = Dedup.fingerprintNearDup(hashed, minHamming = 0,
       maxHamming = maxHamming)
     MicroBatch.writeBatch(cross.unionByName(intra), outDir, batchId)
-    Layout.overwriteBatch(nb, table, batchId)
+    bands.overwrite(nb, batchId)
   }
 }

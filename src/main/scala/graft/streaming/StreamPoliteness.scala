@@ -5,8 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{StringType, StructField, StructType, TimestampType}
 
-import graft.operators.Layout
-
 /** Streaming crawl-politeness compliance — the incremental twin of
   * c41's gap audit ([[graft.ext.Curation.crawlPoliteness]]'s
   * violation/min-gap half): per-domain fetch events arrive in event
@@ -75,17 +73,13 @@ object StreamPoliteness {
         min(col("gap")).as("b_min_gap"),
         min(col("ms")).as("b_first"),
         max(col("ms")).as("b_last"))
-    val table = ensureState(spark, s"$stateDir/politeness", domainBuckets)
+    val st = state(spark, stateDir, domainBuckets)
     // latest cumulative row per domain from strictly earlier batches:
     // a partial-aggregable max_by over the domain-bucketed scan
-    val prior = spark.table(table)
-      .filter(col("batch") < batchId)
-      .groupBy(col("domain"))
-      .agg(max_by(struct(col("n_fetches"), col("n_violations"),
-        col("min_gap_ms"), col("last_ms")), col("batch")).as("s"))
-      .select(col("domain"), col("s.n_fetches").as("p_n"),
-        col("s.n_violations").as("p_viol"),
-        col("s.min_gap_ms").as("p_min_gap"), col("s.last_ms").as("p_last"))
+    val prior = st.latest(Seq("domain"), StateVals, st.before(batchId))
+      .select(col("domain"), col("n_fetches").as("p_n"),
+        col("n_violations").as("p_viol"),
+        col("min_gap_ms").as("p_min_gap"), col("last_ms").as("p_last"))
     // out-of-order arrival ACROSS batches (a batch's first event for a
     // domain preceding the prior state's last) would make bgap negative
     // — silently counted as a violation and poisoning min_gap_ms, while
@@ -114,7 +108,7 @@ object StreamPoliteness {
           .as("min_gap_ms"),
         greatest(coalesce(col("p_last"), col("b_last")), col("b_last"))
           .as("last_ms"))
-    Layout.overwriteBatch(merged, table, batchId)
+    st.overwrite(merged, batchId)
   }
 
   /** Current per-domain compliance snapshot: the highest-batch row per
@@ -123,27 +117,17 @@ object StreamPoliteness {
     */
   def snapshot(spark: SparkSession, stateDir: String,
                domainBuckets: Int = DefaultDomainBuckets): DataFrame =
-    spark.table(ensureState(spark, s"$stateDir/politeness", domainBuckets))
-      .groupBy(col("domain"))
-      .agg(max_by(struct(col("n_fetches"), col("n_violations"),
-        col("min_gap_ms"), col("last_ms")), col("batch")).as("s"))
-      .select(col("domain"), col("s.n_fetches").as("n_fetches"),
-        col("s.n_violations").as("n_violations"),
-        col("s.min_gap_ms").as("min_gap_ms"),
-        (col("s.n_violations") === 0L).as("compliant"))
+    state(spark, stateDir, domainBuckets).latest(Seq("domain"), StateVals)
+      .select(col("domain"), col("n_fetches"), col("n_violations"),
+        col("min_gap_ms"), (col("n_violations") === 0L).as("compliant"))
       .orderBy(col("domain"))
 
-  private[graft] def stateTable(path: String): String =
-    Layout.stateTableName("graft_politeness", path)
+  private val StateVals = Seq("n_fetches", "n_violations", "min_gap_ms",
+    "last_ms")
 
-  private def ensureState(spark: SparkSession, path: String,
-                          buckets: Int): String = {
-    val table = stateTable(path)
-    Layout.ensureBucketedBatchTable(spark, table, path,
-      Seq("domain" -> "STRING", "n_fetches" -> "BIGINT",
-        "n_violations" -> "BIGINT", "min_gap_ms" -> "BIGINT",
-        "last_ms" -> "BIGINT"),
+  private def state(spark: SparkSession, stateDir: String,
+                    buckets: Int): BatchState =
+    BatchState.open(spark, s"$stateDir/politeness",
+      ("domain" -> "STRING") +: StateVals.map(_ -> "BIGINT"),
       Seq("domain"), buckets)
-    table
-  }
 }

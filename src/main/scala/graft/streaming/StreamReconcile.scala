@@ -1,16 +1,12 @@
 package graft.streaming
 import graft.core.PlanCapture.CheckpointOps
 
-import java.security.MessageDigest
-
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.ext.Reconcile
-import graft.operators.Layout
 
 /** Streaming Merkle-style replica reconciliation — the continuous twin
   * of [[Reconcile.tableDiff]] (d24): a replica's rows arrive as
@@ -21,11 +17,11 @@ import graft.operators.Layout
   * Why it scales: [[Reconcile.bucketDigests]] digests are
   * order-independent h32 SUMS, so they are mergeable — each micro-batch
   * contributes one bounded (≤ buckets rows) digest row-set, persisted
-  * into a batch partition of a digest table BUCKETED by `bucket`
-  * ([[Layout.ensureBucketedBatchTable]]). The accumulated corpus digest
-  * is then a groupBy(bucket) SUM over that table, which plans with NO
-  * Exchange (the file bucketing IS the grouping key): per-batch work is
-  * O(batch rows) + O(buckets summary rows), never O(corpus). The
+  * into a batch partition of a digest [[BatchState]] BUCKETED by
+  * `bucket`. The accumulated corpus digest is then a groupBy(bucket)
+  * SUM over that table, which plans with NO Exchange (the file
+  * bucketing IS the grouping key): per-batch work is O(batch rows) +
+  * O(buckets summary rows), never O(corpus). The
   * reference side is digested ONCE (at the stream's reference epoch)
   * and re-read as `buckets` rows per batch.
   *
@@ -70,13 +66,13 @@ object StreamReconcile {
                    keyCol: String = "doc_id",
                    cols: Seq[String] = Seq("doc_id", "text")): Unit = {
     val batch = batch0.filter(col(keyCol).isNotNull)
-    val digTable = ensureDigestState(spark, s"$stateDir/digests")
+    val digests = digestState(spark, stateDir)
     val refDigests = ensureRefDigests(spark, refPath, s"$stateDir/ref_digests",
       buckets, keyCol, cols)
     // checkpointed: referenced by both the merged total and the state write
     val batchDig = Reconcile.bucketDigests(batch, keyCol, cols, buckets)
       .cpGuard()
-    val total = corpusDigests(spark, digTable, batchId)
+    val total = corpusDigests(spark, stateDir, batchId)
       .unionByName(batchDig)
       // second-level merge over ≤ 2 x buckets SUMMARY rows — the only
       // thing that shuffles besides the O(batch) digest itself
@@ -92,17 +88,16 @@ object StreamReconcile {
       .withColumn("is_match",
         col("n_a") === col("n_b") && col("digest_a") === col("digest_b"))
     MicroBatch.writeBatch(report, outDir, batchId)
-    Layout.overwriteBatch(batchDig, digTable, batchId)
+    digests.overwrite(batchDig, batchId)
   }
 
   /** The accumulated per-bucket digest of batches `< batchId` — a
     * groupBy(bucket) over the bucket-partitioned digest table, which
     * plans with NO Exchange however many batches have accumulated.
     */
-  private[graft] def corpusDigests(spark: SparkSession, digTable: String,
+  private[graft] def corpusDigests(spark: SparkSession, stateDir: String,
                                    batchId: Long): DataFrame =
-    spark.table(digTable)
-      .filter(col("batch") < batchId)
+    digestState(spark, stateDir).before(batchId)
       .groupBy(col("bucket"))
       .agg(sum(col("n")).as("n"), sum(col("digest")).as("digest"))
 
@@ -114,15 +109,7 @@ object StreamReconcile {
   private def ensureRefDigests(spark: SparkSession, refPath: String,
                                refDigPath: String, buckets: Int,
                                keyCol: String, cols: Seq[String]): DataFrame = {
-    val p = new Path(refDigPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // Guard on the COMMIT marker, not bare existence: a crash mid-write
-    // leaves the directory present but uncommitted, and a bare
-    // fs.exists guard would pin that unreadable state forever (the
-    // ensurePlanes poison class). Uncommitted → wipe and re-derive; the
-    // derivation is deterministic, so a re-write is byte-identical.
-    if (!fs.exists(new Path(p, "_SUCCESS"))) {
-      fs.delete(p, true)
+    MicroBatch.deriveOnce(spark, refDigPath) {
       Reconcile.bucketDigests(spark.read.parquet(refPath), keyCol, cols, buckets)
         .write.mode("overwrite").parquet(refDigPath)
     }
@@ -130,16 +117,8 @@ object StreamReconcile {
       .select(col("bucket"), col("n").as("n_b"), col("digest").as("digest_b"))
   }
 
-  private[graft] def digestTableName(path: String): String =
-    "graft_rdigests_" + MessageDigest.getInstance("MD5")
-      .digest(path.getBytes("UTF-8"))
-      .map(b => f"$b%02x").mkString.take(12)
-
-  private def ensureDigestState(spark: SparkSession, path: String): String = {
-    val table = digestTableName(path)
-    Layout.ensureBucketedBatchTable(spark, table, path,
+  private def digestState(spark: SparkSession, stateDir: String): BatchState =
+    BatchState.open(spark, s"$stateDir/digests",
       Seq("bucket" -> "BIGINT", "n" -> "BIGINT", "digest" -> "BIGINT"),
       Seq("bucket"), DefaultFileBuckets)
-    table
-  }
 }

@@ -6,7 +6,6 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.ext.{Dedup, TextOps}
-import graft.operators.Layout
 
 /** Streaming boilerplate-lexicon maintenance — the incremental form of
   * [[graft.ext.TextAnalysis.boilerplateCoverage]]'s cross-doc lexicon:
@@ -35,36 +34,37 @@ object StreamScrub {
   val DeltaCols: Seq[(String, String)] = Seq(
     "s" -> "STRING", "nd" -> "BIGINT")
 
-  def run(spark: SparkSession, landingDir: String, table: String,
-          statePath: String, checkpointDir: String,
-          n: Int = Dedup.ShingleSize, buckets: Int = 8): StreamingQuery = {
+  def run(spark: SparkSession, landingDir: String, statePath: String,
+          checkpointDir: String, n: Int = Dedup.ShingleSize,
+          buckets: Int = 8): StreamingQuery = {
     MicroBatch.run(MicroBatch.landing(spark, docSchema, landingDir)
         .filter(col("doc_id").isNotNull && col("text").isNotNull),
       checkpointDir, OutputMode.Append) { (batch, batchId) =>
-      writeDeltas(spark, batch, batchId, table, statePath, n, buckets)
+      writeDeltas(spark, batch, batchId, statePath, n, buckets)
     }
   }
 
   /** One idempotent per-shingle distinct-doc-count delta write. */
   def writeDeltas(spark: SparkSession, docs: DataFrame, batchId: Long,
-                  table: String, statePath: String, n: Int,
-                  buckets: Int): Unit = {
-    Layout.ensureBucketedBatchTable(spark, table, statePath, DeltaCols,
-      Seq("s"), buckets)
+                  statePath: String, n: Int, buckets: Int): Unit = {
     val delta = docs
       .select(col("doc_id"),
         explode(TextOps.wordShingles(col("text"), n)).as("s"))
       .groupBy(col("s")).agg(countDistinct(col("doc_id")).as("nd"))
-    Layout.overwriteBatch(delta, table, batchId)
+    state(spark, statePath, buckets).overwrite(delta, batchId)
   }
+
+  private def state(spark: SparkSession, statePath: String,
+                    buckets: Int): BatchState =
+    BatchState.open(spark, statePath, DeltaCols, Seq("s"), buckets)
 
   /** The accumulated boilerplate lexicon: shingles in >= minDocs
     * distinct docs so far. Zero Exchange on the delta fold —
     * bucketing on `s` co-locates each shingle's per-batch counts.
     */
-  def lexiconNow(spark: SparkSession, table: String,
-                 minDocs: Long): DataFrame =
-    spark.table(table)
+  def lexiconNow(spark: SparkSession, statePath: String, minDocs: Long,
+                 buckets: Int = 8): DataFrame =
+    state(spark, statePath, buckets).all
       .groupBy(col("s")).agg(sum(col("nd")).as("nd"))
       .filter(col("nd") >= minDocs)
       .select(col("s"))
@@ -73,16 +73,17 @@ object StreamScrub {
     * interval-union coverage rule. Output: (doc_id, n_tokens, covered,
     * frac) for every doc.
     */
-  def coverageNow(spark: SparkSession, table: String, docs: DataFrame,
-                  n: Int = Dedup.ShingleSize,
-                  minDocs: Long = 20L): DataFrame = {
+  def coverageNow(spark: SparkSession, statePath: String, docs: DataFrame,
+                  n: Int = Dedup.ShingleSize, minDocs: Long = 20L,
+                  buckets: Int = 8): DataFrame = {
     val sh = graft.core.Tables.spread(docs)
       .select(col("doc_id"),
         posexplode(TextOps.allWordShingles(col("text"), n)).as(Seq("pos", "s")))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("doc_id")).orderBy(col("pos"))
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    val covered = sh.join(lexiconNow(spark, table, minDocs), Seq("s"))
+    val covered = sh.join(lexiconNow(spark, statePath, minDocs, buckets),
+        Seq("s"))
       .withColumn("prev_end", coalesce(max(col("pos") + n).over(w), col("pos")))
       .withColumn("contrib",
         greatest(lit(0), col("pos") + n - greatest(col("pos"), col("prev_end"))))

@@ -1,9 +1,6 @@
 package graft.streaming
 import graft.core.PlanCapture.CheckpointOps
 
-import java.security.MessageDigest
-
-import scala.util.Try
 import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.Path
@@ -13,7 +10,6 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructField, StructType}
 
 import graft.ext.Similarity
-import graft.operators.Layout
 
 /** Streaming EMBEDDING near-duplicate detection — the dense twin of
   * [[StreamDedup]]: vector batches arriving as files are deduplicated
@@ -26,8 +22,8 @@ import graft.operators.Layout
   * batch buckets identically forever (re-bucketing under new planes
   * would orphan the accumulated bucket state). State is the raw
   * vectors (exact-verify side; plain batch-keyed parquet) and the
-  * bucket table — an external table BUCKETED by `bucket`
-  * ([[Layout.ensureBucketedBatchTable]]), so the corpus side of every
+  * bucket table — a [[BatchState]] BUCKETED by `bucket`, so the
+  * corpus side of every
   * per-batch probe joins with NO Exchange; only the O(batch) new side
   * shuffles. Per-batch work is O(batch), never O(corpus).
   *
@@ -65,19 +61,16 @@ object StreamSimilarity {
     try {
       StreamDedup.refuseFlatLegacyDir(spark, outDir)
       val vecsPath = s"$stateDir/vecs"
-      val table = ensureBucketState(spark, s"$stateDir/buckets", bucketBuckets)
+      val bucketState = BatchState.open(spark, s"$stateDir/buckets",
+        Seq("vec_id" -> "BIGINT", "bucket" -> "BIGINT"), Seq("bucket"),
+        bucketBuckets)
       val planes = ensurePlanes(spark, s"$stateDir/planes", batch, nPlanes)
       val nb = batch
         .select(col("vec_id"),
           Similarity.hyperplaneBucket(col("embedding"), planes).as("bucket"))
         .cpGuard() // probe + self-join + state write
-      val corpusBuckets = spark.table(table)
-        .filter(col("batch") < batchId).drop("batch")
-      val corpusVecs = Try(spark.read.parquet(vecsPath)).toOption.map { df =>
-        if (df.columns.contains("batch"))
-          df.filter(col("batch") < batchId).drop("batch")
-        else df
-      }
+      val corpusBuckets = bucketState.before(batchId).drop("batch")
+      val corpusVecs = MicroBatch.readBefore(spark, vecsPath, batchId)
       val crossDups = corpusVecs.map { cv =>
         val cand = nb.select(col("vec_id").as("a_id"), col("bucket"))
           .join(corpusBuckets.select(col("vec_id").as("b_id"), col("bucket")),
@@ -92,13 +85,13 @@ object StreamSimilarity {
       val all = crossDups.map(_.unionByName(intraDups)).getOrElse(intraDups)
       // the three per-batch writes are independent (the dup output
       // reads the CHECKPOINTED nb + the persisted batch; the bucket and
-      // vector states are disjoint paths, and only overwriteBatch
-      // touches the catalog): overlap their jobs (guide §2.6) so one
+      // vector states are disjoint paths, and only the BatchState
+      // overwrite touches the catalog): overlap their jobs (guide §2.6) so one
       // write's task tail back-fills the next — per-batch latency is
       // this operator's product. Values unchanged by construction.
       graft.core.Par.eval3(
         MicroBatch.writeBatch(all, outDir, batchId),
-        Layout.overwriteBatch(nb, table, batchId),
+        bucketState.overwrite(nb, batchId),
         MicroBatch.writeBatch(batch.select(col("vec_id"), col("embedding")),
           vecsPath, batchId))
     } finally {
@@ -135,20 +128,13 @@ object StreamSimilarity {
     */
   private def ensurePlanes(spark: SparkSession, planesPath: String,
                            batch: DataFrame, nPlanes: Int): Seq[Array[Float]] = {
-    val p = new Path(planesPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // commit-marker guard (not bare existence): a crash mid-write must
-    // not pin an uncommitted, unreadable plane dir forever
-    if (!fs.exists(new Path(p, "_SUCCESS"))) {
-      fs.delete(p, true)
-    }
-    if (!fs.exists(p)) {
+    MicroBatch.deriveOnce(spark, planesPath) {
       val derived = batch.select(col("vec_id"), col("embedding"))
         .orderBy(col("vec_id")).limit(nPlanes) // TakeOrdered: bounded
         .persist()
       try {
         // An empty batch must NOT persist an empty plane set — the
-        // fs.exists guard would pin it forever and poison every later
+        // committed guard would pin it forever and poison every later
         // batch. Skip the write so the first data-bearing batch derives.
         require(!derived.isEmpty,
           "no hyperplanes: this batch was empty; planes will derive " +
@@ -162,25 +148,12 @@ object StreamSimilarity {
     if (planes.isEmpty) {
       // A pre-fix run may have persisted an empty plane set; unpoison by
       // deleting so the next batch can re-derive, then fail this one.
-      fs.delete(p, true)
+      val p = new Path(planesPath)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
       throw new IllegalStateException(
         s"persisted planes at $planesPath were empty (pre-migration " +
         "poison state); deleted — the next non-empty batch re-derives")
     }
     planes
   }
-
-  private def ensureBucketState(spark: SparkSession, path: String,
-                                buckets: Int): String = {
-    val table = bucketTableName(path)
-    Layout.ensureBucketedBatchTable(spark, table, path,
-      Seq("vec_id" -> "BIGINT", "bucket" -> "BIGINT"),
-      Seq("bucket"), buckets)
-    table
-  }
-
-  private[graft] def bucketTableName(path: String): String =
-    "graft_vbuckets_" + MessageDigest.getInstance("MD5")
-      .digest(path.getBytes("UTF-8"))
-      .map(b => f"$b%02x").mkString.take(12)
 }

@@ -8,7 +8,6 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType, TimestampType}
 
 import graft.core.PlanCapture.CheckpointOps
-import graft.operators.Layout
 
 /** Streaming derivation of the per-user transition edge list — the
   * stateful streaming twin of the lag-window `eventEdges` build that
@@ -131,9 +130,8 @@ object StreamTransitions {
     emits(events).filter(!_.late).map(e => Transition(e.src, e.dst))
   }
 
-  def run(spark: SparkSession, landingDir: String, table: String,
-          statePath: String, checkpointDir: String,
-          buckets: Int = 8): StreamingQuery = {
+  def run(spark: SparkSession, landingDir: String, statePath: String,
+          checkpointDir: String, buckets: Int = 8): StreamingQuery = {
     import spark.implicits._
     val events = MicroBatch.landing(spark, eventSchema, landingDir)
       .filter(col("user_id").isNotNull && col("ts").isNotNull &&
@@ -146,8 +144,8 @@ object StreamTransitions {
         // recompute the stateful fold)
         val b = batch.toDF().cpGuard()
         writeEdges(spark, b.filter(!col("late"))
-          .select(col("src"), col("dst")), batchId, table, statePath, buckets)
-        writeDrops(spark, b, batchId, table, statePath, buckets)
+          .select(col("src"), col("dst")), batchId, statePath, buckets)
+        writeDrops(spark, b, batchId, statePath, buckets)
     }
   }
 
@@ -156,38 +154,43 @@ object StreamTransitions {
     * empty partition when nothing was late) so "no row for batch b"
     * means "batch b not processed", never "no drops". */
   def writeDrops(spark: SparkSession, emitsDf: DataFrame, batchId: Long,
-                 table: String, statePath: String, buckets: Int): Unit = {
-    Layout.ensureBucketedBatchTable(spark, s"${table}_drops",
-      s"${statePath}_drops", DropCols, Seq("user_id"), buckets)
-    val agg = emitsDf.filter(col("late"))
-      .groupBy(col("user_id")).agg(count(lit(1)).as("n_dropped"))
-    Layout.overwriteBatch(agg, s"${table}_drops", batchId)
-  }
+                 statePath: String, buckets: Int): Unit =
+    dropState(spark, statePath, buckets).overwrite(emitsDf.filter(col("late"))
+      .groupBy(col("user_id")).agg(count(lit(1)).as("n_dropped")), batchId)
 
   /** Per-batch per-user dropped-event counts (batch, user_id,
     * n_dropped) — the alertable signal that upstream ordering broke. */
-  def dropsNow(spark: SparkSession, table: String): DataFrame =
-    spark.table(s"${table}_drops")
+  def dropsNow(spark: SparkSession, statePath: String,
+               buckets: Int = 8): DataFrame =
+    dropState(spark, statePath, buckets).all
       .select(col("batch"), col("user_id"), col("n_dropped"))
+
+  private def dropState(spark: SparkSession, statePath: String,
+                        buckets: Int): BatchState =
+    BatchState.open(spark, s"${statePath}_drops", DropCols, Seq("user_id"),
+      buckets)
 
   /** One idempotent edge-delta write (public for replay tests). */
   def writeEdges(spark: SparkSession, transDf: DataFrame, batchId: Long,
-                 table: String, statePath: String, buckets: Int): Unit = {
-    Layout.ensureBucketedBatchTable(spark, table, statePath, EdgeCols,
-      Seq("src"), buckets)
-    val agg = transDf.groupBy(col("src"), col("dst"))
-      .agg(count(lit(1)).as("w"))
-    Layout.overwriteBatch(agg, table, batchId)
-  }
+                 statePath: String, buckets: Int): Unit =
+    edgeState(spark, statePath, buckets).overwrite(transDf
+      .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w")), batchId)
+
+  /** The src-bucketed edge-delta state (shared with [[StreamPageRank]]). */
+  private[streaming] def edgeState(spark: SparkSession, statePath: String,
+                                   buckets: Int): BatchState =
+    BatchState.open(spark, statePath, EdgeCols, Seq("src"), buckets)
 
   /** The accumulated weighted edge list — zero Exchange: partitioning
     * on the src bucket key co-locates every (src, dst) group
     * (spec-asserted). */
-  def edgesNow(spark: SparkSession, table: String): DataFrame =
-    spark.table(table).groupBy(col("src"), col("dst"))
+  def edgesNow(spark: SparkSession, statePath: String,
+               buckets: Int = 8): DataFrame =
+    edgeState(spark, statePath, buckets).all.groupBy(col("src"), col("dst"))
       .agg(sum(col("w")).as("w"))
 
   /** PageRank over the graph as accumulated so far. */
-  def ranksNow(spark: SparkSession, table: String, iters: Int): DataFrame =
-    graft.ext.Graphs.pageRank(edgesNow(spark, table), iters)
+  def ranksNow(spark: SparkSession, statePath: String, iters: Int,
+               buckets: Int = 8): DataFrame =
+    graft.ext.Graphs.pageRank(edgesNow(spark, statePath, buckets), iters)
 }

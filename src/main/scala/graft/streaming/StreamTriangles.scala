@@ -6,7 +6,6 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.ext.Graphs
-import graft.operators.Layout
 
 /** Streaming incremental triangle counting — the graph-family member
   * of the incremental-twin family (StreamDedup / StreamAnnIngest /
@@ -17,11 +16,10 @@ import graft.operators.Layout
   * to a delta table, and the batch's genuinely-new simple edges join
   * the edge state.
   *
-  * State = ONE batch-partitioned table of simple undirected edges
-  * ([[Layout.ensureBucketedBatchTable]], bucketed by `a` for the
-  * novelty anti-join). [[MicroBatch]] is AT-LEAST-ONCE, so every write
-  * is keyed by batch id and the state a batch reads is restricted to
-  * STRICTLY EARLIER batches (the StreamDedup replay contract): a
+  * State = ONE [[BatchState]] of simple undirected edges, bucketed by
+  * `a` for the novelty anti-join. [[MicroBatch]] is AT-LEAST-ONCE, so
+  * every write is keyed by batch id and the state a batch reads is
+  * restricted to STRICTLY EARLIER batches (the StreamDedup replay contract): a
   * replayed batch recomputes the identical delta against the identical
   * prior state and overwrites its own partitions byte-identically.
   *
@@ -54,11 +52,8 @@ object StreamTriangles {
   def processBatch(spark: SparkSession, batch: DataFrame, batchId: Long,
                    stateDir: String, outDir: String,
                    buckets: Int): Unit = {
-    val table = Layout.stateTableName("graft_tri_edges", stateDir)
-    Layout.ensureBucketedBatchTable(spark, table, stateDir,
-      EdgeCols, Seq("a"), buckets)
-    val prior = spark.table(table)
-      .filter(col("batch") < batchId)
+    val edges = BatchState.open(spark, stateDir, EdgeCols, Seq("a"), buckets)
+    val prior = edges.before(batchId)
       .select(col("a").as("src"), col("b").as("dst"))
     val batchEdges = batch
       .filter(col("src").isNotNull && col("dst").isNotNull)
@@ -72,6 +67,6 @@ object StreamTriangles {
       .distinct()
       .join(prior.select(col("src").as("a"), col("dst").as("b")),
         Seq("a", "b"), "left_anti")
-    Layout.overwriteBatch(simple, table, batchId)
+    edges.overwrite(simple, batchId)
   }
 }

@@ -5,8 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType, TimestampType}
 
-import graft.operators.Layout
-
 /** Streaming CDC upsert / current-state materialization — the
   * streaming twin of the w16 SCD2 build and the engine-native shape of
   * a lakehouse MERGE INTO: a change stream of (user_id, ts, event_id,
@@ -20,8 +18,8 @@ import graft.operators.Layout
   * user_id-BUCKETED table; the current-state snapshot is then one
   * groupBy(user_id) argmax over ALL batches, which plans with ZERO
   * Exchange because the state table is already bucketed by the group
-  * key ([[Layout.ensureBucketedBatchTable]] — the same contract as
-  * StreamDedup's band state).
+  * key (a [[BatchState]] — the same contract as StreamDedup's band
+  * state).
   *
   * Latest is by EVENT time under the deterministic total order
   * (ts, event_id), not by arrival: a late-arriving older change can
@@ -41,13 +39,12 @@ object StreamUpsert {
     "user_id" -> "BIGINT", "ts" -> "TIMESTAMP",
     "event_id" -> "BIGINT", "k" -> "INT")
 
-  def run(spark: SparkSession, landingDir: String, table: String,
-          statePath: String, snapshotDir: String, checkpointDir: String,
+  def run(spark: SparkSession, landingDir: String, statePath: String,
+          snapshotDir: String, checkpointDir: String,
           buckets: Int = 8): StreamingQuery = {
     MicroBatch.run(spark, changeSchema, landingDir, checkpointDir) {
       (batch, batchId) =>
-        processBatch(spark, batch, batchId, table, statePath, snapshotDir,
-          buckets)
+        processBatch(spark, batch, batchId, statePath, snapshotDir, buckets)
     }
   }
 
@@ -61,20 +58,23 @@ object StreamUpsert {
 
   /** The live current-state view over the persisted change table:
     * groupBy on the bucket key — zero Exchange (spec-asserted). */
-  def currentState(spark: SparkSession, table: String): DataFrame =
-    latestPerUser(spark.table(table))
+  def currentState(spark: SparkSession, statePath: String,
+                   buckets: Int = 8): DataFrame =
+    latestPerUser(state(spark, statePath, buckets).all)
+
+  private def state(spark: SparkSession, statePath: String,
+                    buckets: Int): BatchState =
+    BatchState.open(spark, statePath, StateCols, Seq("user_id"), buckets)
 
   /** One idempotent micro-batch step (public for replay tests). */
   def processBatch(spark: SparkSession, batch: DataFrame, batchId: Long,
-                   table: String, statePath: String, snapshotDir: String,
+                   statePath: String, snapshotDir: String,
                    buckets: Int): Unit = {
-    Layout.ensureBucketedBatchTable(spark, table, statePath, StateCols,
-      Seq("user_id"), buckets)
     val clean = batch.filter(col("user_id").isNotNull &&
       col("ts").isNotNull && col("event_id").isNotNull &&
       col("k").isNotNull)
-    Layout.overwriteBatch(latestPerUser(clean), table, batchId)
-    currentState(spark, table)
+    state(spark, statePath, buckets).overwrite(latestPerUser(clean), batchId)
+    currentState(spark, statePath, buckets)
       .write.mode("overwrite").parquet(snapshotDir)
   }
 }

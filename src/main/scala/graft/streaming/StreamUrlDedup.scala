@@ -6,7 +6,6 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.ext.Curation
-import graft.operators.Layout
 
 /** Streaming URL-frontier dedup — the incremental twin of c39
   * ([[Curation.urlDedup]]), the stage a crawler runs BEFORE paying to
@@ -18,9 +17,8 @@ import graft.operators.Layout
   * order, so first-arrived IS lowest — the split-cohort equivalence
   * the spec pins).
   *
-  * State is ONE table: (norm_url, domain, keep_doc), BUCKETED by
-  * norm_url ([[Layout.ensureBucketedBatchTable]]) and partitioned by
-  * batch — each batch probes it with norm_url equi-joins, so the
+  * State is ONE [[BatchState]]: (norm_url, domain, keep_doc), BUCKETED
+  * by norm_url — each batch probes it with norm_url equi-joins, so the
   * corpus side of every probe plans with NO Exchange: only the
   * O(batch) arriving side shuffles, and per-batch work is O(batch),
   * never O(frontier).
@@ -87,9 +85,8 @@ object StreamUrlDedup {
       .select(col("doc_id"), col("norm_url"), col("domain"))
       .persist()
     try {
-      val table = ensureUrlState(spark, s"$stateDir/urls", urlBuckets)
-      val seen = spark.table(table)
-        .filter(col("batch") < batchId).drop("batch")
+      val state = urls(spark, stateDir, urlBuckets)
+      val seen = state.before(batchId).drop("batch")
       // cross-batch drops: the state's keeper wins, whatever this
       // batch's ids are (first fetch already happened)
       val crossDrops = normed
@@ -108,9 +105,7 @@ object StreamUrlDedup {
           col("keep_doc"))
       MicroBatch.writeBatch(crossDrops.unionByName(intraDrops), outDir,
         batchId)
-      Layout.overwriteBatch(
-        keepers.select(col("norm_url"), col("domain"), col("keep_doc")),
-        table, batchId)
+      state.overwrite(keepers, batchId)
     } finally {
       try normed.unpersist()
       catch { case scala.util.control.NonFatal(_) => }
@@ -149,9 +144,8 @@ object StreamUrlDedup {
     */
   def compactState(spark: SparkSession, stateDir: String, upToBatch: Long,
                    urlBuckets: Int = DefaultUrlBuckets): Unit = {
-    val path = s"$stateDir/urls"
-    val table = ensureUrlState(spark, path, urlBuckets)
-    val batches = spark.table(table).select(col("batch")).distinct()
+    val state = urls(spark, stateDir, urlBuckets)
+    val batches = state.all.select(col("batch")).distinct()
       .collect().map(_.getLong(0)).sorted.toSeq
     if (batches.nonEmpty) {
       require(upToBatch < batches.max,
@@ -160,24 +154,18 @@ object StreamUrlDedup {
           "replay against strictly-earlier state")
       val old = batches.filter(_ < upToBatch)
       if (old.nonEmpty) {
-        val (mpath, conf) = compactingMarker(spark, path)
+        val (mpath, conf) = compactingMarker(spark, state.path)
         val fs = mpath.getFileSystem(conf)
         fs.create(mpath, true).close() // raise the in-progress flag
         // materialize BEFORE overwriting a partition the plan reads;
         // distinct rides the norm_url buckets (subset clustering) and
         // re-absorbs double rows left by a crashed prior compaction
-        val merged = spark.table(table)
-          .filter(col("batch") <= upToBatch)
+        val merged = state.through(upToBatch)
           .select(col("norm_url"), col("domain"), col("keep_doc"))
           .distinct()
           .localCheckpoint()
-        Layout.overwriteBatch(merged, table, upToBatch)
-        old.foreach { b =>
-          spark.sql(s"ALTER TABLE $table DROP IF EXISTS PARTITION (batch=$b)")
-          fs.delete(
-            new org.apache.hadoop.fs.Path(MicroBatch.partition(path, b)), true)
-          ()
-        }
+        state.overwrite(merged, upToBatch)
+        old.foreach(state.dropBatch)
         fs.delete(mpath, false) // state is single-copy again
         ()
       }
@@ -192,7 +180,14 @@ object StreamUrlDedup {
     */
   def urlState(spark: SparkSession, stateDir: String,
                urlBuckets: Int = DefaultUrlBuckets): DataFrame =
-    spark.table(ensureUrlState(spark, s"$stateDir/urls", urlBuckets))
+    urls(spark, stateDir, urlBuckets).all
+
+  private def urls(spark: SparkSession, stateDir: String,
+                   buckets: Int): BatchState =
+    BatchState.open(spark, s"$stateDir/urls",
+      Seq("norm_url" -> "STRING", "domain" -> "STRING",
+        "keep_doc" -> "BIGINT"),
+      Seq("norm_url"), buckets)
 
   /** The compaction-in-progress marker for the state table at `path`:
     * (marker path, hadoop conf). Underscore-prefixed, so Spark's file
@@ -202,18 +197,4 @@ object StreamUrlDedup {
       : (org.apache.hadoop.fs.Path, org.apache.hadoop.conf.Configuration) =
     (new org.apache.hadoop.fs.Path(path, "_COMPACTING"),
       spark.sparkContext.hadoopConfiguration)
-
-  /** Catalog name for the seen-URL state table over `path`. */
-  private[graft] def urlTableName(path: String): String =
-    Layout.stateTableName("graft_urls", path)
-
-  private def ensureUrlState(spark: SparkSession, path: String,
-                             buckets: Int): String = {
-    val table = urlTableName(path)
-    Layout.ensureBucketedBatchTable(spark, table, path,
-      Seq("norm_url" -> "STRING", "domain" -> "STRING",
-        "keep_doc" -> "BIGINT"),
-      Seq("norm_url"), buckets)
-    table
-  }
 }

@@ -5,8 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 
-import graft.operators.Layout
-
 /** Streaming data-quality gate — the streaming twin of
   * [[graft.ext.Validate.constraintAudit]] (Deequ's "unit tests for
   * data" applied per micro-batch, Schelter et al. VLDB'18): every
@@ -25,9 +23,9 @@ import graft.operators.Layout
   *
   * Scale shape: the split is ONE narrow map-side pass (no shuffle —
   * every predicate is row-local); metrics are one constant-size
-  * aggregation per batch. All three tables are batch-partitioned and
-  * written via [[Layout.overwriteBatch]], so an at-least-once replay
-  * rewrites identical partitions (idempotent, spec-asserted); admitted
+  * aggregation per batch. All three tables are [[BatchState]]s, so an
+  * at-least-once replay rewrites identical partitions (idempotent,
+  * spec-asserted); admitted
   * and quarantine are bucketed by id for zero-Exchange downstream
   * probes (the StreamDedup state contract).
   */
@@ -61,44 +59,38 @@ object StreamValidate {
     when(col("flag").isNotNull && !col("flag").isin("A", "N", "R"),
       "domain_flag")))
 
-  def run(spark: SparkSession, landingDir: String, admitTable: String,
-          admitPath: String, quarantineTable: String, quarantinePath: String,
-          metricsTable: String, metricsPath: String,
+  def run(spark: SparkSession, landingDir: String, admitPath: String,
+          quarantinePath: String, metricsPath: String,
           checkpointDir: String, buckets: Int = 8): StreamingQuery =
     MicroBatch.run(spark, rowSchema, landingDir, checkpointDir) {
       (batch, batchId) =>
-        processBatch(spark, batch, batchId, admitTable, admitPath,
-          quarantineTable, quarantinePath, metricsTable, metricsPath,
-          buckets)
+        processBatch(spark, batch, batchId, admitPath, quarantinePath,
+          metricsPath, buckets)
     }
 
   /** One idempotent micro-batch step (public for replay tests). */
   def processBatch(spark: SparkSession, batch: DataFrame, batchId: Long,
-                   admitTable: String, admitPath: String,
-                   quarantineTable: String, quarantinePath: String,
-                   metricsTable: String, metricsPath: String,
-                   buckets: Int): Unit = {
-    Layout.ensureBucketedBatchTable(spark, admitTable, admitPath,
-      DataCols, Seq("id"), buckets)
-    Layout.ensureBucketedBatchTable(spark, quarantineTable, quarantinePath,
-      QuarantineCols, Seq("id"), buckets)
-    Layout.ensureBucketedBatchTable(spark, metricsTable, metricsPath,
-      MetricCols, Seq("check_name"), buckets)
+                   admitPath: String, quarantinePath: String,
+                   metricsPath: String, buckets: Int): Unit = {
+    val admit = BatchState.open(spark, admitPath, DataCols, Seq("id"), buckets)
+    val quarantine = BatchState.open(spark, quarantinePath, QuarantineCols,
+      Seq("id"), buckets)
+    val metrics = BatchState.open(spark, metricsPath, MetricCols,
+      Seq("check_name"), buckets)
     // Null-id rows are NOT pre-filtered: they quarantine under
     // complete_id and count in every metrics denominator, so a
     // null-key upstream defect is visible to the monitor instead of
     // silently vanishing from all three outputs.
     val checked = batch.withColumn("__failed", failedChecks)
-    Layout.overwriteBatch(
-      checked.filter(size(col("__failed")) === 0).drop("__failed"),
-      admitTable, batchId)
-    Layout.overwriteBatch(
+    admit.overwrite(
+      checked.filter(size(col("__failed")) === 0).drop("__failed"), batchId)
+    quarantine.overwrite(
       checked.filter(size(col("__failed")) > 0)
         .withColumn("failed_checks",
           concat_ws(",", array_sort(col("__failed"))))
         .drop("__failed"),
-      quarantineTable, batchId)
-    Layout.overwriteBatch(
+      batchId)
+    metrics.overwrite(
       checked.select(col("__failed"),
           explode(array(lit("complete_id"), lit("complete_flag"),
             lit("range_qty_1_50"), lit("nonneg_price"),
@@ -107,6 +99,6 @@ object StreamValidate {
         .agg(sum(when(array_contains(col("__failed"), col("check_name")),
           1L).otherwise(0L)).as("violations"),
           count(lit(1)).as("n_rows")),
-      metricsTable, batchId)
+      batchId)
   }
 }

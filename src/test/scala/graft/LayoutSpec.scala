@@ -113,12 +113,12 @@ class LayoutSpec extends SparkSpec {
     // "Aa" and "BB" share a 31-bit String.hashCode — the old naming
     // scheme would have mixed two streams' state tables
     assert("/s/Aa".hashCode == "/s/BB".hashCode)
-    val a = Layout.stateTableName("graft_t", "/s/Aa")
-    val b = Layout.stateTableName("graft_t", "/s/BB")
+    val a = graft.streaming.BatchState.tableName("/s/Aa")
+    val b = graft.streaming.BatchState.tableName("/s/BB")
     assert(a != b)
     // deterministic and a valid (identifier-safe) table name even for
     // paths whose hashCode is Int.MinValue-adjacent garbage
-    assert(a == Layout.stateTableName("graft_t", "/s/Aa"))
+    assert(a == graft.streaming.BatchState.tableName("/s/Aa"))
     assert(a.matches("[A-Za-z0-9_]+"), a)
   }
 

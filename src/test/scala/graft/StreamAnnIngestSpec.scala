@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.ext.Similarity
-import graft.streaming.StreamAnnIngest
+import graft.streaming.{BatchState, StreamAnnIngest}
 
 /** Streaming IVF-index ingestion: the streamed index must serve
   * BIT-IDENTICAL results to the live batch build once the same vectors
@@ -21,40 +21,38 @@ class StreamAnnIngestSpec extends SparkSpec {
   // target ids), so streamed assignment == the live build's assignment
   private val original = embs.filter(col("vec_id") < 300)
 
-  private def probeSet(table: String) =
-    StreamAnnIngest.probe(spark, table, embs, nCentroids = 16, nProbe = 2,
+  private def probeSet(state: String) =
+    StreamAnnIngest.probe(spark, state, embs, nCentroids = 16, nProbe = 2,
         nQueries = 10, k = 5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(4))).toSet
 
   test("streamed batches serve bit-identical results to the live build") {
     val state = Files.createTempDirectory("sai_state").toString + "/idx"
-    val table = "sai_idx_t1"
     // all targets arrive over three micro-batches (uneven splits)
     val cuts = Seq((10L, 150L), (150L, 380L), (380L, 500L))
     cuts.zipWithIndex.foreach { case ((lo, hi), i) =>
       StreamAnnIngest.processBatch(spark,
         embs.filter(col("vec_id") >= lo && col("vec_id") < hi),
-        i.toLong, table, state, original, 16, 10, Buckets)
+        i.toLong, state, original, 16, 10, Buckets)
     }
     val live = Similarity.ivfTopK(embs, 16, 2, 10, 5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(4))).toSet
-    assert(probeSet(table) == live)
+    assert(probeSet(state) == live)
   }
 
   test("micro-batch replay is idempotent (at-least-once foreachBatch)") {
     val state = Files.createTempDirectory("sai_state2").toString + "/idx"
-    val table = "sai_idx_t2"
     val b0 = embs.filter(col("vec_id") >= 10 && col("vec_id") < 300)
     val b1 = embs.filter(col("vec_id") >= 300)
-    StreamAnnIngest.processBatch(spark, b0, 0L, table, state, original,
+    StreamAnnIngest.processBatch(spark, b0, 0L, state, original,
       16, 10, Buckets)
-    StreamAnnIngest.processBatch(spark, b1, 1L, table, state, original,
+    StreamAnnIngest.processBatch(spark, b1, 1L, state, original,
       16, 10, Buckets)
-    def full() = (probeSet(table),
-      spark.table(table).groupBy(col("batch")).count()
+    def full() = (probeSet(state),
+      spark.table(BatchState.tableName(state)).groupBy(col("batch")).count()
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
     val once = full()
-    StreamAnnIngest.processBatch(spark, b1, 1L, table, state, original,
+    StreamAnnIngest.processBatch(spark, b1, 1L, state, original,
       16, 10, Buckets)
     assert(full() == once, "replay changed the index or its batch counts")
   }
@@ -63,23 +61,22 @@ class StreamAnnIngestSpec extends SparkSpec {
     val landing = Files.createTempDirectory("sai_landing").toString
     val state = Files.createTempDirectory("sai_state3").toString + "/idx"
     val ckpt = Files.createTempDirectory("sai_ckpt").toString
-    val table = "sai_idx_t3"
     // land all targets as json-lines (float components survive the
     // shortest-roundtrip text form exactly)
     embs.filter(col("vec_id") >= 10).coalesce(1)
       .write.mode("overwrite").json(landing)
-    StreamAnnIngest.run(spark, landing, table, state, ckpt, original,
+    StreamAnnIngest.run(spark, landing, state, ckpt, original,
       nCentroids = 16, nQueries = 10, buckets = Buckets)
       .awaitTermination()
     val live = Similarity.ivfTopK(embs, 16, 2, 10, 5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(4))).toSet
-    assert(probeSet(table) == live)
+    assert(probeSet(state) == live)
     // corpus side exchange-free at any index size: bucketed scan with
     // only the three query-side shuffles (probe window, cell join,
     // final top-k window)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val plan = StreamAnnIngest.probe(spark, table, embs, 16, 2, 10, 5)
+      val plan = StreamAnnIngest.probe(spark, state, embs, 16, 2, 10, 5)
         .queryExecution.executedPlan.toString
       assert(plan.contains("SelectedBucketsCount"),
         s"index not read as a bucketed scan:\n$plan")

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 
-import graft.streaming.StreamContainment
+import graft.streaming.{BatchState, StreamContainment}
 
 class StreamContainmentSpec extends SparkSpec {
 
@@ -64,7 +64,7 @@ class StreamContainmentSpec extends SparkSpec {
       spark.read.parquet(out).select(col("doc_a"), col("doc_b")).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet,
       spark.read.parquet(s"$state/docs").count(),
-      spark.table(StreamContainment.postingTableName(s"$state/postings"))
+      spark.table(BatchState.tableName(s"$state/postings"))
         .count())
     val once = snapshot()
     assert(once._1 == Set((10L, 0L)), s"got ${once._1}")
@@ -88,7 +88,7 @@ class StreamContainmentSpec extends SparkSpec {
     // the probe shape every later batch runs: bottom-K hashes of the
     // fresh docs against the h-BUCKETED posting table
     val corpusPost = spark
-      .table(StreamContainment.postingTableName(s"$state/postings"))
+      .table(BatchState.tableName(s"$state/postings"))
       .filter(col("batch") < 1).drop("batch")
     val probes = Seq((1000L, 7L)).toDF("doc_a", "h")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

@@ -41,8 +41,8 @@ class StreamCusumSpec extends SparkSpec {
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2),
         r.getLong(3)))).toMap
 
-  private def nowOf(table: String): Map[Long, (Long, Long, Long, Long)] =
-    StreamCusum.cusumNow(spark, table).collect()
+  private def nowOf(state: String): Map[Long, (Long, Long, Long, Long)] =
+    StreamCusum.cusumNow(spark, state).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4)))).toMap
 
@@ -66,15 +66,14 @@ class StreamCusumSpec extends SparkSpec {
     val landing = Files.createTempDirectory("sc_landing").toString
     val state = Files.createTempDirectory("sc_state1").toString + "/cusum"
     val ckpt = Files.createTempDirectory("sc_ckpt").toString
-    val table = "sc_cusum_t1"
     writeEvents(landing, "b0.json", rows.take(3))
-    StreamCusum.run(spark, landing, table, state, ckpt, K, H, Buckets)
+    StreamCusum.run(spark, landing, state, ckpt, K, H, Buckets)
       .awaitTermination()
     writeEvents(landing, "b1.json", rows.drop(3))
-    StreamCusum.run(spark, landing, table, state, ckpt, K, H, Buckets)
+    StreamCusum.run(spark, landing, state, ckpt, K, H, Buckets)
       .awaitTermination()
     val want = batchCusum(rows)
-    nowOf(table).foreach { case (u, (n, a, s, dropped)) =>
+    nowOf(state).foreach { case (u, (n, a, s, dropped)) =>
       assert((n, a, s) == want(u), s"user $u")
       assert(dropped == 0L)
     }
@@ -84,34 +83,32 @@ class StreamCusumSpec extends SparkSpec {
     val landing = Files.createTempDirectory("sc_landing2").toString
     val state = Files.createTempDirectory("sc_state2").toString + "/cusum"
     val ckpt = Files.createTempDirectory("sc_ckpt2").toString
-    val table = "sc_cusum_t2"
     writeEvents(landing, "b0.json", Seq(
       (1L, "2024-01-01 10:00:00", 100L, 20.0),
       (1L, "2024-01-01 10:02:00", 102L, 1.0)))
-    StreamCusum.run(spark, landing, table, state, ckpt, K, H, Buckets)
+    StreamCusum.run(spark, landing, state, ckpt, K, H, Buckets)
       .awaitTermination()
     writeEvents(landing, "b1.json", Seq(
       (1L, "2024-01-01 10:01:00", 101L, 99.0), // late: dropped
       (1L, "2024-01-01 10:03:00", 103L, 1.0)))
-    StreamCusum.run(spark, landing, table, state, ckpt, K, H, Buckets)
+    StreamCusum.run(spark, landing, state, ckpt, K, H, Buckets)
       .awaitTermination()
     val inOrder = Seq(
       (1L, "2024-01-01 10:00:00", 100L, 20.0),
       (1L, "2024-01-01 10:02:00", 102L, 1.0),
       (1L, "2024-01-01 10:03:00", 103L, 1.0))
     val want = batchCusum(inOrder)(1L)
-    assert(nowOf(table) ==
+    assert(nowOf(state) ==
       Map(1L -> ((want._1, want._2, want._3, 1L))))
   }
 
   test("snapshot writes replay idempotently") {
     val state = Files.createTempDirectory("sc_state3").toString + "/cusum"
-    val table = "sc_cusum_t3"
     val snap = Seq((1L, 2L, 1L, 700L, 0L))
       .toDF("user_id", "n", "n_alarms", "cusum_cents", "n_dropped")
-    StreamCusum.writeSnapshots(spark, snap, 0L, table, state, Buckets)
-    val first = nowOf(table)
-    StreamCusum.writeSnapshots(spark, snap, 0L, table, state, Buckets)
-    assert(nowOf(table) == first && first(1L) == ((2L, 1L, 700L, 0L)))
+    StreamCusum.writeSnapshots(spark, snap, 0L, state, Buckets)
+    val first = nowOf(state)
+    StreamCusum.writeSnapshots(spark, snap, 0L, state, Buckets)
+    assert(nowOf(state) == first && first(1L) == ((2L, 1L, 700L, 0L)))
   }
 }

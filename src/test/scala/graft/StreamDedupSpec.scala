@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 
-import graft.streaming.StreamDedup
+import graft.streaming.{BatchState, StreamDedup}
 
 class StreamDedupSpec extends SparkSpec {
 
@@ -100,7 +100,7 @@ class StreamDedupSpec extends SparkSpec {
     val batch = (1000L until 1020L).map(i =>
       (i, s"fresh doc number $i with some shared words and body $i"))
       .toDF("doc_id", "text")
-    val corpusBands = spark.table(StreamDedup.bandTableName(s"$state/bands"))
+    val corpusBands = spark.table(BatchState.tableName(s"$state/bands"))
       .filter(col("batch") < 1).drop("batch")
     val nb = graft.ext.Dedup.minhashBands(
       graft.ext.Dedup.minhashSignatures(batch))
@@ -149,5 +149,26 @@ class StreamDedupSpec extends SparkSpec {
       .select(col("doc_a"), col("doc_b")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs == Set((10L, 0L)), s"got $pairs")
+  }
+
+  test("the band table survives a fresh catalog") {
+    import spark.implicits._
+    val state = Files.createTempDirectory("sd_state6").toString
+    val out = Files.createTempDirectory("sd_out6").toString + "/dups"
+    StreamDedup.processBatch(spark,
+      Seq(0L -> "alpha bravo charlie delta echo foxtrot").toDF("doc_id", "text"),
+      0L, state, out, 0.5)
+    StreamDedup.processBatch(spark,
+      Seq(10L -> "one two three four five six seven eight").toDF("doc_id", "text"),
+      1L, state, out, 0.5)
+    def bands() = StreamDedup.bandState(spark, state,
+      StreamDedup.DefaultBandBuckets).all.collect().toSet
+    val before = bands()
+    assert(before.map(_.getAs[Long]("batch")) == Set(0L, 1L))
+    // a session whose catalog never registered the table: dropping the
+    // EXTERNAL table removes the catalog entry and leaves the files
+    spark.sql(s"DROP TABLE ${BatchState.tableName(s"$state/bands")}")
+    assert(!spark.catalog.tableExists(BatchState.tableName(s"$state/bands")))
+    assert(bands() == before)
   }
 }

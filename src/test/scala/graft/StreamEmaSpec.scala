@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 
 import graft.ext.TimeSeries
-import graft.streaming.StreamEma
+import graft.streaming.{BatchState, StreamEma}
 
 /** Streaming EMA: bit-exact batch-fold equivalence (vs the w23
   * ordered-fold operator), in-order split equivalence, late-event
@@ -39,8 +39,8 @@ class StreamEmaSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2)))
       .toMap
 
-  private def emaOf(table: String): Map[Long, (Long, Double, Long)] =
-    StreamEma.emaNow(spark, table).collect()
+  private def emaOf(state: String): Map[Long, (Long, Double, Long)] =
+    StreamEma.emaNow(spark, state).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2),
         r.getLong(3)))).toMap
 
@@ -64,15 +64,14 @@ class StreamEmaSpec extends SparkSpec {
     val landing = Files.createTempDirectory("se_landing").toString
     val state = Files.createTempDirectory("se_state1").toString + "/ema"
     val ckpt = Files.createTempDirectory("se_ckpt").toString
-    val table = "se_ema_t1"
     writeEvents(landing, "b0.json", rows.take(3))
-    StreamEma.run(spark, landing, table, state, ckpt, Buckets)
+    StreamEma.run(spark, landing, state, ckpt, Buckets)
       .awaitTermination()
     writeEvents(landing, "b1.json", rows.drop(3))
-    StreamEma.run(spark, landing, table, state, ckpt, Buckets)
+    StreamEma.run(spark, landing, state, ckpt, Buckets)
       .awaitTermination()
     val want = batchEma(rows)
-    val got = emaOf(table)
+    val got = emaOf(state)
     assert(got.keySet == want.keySet)
     got.foreach { case (u, (n, ema, dropped)) =>
       assert((n, ema) == want(u), s"user $u: ($n, $ema) != ${want(u)}")
@@ -84,17 +83,16 @@ class StreamEmaSpec extends SparkSpec {
     val landing = Files.createTempDirectory("se_landing2").toString
     val state = Files.createTempDirectory("se_state2").toString + "/ema"
     val ckpt = Files.createTempDirectory("se_ckpt2").toString
-    val table = "se_ema_t2"
     writeEvents(landing, "b0.json", Seq(
       (1L, "2024-01-01 10:00:00", 100L, 8.0),
       (1L, "2024-01-01 10:02:00", 102L, 4.0)))
-    StreamEma.run(spark, landing, table, state, ckpt, Buckets)
+    StreamEma.run(spark, landing, state, ckpt, Buckets)
       .awaitTermination()
     // event 101 is older than the carried (102): dropped + metered
     writeEvents(landing, "b1.json", Seq(
       (1L, "2024-01-01 10:01:00", 101L, 99.0),
       (1L, "2024-01-01 10:03:00", 103L, 6.0)))
-    StreamEma.run(spark, landing, table, state, ckpt, Buckets)
+    StreamEma.run(spark, landing, state, ckpt, Buckets)
       .awaitTermination()
     // the EMA equals the fold over the ordered prefix WITHOUT the
     // late event: 8 -> 7 -> 6.75
@@ -102,30 +100,44 @@ class StreamEmaSpec extends SparkSpec {
       (1L, "2024-01-01 10:00:00", 100L, 8.0),
       (1L, "2024-01-01 10:02:00", 102L, 4.0),
       (1L, "2024-01-01 10:03:00", 103L, 6.0))
-    assert(emaOf(table) ==
+    assert(emaOf(state) ==
       Map(1L -> ((3L, batchEma(inOrder)(1L)._2, 1L))))
   }
 
   test("snapshot writes replay idempotently") {
     val state = Files.createTempDirectory("se_state3").toString + "/ema"
-    val table = "se_ema_t3"
     val snap = Seq((1L, 2L, 7.0, 0L), (2L, 1L, 5.5, 0L))
       .toDF("user_id", "n", "ema", "n_dropped")
-    StreamEma.writeSnapshots(spark, snap, 0L, table, state, Buckets)
-    val first = emaOf(table)
+    StreamEma.writeSnapshots(spark, snap, 0L, state, Buckets)
+    val first = emaOf(state)
     assert(first == Map(1L -> ((2L, 7.0, 0L)), 2L -> ((1L, 5.5, 0L))))
-    StreamEma.writeSnapshots(spark, snap, 0L, table, state, Buckets)
-    assert(emaOf(table) == first)
+    StreamEma.writeSnapshots(spark, snap, 0L, state, Buckets)
+    assert(emaOf(state) == first)
+  }
+
+  test("the latest-snapshot read survives a fresh catalog") {
+    val state = Files.createTempDirectory("se_state5").toString + "/ema"
+    val b0 = Seq((1L, 1L, 8.0, 0L), (2L, 1L, 5.5, 0L))
+      .toDF("user_id", "n", "ema", "n_dropped")
+    val b1 = Seq((1L, 2L, 7.0, 0L)).toDF("user_id", "n", "ema", "n_dropped")
+    StreamEma.writeSnapshots(spark, b0, 0L, state, Buckets)
+    StreamEma.writeSnapshots(spark, b1, 1L, state, Buckets)
+    val before = emaOf(state)
+    assert(before == Map(1L -> ((2L, 7.0, 0L)), 2L -> ((1L, 5.5, 0L))))
+    // a session whose catalog never registered the table: dropping the
+    // EXTERNAL table removes the catalog entry and leaves the files
+    spark.sql(s"DROP TABLE ${BatchState.tableName(state)}")
+    assert(!spark.catalog.tableExists(BatchState.tableName(state)))
+    assert(emaOf(state) == before)
   }
 
   test("latest-snapshot read plans with no Exchange over the bucketed history") {
     val state = Files.createTempDirectory("se_state4").toString + "/ema"
-    val table = "se_ema_t4"
     val b0 = Seq((1L, 1L, 8.0, 0L)).toDF("user_id", "n", "ema", "n_dropped")
     val b1 = Seq((1L, 2L, 7.0, 0L)).toDF("user_id", "n", "ema", "n_dropped")
-    StreamEma.writeSnapshots(spark, b0, 0L, table, state, Buckets)
-    StreamEma.writeSnapshots(spark, b1, 1L, table, state, Buckets)
-    val df = StreamEma.emaNow(spark, table)
+    StreamEma.writeSnapshots(spark, b0, 0L, state, Buckets)
+    StreamEma.writeSnapshots(spark, b1, 1L, state, Buckets)
+    val df = StreamEma.emaNow(spark, state)
     val plan = df.queryExecution.executedPlan.toString
     val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).size
     assert(exchanges == 0,

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 
-import graft.streaming.StreamFunnel
+import graft.streaming.{BatchState, StreamFunnel}
 
 /** Streaming funnel: batch-equivalence of the stateful greedy fold,
   * in-order split equivalence against the batch w20 operator, late-drop
@@ -61,15 +61,14 @@ class StreamFunnelSpec extends SparkSpec {
     val landing = Files.createTempDirectory("sf_landing").toString
     val state = Files.createTempDirectory("sf_state").toString + "/convs"
     val ckpt = Files.createTempDirectory("sf_ckpt").toString
-    val table = "sf_convs_t1"
     // split mid-stream: user 1's purchase and user 3/4 arrive later
     writeEvents(landing, "b0.json", rows.take(5))
-    StreamFunnel.run(spark, landing, table, state, ckpt, Stages, 60, Buckets)
+    StreamFunnel.run(spark, landing, state, ckpt, Stages, 60, Buckets)
       .awaitTermination()
     writeEvents(landing, "b1.json", rows.drop(5))
-    StreamFunnel.run(spark, landing, table, state, ckpt, Stages, 60, Buckets)
+    StreamFunnel.run(spark, landing, state, ckpt, Stages, 60, Buckets)
       .awaitTermination()
-    val streamed = funnelRows(StreamFunnel.funnelNow(spark, table, Stages))
+    val streamed = funnelRows(StreamFunnel.funnelNow(spark, state, Stages))
     val batch = funnelRows(graft.ext.Funnels.eventFunnel(
       eventsDf(rows), Stages, 60))
     assert(streamed == batch, s"streamed $streamed vs batch $batch")
@@ -82,35 +81,33 @@ class StreamFunnelSpec extends SparkSpec {
     val landing = Files.createTempDirectory("sf_landing2").toString
     val state = Files.createTempDirectory("sf_state2").toString + "/convs"
     val ckpt = Files.createTempDirectory("sf_ckpt2").toString
-    val table = "sf_convs_t2"
     writeEvents(landing, "b0.json", Seq(
       (1L, "2024-01-01 10:30:00", 100L, "view")))
-    StreamFunnel.run(spark, landing, table, state, ckpt, Stages, 60, Buckets)
+    StreamFunnel.run(spark, landing, state, ckpt, Stages, 60, Buckets)
       .awaitTermination()
     // an EARLIER view arrives late: would have moved the conversion
     // earlier — dropped and metered instead
     writeEvents(landing, "b1.json", Seq(
       (1L, "2024-01-01 10:00:00", 99L, "view"),
       (1L, "2024-01-01 10:45:00", 101L, "click")))
-    StreamFunnel.run(spark, landing, table, state, ckpt, Stages, 60, Buckets)
+    StreamFunnel.run(spark, landing, state, ckpt, Stages, 60, Buckets)
       .awaitTermination()
-    val streamed = funnelRows(StreamFunnel.funnelNow(spark, table, Stages))
+    val streamed = funnelRows(StreamFunnel.funnelNow(spark, state, Stages))
     assert(streamed.collect { case (st, _, n) if st <= 2 => n } == Seq(1L, 1L))
-    val drops = StreamFunnel.dropsNow(spark, table).collect()
+    val drops = StreamFunnel.dropsNow(spark, state).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(drops == Map((1L, 1L) -> 1L), s"unexpected drop meter: $drops")
   }
 
   test("conversion writes replay idempotently") {
     val state = Files.createTempDirectory("sf_state3").toString + "/convs"
-    val table = "sf_convs_t3"
-    graft.operators.Layout.ensureBucketedBatchTable(spark, table, state,
+    val convs = BatchState.open(spark, state,
       StreamFunnel.ConvCols, Seq("user_id"), Buckets)
     val delta = Seq((1L, 1, 1000L, false), (2L, 1, 2000L, false))
       .toDF("user_id", "stage", "ct_us", "late")
-    graft.operators.Layout.overwriteBatch(delta, table, 0L)
-    val first = funnelRows(StreamFunnel.funnelNow(spark, table, Stages))
-    graft.operators.Layout.overwriteBatch(delta, table, 0L)
-    assert(funnelRows(StreamFunnel.funnelNow(spark, table, Stages)) == first)
+    convs.overwrite(delta, 0L)
+    val first = funnelRows(StreamFunnel.funnelNow(spark, state, Stages))
+    convs.overwrite(delta, 0L)
+    assert(funnelRows(StreamFunnel.funnelNow(spark, state, Stages)) == first)
   }
 }

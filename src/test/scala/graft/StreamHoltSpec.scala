@@ -39,8 +39,8 @@ class StreamHoltSpec extends SparkSpec {
         ((r.getLong(1), r.getDouble(2), r.getDouble(3), r.getDouble(4))))
       .toMap
 
-  private def holtOf(table: String) =
-    StreamHolt.holtNow(spark, table).collect()
+  private def holtOf(state: String) =
+    StreamHolt.holtNow(spark, state).collect()
       .map(r => r.getLong(0) ->
         ((r.getLong(1), r.getDouble(2), r.getDouble(3), r.getDouble(4),
           r.getLong(5)))).toMap
@@ -57,15 +57,14 @@ class StreamHoltSpec extends SparkSpec {
     val landing = Files.createTempDirectory("sh_landing").toString
     val state = Files.createTempDirectory("sh_state1").toString + "/holt"
     val ckpt = Files.createTempDirectory("sh_ckpt").toString
-    val table = "sh_holt_t1"
     writeEvents(landing, "b0.json", rows.take(3))
-    StreamHolt.run(spark, landing, table, state, ckpt, Buckets)
+    StreamHolt.run(spark, landing, state, ckpt, Buckets)
       .awaitTermination()
     writeEvents(landing, "b1.json", rows.drop(3))
-    StreamHolt.run(spark, landing, table, state, ckpt, Buckets)
+    StreamHolt.run(spark, landing, state, ckpt, Buckets)
       .awaitTermination()
     val want = batchHolt(rows)
-    val got = holtOf(table)
+    val got = holtOf(state)
     assert(got.keySet == want.keySet)
     got.foreach { case (u, (n, l, b, f4, dropped)) =>
       assert((n, l, b, f4) == want(u), s"user $u: != batch ${want(u)}")
@@ -77,23 +76,22 @@ class StreamHoltSpec extends SparkSpec {
     val landing = Files.createTempDirectory("sh_landing2").toString
     val state = Files.createTempDirectory("sh_state2").toString + "/holt"
     val ckpt = Files.createTempDirectory("sh_ckpt2").toString
-    val table = "sh_holt_t2"
     writeEvents(landing, "b0.json", Seq(
       (1L, "2024-01-01 10:00:00", 100L, 8.0),
       (1L, "2024-01-01 10:02:00", 102L, 4.0)))
-    StreamHolt.run(spark, landing, table, state, ckpt, Buckets)
+    StreamHolt.run(spark, landing, state, ckpt, Buckets)
       .awaitTermination()
     writeEvents(landing, "b1.json", Seq(
       (1L, "2024-01-01 10:01:00", 101L, 99.0), // late: dropped + metered
       (1L, "2024-01-01 10:03:00", 103L, 6.0)))
-    StreamHolt.run(spark, landing, table, state, ckpt, Buckets)
+    StreamHolt.run(spark, landing, state, ckpt, Buckets)
       .awaitTermination()
     val inOrder = Seq(
       (1L, "2024-01-01 10:00:00", 100L, 8.0),
       (1L, "2024-01-01 10:02:00", 102L, 4.0),
       (1L, "2024-01-01 10:03:00", 103L, 6.0))
     val want = batchHolt(inOrder)(1L)
-    val got = holtOf(table)(1L)
+    val got = holtOf(state)(1L)
     assert((got._1, got._2, got._3, got._4) == want)
     assert(got._5 == 1L, "late event must be metered")
   }
@@ -115,26 +113,24 @@ class StreamHoltSpec extends SparkSpec {
 
   test("snapshot writes replay idempotently") {
     val state = Files.createTempDirectory("sh_state3").toString + "/holt"
-    val table = "sh_holt_t3"
     val snap = Seq((1L, 2L, 700L << 20, 1L << 19, 0L),
       (2L, 1L, 550L << 20, 0L, 0L))
       .toDF("user_id", "n", "level_s20", "trend_s20", "n_dropped")
-    StreamHolt.writeSnapshots(spark, snap, 0L, table, state, Buckets)
-    val first = holtOf(table)
-    StreamHolt.writeSnapshots(spark, snap, 0L, table, state, Buckets)
-    assert(holtOf(table) == first)
+    StreamHolt.writeSnapshots(spark, snap, 0L, state, Buckets)
+    val first = holtOf(state)
+    StreamHolt.writeSnapshots(spark, snap, 0L, state, Buckets)
+    assert(holtOf(state) == first)
   }
 
   test("latest-snapshot read plans with no Exchange over the bucketed history") {
     val state = Files.createTempDirectory("sh_state4").toString + "/holt"
-    val table = "sh_holt_t4"
     val b0 = Seq((1L, 1L, 800L << 20, 0L, 0L))
       .toDF("user_id", "n", "level_s20", "trend_s20", "n_dropped")
     val b1 = Seq((1L, 2L, 700L << 20, 1L << 18, 0L))
       .toDF("user_id", "n", "level_s20", "trend_s20", "n_dropped")
-    StreamHolt.writeSnapshots(spark, b0, 0L, table, state, Buckets)
-    StreamHolt.writeSnapshots(spark, b1, 1L, table, state, Buckets)
-    val df = StreamHolt.holtNow(spark, table)
+    StreamHolt.writeSnapshots(spark, b0, 0L, state, Buckets)
+    StreamHolt.writeSnapshots(spark, b1, 1L, state, Buckets)
+    val df = StreamHolt.holtNow(spark, state)
     val plan = df.queryExecution.executedPlan.toString
     val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).size
     assert(exchanges == 0,

@@ -59,6 +59,21 @@ class StreamKmeansSpec extends SparkSpec {
     assert(cellsOf(out, 0L) == Map(1L -> 0, 2L -> 1))
   }
 
+  test("an uncommitted seed dir from a crashed write is re-derived, not read") {
+    val (cleanState, cleanOut) = fresh()
+    val (state, out) = fresh()
+    val b0 = vecs((1L, Array(0f, 0f)), (2L, Array(1f, 0f)),
+      (3L, Array(4f / 1024, 0f)), (4L, Array(1f, 4f / 1024)))
+    StreamKmeans.processBatch(spark, b0, 0L, cleanState, cleanOut, k = 2,
+      buckets = 4)
+    // a crash during the seed write leaves only the committer's
+    // scratch dir, which holds no readable parquet
+    Files.createDirectories(Paths.get(state, "seed", "_temporary", "0"))
+    StreamKmeans.processBatch(spark, b0, 0L, state, out, k = 2, buckets = 4)
+    assert(Files.exists(Paths.get(state, "seed", "_SUCCESS")))
+    assert(cellsOf(out, 0L) == cellsOf(cleanOut, 0L))
+  }
+
   test("replaying a batch rewrites identical assignments and moments") {
     val (state, out) = fresh()
     StreamKmeans.processBatch(spark, vecs(

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.ext.TextAnalysis
-import graft.streaming.StreamNovelty
+import graft.streaming.{BatchState, StreamNovelty}
 
 /** Streaming first-occurrence novelty: per-batch scores must equal the
   * batch noveltyScore over the concatenated stream (t21), the
@@ -67,7 +67,7 @@ class StreamNoveltySpec extends SparkSpec {
       explode(graft.functions.ShingleHashesOf(col("text"),
         graft.ext.Dedup.ShingleSize)).as("s"))
     val corpusS = spark
-      .table(StreamNovelty.stateTableName(s"$state/index"))
+      .table(BatchState.tableName(s"$state/index"))
       .filter(col("batch") < 1).select(col("s"))
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {

@@ -41,8 +41,8 @@ class StreamOhlcSpec extends SparkSpec {
         r.getDouble(4), r.getDouble(5), r.getDouble(6), r.getLong(7)))
     }.toMap
 
-  private def nowOf(table: String) =
-    StreamOhlc.barsNow(spark, table).collect().map { r =>
+  private def nowOf(state: String) =
+    StreamOhlc.barsNow(spark, state).collect().map { r =>
       (r.getLong(0), r.getLong(1)) -> ((r.getDouble(2), r.getDouble(3),
         r.getDouble(4), r.getDouble(5), r.getLong(6) / 100.0,
         r.getLong(7)))
@@ -69,27 +69,25 @@ class StreamOhlcSpec extends SparkSpec {
     val landing = Files.createTempDirectory("so_landing").toString
     val state = Files.createTempDirectory("so_state1").toString + "/bars"
     val ckpt = Files.createTempDirectory("so_ckpt").toString
-    val table = "so_bars_t1"
     // batch 0 gets the LATER events, batch 1 delivers the earlier
     // ones late — an order-sensitive operator would have to drop them
     writeEvents(landing, "b0.json", rows.drop(3))
-    StreamOhlc.run(spark, landing, table, state, ckpt, Buckets)
+    StreamOhlc.run(spark, landing, state, ckpt, Buckets)
       .awaitTermination()
     writeEvents(landing, "b1.json", rows.take(3))
-    StreamOhlc.run(spark, landing, table, state, ckpt, Buckets)
+    StreamOhlc.run(spark, landing, state, ckpt, Buckets)
       .awaitTermination()
-    assert(nowOf(table) == batchBars(rows))
+    assert(nowOf(state) == batchBars(rows))
   }
 
   test("snapshot writes replay idempotently") {
     val state = Files.createTempDirectory("so_state2").toString + "/bars"
-    val table = "so_bars_t2"
     val snap = Seq((1L, 0L, 5.0, 9.0, 2.0, 7.0, 2300L, 4L))
       .toDF("user_id", "hour_us", "open", "high", "low", "close",
         "vol_cents", "n")
-    StreamOhlc.writeSnapshots(spark, snap, 0L, table, state, Buckets)
-    val first = nowOf(table)
-    StreamOhlc.writeSnapshots(spark, snap, 0L, table, state, Buckets)
-    assert(nowOf(table) == first && first((1L, 0L))._6 == 4L)
+    StreamOhlc.writeSnapshots(spark, snap, 0L, state, Buckets)
+    val first = nowOf(state)
+    StreamOhlc.writeSnapshots(spark, snap, 0L, state, Buckets)
+    assert(nowOf(state) == first && first((1L, 0L))._6 == 4L)
   }
 }

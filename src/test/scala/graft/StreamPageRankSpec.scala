@@ -16,10 +16,10 @@ class StreamPageRankSpec extends SparkSpec {
   import spark.implicits._
 
   private var n = 0
-  private def fresh(): (String, String) = {
+  private def fresh(): String = {
     n += 1
     val base = Files.createTempDirectory(s"st_pr$n").toString
-    (s"graft_stream_pr_spec$n", base + "/edges")
+    base + "/edges"
   }
 
   private def transDf(rows: Seq[(Long, Long)]) = rows.toDF("src", "dst")
@@ -36,10 +36,10 @@ class StreamPageRankSpec extends SparkSpec {
   private val b1 = Seq((3L, 4L), (4L, 1L), (1L, 2L))
 
   test("streamed warm refresh equals the g26 warm-start operator") {
-    val (table, state) = fresh()
-    StreamPageRank.processBatch(spark, transDf(b0), 0L, table, state,
+    val state = fresh()
+    StreamPageRank.processBatch(spark, transDf(b0), 0L, state,
       refreshIters = 3, buckets = 4)
-    StreamPageRank.processBatch(spark, transDf(b1), 1L, table, state,
+    StreamPageRank.processBatch(spark, transDf(b1), 1L, state,
       refreshIters = 2, buckets = 4)
     // batch 0 from the empty seed IS cold pageRank over cohort 0
     val r0 = ranksMap(spark.read.parquet(s"${state}_ranks/batch=0"))
@@ -50,40 +50,40 @@ class StreamPageRankSpec extends SparkSpec {
       baseIters = 3, refreshIters = 2)
       .select(col("k"), col("r_warm")).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(ranksMap(StreamPageRank.ranksNow(spark, table)) == warm)
+    assert(ranksMap(StreamPageRank.ranksNow(spark, state, 4)) == warm)
   }
 
   test("replaying a batch rewrites identical edge and rank partitions") {
-    val (table, state) = fresh()
-    StreamPageRank.processBatch(spark, transDf(b0), 0L, table, state, 2, 4)
-    StreamPageRank.processBatch(spark, transDf(b1), 1L, table, state, 2, 4)
+    val state = fresh()
+    StreamPageRank.processBatch(spark, transDf(b0), 0L, state, 2, 4)
+    StreamPageRank.processBatch(spark, transDf(b1), 1L, state, 2, 4)
     val before = (spark.read.parquet(state).collect().toSet,
       spark.read.parquet(s"${state}_ranks").collect().toSet)
     // replay BOTH batches out of order: each reads only earlier state
-    StreamPageRank.processBatch(spark, transDf(b0), 0L, table, state, 2, 4)
-    StreamPageRank.processBatch(spark, transDf(b1), 1L, table, state, 2, 4)
+    StreamPageRank.processBatch(spark, transDf(b0), 0L, state, 2, 4)
+    StreamPageRank.processBatch(spark, transDf(b1), 1L, state, 2, 4)
     val after = (spark.read.parquet(state).collect().toSet,
       spark.read.parquet(s"${state}_ranks").collect().toSet)
     assert(after == before)
   }
 
   test("end-to-end readStream maintains ranks across two micro-batches") {
-    val (table, state) = fresh()
+    val state = fresh()
     val landing = Files.createTempDirectory("st_pr_landing").toString
     val ckpt = Files.createTempDirectory("st_pr_ckpt").toString
     def line(e: (Long, Long)) = s"""{"src": ${e._1}, "dst": ${e._2}}"""
     Files.writeString(Paths.get(landing, "b0.json"),
       b0.map(line).mkString("\n"))
-    StreamPageRank.run(spark, landing, table, state, ckpt,
+    StreamPageRank.run(spark, landing, state, ckpt,
       refreshIters = 3, buckets = 4).awaitTermination()
     Files.writeString(Paths.get(landing, "b1.json"),
       b1.map(line).mkString("\n"))
-    StreamPageRank.run(spark, landing, table, state, ckpt,
+    StreamPageRank.run(spark, landing, state, ckpt,
       refreshIters = 3, buckets = 4).awaitTermination()
     val warm = Graphs.pageRankWarmStart(weighted(b0), weighted(b1),
       baseIters = 3, refreshIters = 3)
       .select(col("k"), col("r_warm")).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(ranksMap(StreamPageRank.ranksNow(spark, table)) == warm)
+    assert(ranksMap(StreamPageRank.ranksNow(spark, state, 4)) == warm)
   }
 }

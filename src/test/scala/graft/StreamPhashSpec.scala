@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 
-import graft.streaming.StreamPhash
+import graft.streaming.{BatchState, StreamPhash}
 
 /** Streaming perceptual dedup: doc_ids 16 apart render the SAME pattern
   * at different pixel sizes (dHash-identical); pattern differs
@@ -79,7 +79,7 @@ class StreamPhashSpec extends SparkSpec {
       .dhash64(graft.ext.Multimodal.syntheticPatternImages(fresh))
       .select(col("doc_id"), col("dhash").as("fp"))
     val corpusBands = spark
-      .table(StreamPhash.bandTableName(s"$state/bands"))
+      .table(BatchState.tableName(s"$state/bands"))
       .filter(col("batch") < 1).drop("batch")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.ext.Curation
-import graft.streaming.StreamPoliteness
+import graft.streaming.{BatchState, StreamPoliteness}
 
 class StreamPolitenessSpec extends SparkSpec {
 
@@ -109,7 +109,7 @@ class StreamPolitenessSpec extends SparkSpec {
     StreamPoliteness.processBatch(spark,
       fetches((0L until 200L).map(i => (s"d$i.com", i))), 0L, state, policy)
     val table = spark.table(
-      StreamPoliteness.stateTable(s"$state/politeness"))
+      BatchState.tableName(s"$state/politeness"))
     val probe = table.filter(col("batch") < 1)
       .groupBy(col("domain"))
       .agg(max_by(struct(col("n_fetches")), col("batch")).as("s"))

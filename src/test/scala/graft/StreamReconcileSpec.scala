@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 
-import graft.streaming.StreamReconcile
+import graft.streaming.{BatchState, StreamReconcile}
 
 class StreamReconcileSpec extends SparkSpec {
 
@@ -99,7 +99,7 @@ class StreamReconcileSpec extends SparkSpec {
 
     def snapshot() = (
       reportOf(out, 1L).orderBy(col("bucket")).collect().toSeq,
-      spark.table(StreamReconcile.digestTableName(s"$state/digests"))
+      spark.table(BatchState.tableName(s"$state/digests"))
         .orderBy(col("batch"), col("bucket")).collect().toSeq)
     val once = snapshot()
     assert(once._1.forall(_.getAs[Boolean]("is_match")))
@@ -148,8 +148,7 @@ class StreamReconcileSpec extends SparkSpec {
     // the O(corpus-state) side of every batch: summing the persisted
     // per-batch digests. The table is file-bucketed by `bucket`, so the
     // groupBy must plan exchange-free — only O(batch) work shuffles.
-    val merged = StreamReconcile.corpusDigests(spark,
-      StreamReconcile.digestTableName(s"$state/digests"), 2L)
+    val merged = StreamReconcile.corpusDigests(spark, state, 2L)
     val plan = merged.queryExecution.executedPlan.toString
     val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).size
     assert(exchanges == 0, s"corpus digest merge should not shuffle:\n$plan")

@@ -39,15 +39,14 @@ class StreamScrubSpec extends SparkSpec {
     val landing = Files.createTempDirectory("scrub_landing").toString
     val state = Files.createTempDirectory("scrub_state").toString + "/lex"
     val ckpt = Files.createTempDirectory("scrub_ckpt").toString
-    val table = "scrub_lex_t1"
     writeDocs(landing, "b0.json", rows.take(18))
-    StreamScrub.run(spark, landing, table, state, ckpt, buckets = Buckets)
+    StreamScrub.run(spark, landing, state, ckpt, buckets = Buckets)
       .awaitTermination()
     writeDocs(landing, "b1.json", rows.drop(18))
-    StreamScrub.run(spark, landing, table, state, ckpt, buckets = Buckets)
+    StreamScrub.run(spark, landing, state, ckpt, buckets = Buckets)
       .awaitTermination()
     val all = docsDf(rows)
-    val streamedLex = StreamScrub.lexiconNow(spark, table, MinDocs)
+    val streamedLex = StreamScrub.lexiconNow(spark, state, MinDocs)
       .collect().map(_.getString(0)).toSet
     // the planted phrase yields boilerplate 3-grams; per-doc fillers don't
     assert(streamedLex.contains("the quick brown"))
@@ -58,7 +57,7 @@ class StreamScrubSpec extends SparkSpec {
       .groupBy(col("s")).agg(countDistinct(col("doc_id")).as("nd"))
       .filter(col("nd") >= MinDocs).collect().map(_.getString(0)).toSet
     assert(streamedLex == batchLex)
-    val streamed = StreamScrub.coverageNow(spark, table, all,
+    val streamed = StreamScrub.coverageNow(spark, state, all,
         minDocs = MinDocs)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     val batch = graft.ext.TextAnalysis.boilerplateCoverage(all,
@@ -72,15 +71,14 @@ class StreamScrubSpec extends SparkSpec {
 
   test("delta writes replay idempotently and fold with no Exchange") {
     val state = Files.createTempDirectory("scrub_state2").toString + "/lex"
-    val table = "scrub_lex_t2"
     val d = docsDf(rows.take(22))
-    StreamScrub.writeDeltas(spark, d, 0L, table, state, 3, Buckets)
-    val first = StreamScrub.lexiconNow(spark, table, MinDocs)
+    StreamScrub.writeDeltas(spark, d, 0L, state, 3, Buckets)
+    val first = StreamScrub.lexiconNow(spark, state, MinDocs)
       .collect().map(_.getString(0)).toSet
-    StreamScrub.writeDeltas(spark, d, 0L, table, state, 3, Buckets)
-    assert(StreamScrub.lexiconNow(spark, table, MinDocs)
+    StreamScrub.writeDeltas(spark, d, 0L, state, 3, Buckets)
+    assert(StreamScrub.lexiconNow(spark, state, MinDocs)
       .collect().map(_.getString(0)).toSet == first)
-    val plan = StreamScrub.lexiconNow(spark, table, MinDocs)
+    val plan = StreamScrub.lexiconNow(spark, state, MinDocs)
       .queryExecution.executedPlan.toString
     assert("Exchange hashpartitioning".r.findAllIn(plan).isEmpty,
       s"s-bucketed delta fold must be exchange-free:\n$plan")

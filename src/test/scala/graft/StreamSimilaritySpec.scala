@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 
-import graft.streaming.StreamSimilarity
+import graft.streaming.{BatchState, StreamSimilarity}
 
 class StreamSimilaritySpec extends SparkSpec {
 
@@ -104,7 +104,7 @@ class StreamSimilaritySpec extends SparkSpec {
       nPlanes = 2, threshold = 0.9)
 
     val corpusBuckets = spark
-      .table(StreamSimilarity.bucketTableName(s"$state/buckets"))
+      .table(BatchState.tableName(s"$state/buckets"))
       .filter(col("batch") < 1).drop("batch")
     val planes = spark.read.parquet(s"$state/planes")
       .orderBy(col("vec_id")).collect()

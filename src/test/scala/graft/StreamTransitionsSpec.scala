@@ -43,8 +43,8 @@ class StreamTransitionsSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
   }
 
-  private def edgesOf(table: String): Map[(Long, Long), Long] =
-    StreamTransitions.edgesNow(spark, table).collect()
+  private def edgesOf(state: String): Map[(Long, Long), Long] =
+    StreamTransitions.edgesNow(spark, state).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
 
   private val rows = Seq(
@@ -67,65 +67,61 @@ class StreamTransitionsSpec extends SparkSpec {
     val landing = Files.createTempDirectory("st_landing").toString
     val state = Files.createTempDirectory("st_state1").toString + "/edges"
     val ckpt = Files.createTempDirectory("st_ckpt").toString
-    val table = "st_edges_t1"
     // split respects per-user event-time order across batches
     writeEvents(landing, "b0.json", rows.take(3))
-    StreamTransitions.run(spark, landing, table, state, ckpt, Buckets)
+    StreamTransitions.run(spark, landing, state, ckpt, Buckets)
       .awaitTermination()
     writeEvents(landing, "b1.json", rows.drop(3))
-    StreamTransitions.run(spark, landing, table, state, ckpt, Buckets)
+    StreamTransitions.run(spark, landing, state, ckpt, Buckets)
       .awaitTermination()
-    assert(edgesOf(table) == lagEdges(rows))
+    assert(edgesOf(state) == lagEdges(rows))
     // the cross-batch seam 5 -> 7 (user 1, events 102 -> 105) exists
-    assert(edgesOf(table).contains((5L, 7L)))
+    assert(edgesOf(state).contains((5L, 7L)))
   }
 
   test("cross-batch late events are dropped, not spliced") {
     val landing = Files.createTempDirectory("st_landing2").toString
     val state = Files.createTempDirectory("st_state2").toString + "/edges"
     val ckpt = Files.createTempDirectory("st_ckpt2").toString
-    val table = "st_edges_t2"
     writeEvents(landing, "b0.json", Seq(
       (1L, "2024-01-01 10:00:00", 100L, 5),
       (1L, "2024-01-01 10:02:00", 102L, 9)))
-    StreamTransitions.run(spark, landing, table, state, ckpt, Buckets)
+    StreamTransitions.run(spark, landing, state, ckpt, Buckets)
       .awaitTermination()
     // event 101 is older than the carried last (102): dropped
     writeEvents(landing, "b1.json", Seq(
       (1L, "2024-01-01 10:01:00", 101L, 7),
       (1L, "2024-01-01 10:03:00", 103L, 6)))
-    StreamTransitions.run(spark, landing, table, state, ckpt, Buckets)
+    StreamTransitions.run(spark, landing, state, ckpt, Buckets)
       .awaitTermination()
-    assert(edgesOf(table) == Map((5L, 9L) -> 1L, (9L, 6L) -> 1L))
+    assert(edgesOf(state) == Map((5L, 9L) -> 1L, (9L, 6L) -> 1L))
     // the drop is METERED, not silent: batch 0 recorded zero drops
     // (partition exists but is empty), batch 1 one drop for user 1
-    val drops = StreamTransitions.dropsNow(spark, table).collect()
+    val drops = StreamTransitions.dropsNow(spark, state).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(drops == Map((1L, 1L) -> 1L), s"unexpected drop meter: $drops")
   }
 
   test("edge-delta writes replay idempotently") {
     val state = Files.createTempDirectory("st_state3").toString + "/edges"
-    val table = "st_edges_t3"
     val delta = Seq((5L, 7L), (5L, 7L), (7L, 9L)).toDF("src", "dst")
-    StreamTransitions.writeEdges(spark, delta, 0L, table, state, Buckets)
-    val first = edgesOf(table)
+    StreamTransitions.writeEdges(spark, delta, 0L, state, Buckets)
+    val first = edgesOf(state)
     assert(first == Map((5L, 7L) -> 2L, (7L, 9L) -> 1L))
-    StreamTransitions.writeEdges(spark, delta, 0L, table, state, Buckets)
-    assert(edgesOf(table) == first)
+    StreamTransitions.writeEdges(spark, delta, 0L, state, Buckets)
+    assert(edgesOf(state) == first)
   }
 
   test("accumulated-edge groupBy plans with no Exchange; ranks match batch") {
     val state = Files.createTempDirectory("st_state4").toString + "/edges"
-    val table = "st_edges_t4"
     val delta = Seq((5L, 7L), (7L, 5L), (5L, 9L)).toDF("src", "dst")
-    StreamTransitions.writeEdges(spark, delta, 0L, table, state, Buckets)
-    val plan = StreamTransitions.edgesNow(spark, table)
+    StreamTransitions.writeEdges(spark, delta, 0L, state, Buckets)
+    val plan = StreamTransitions.edgesNow(spark, state)
       .queryExecution.executedPlan.toString
     val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).size
     assert(exchanges == 0,
       s"src-bucketed edge groupBy must be exchange-free:\n$plan")
-    val live = StreamTransitions.ranksNow(spark, table, iters = 2)
+    val live = StreamTransitions.ranksNow(spark, state, iters = 2)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val batch = graft.ext.Graphs.pageRank(
       delta.groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w")),

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 
 import graft.ext.Curation
-import graft.streaming.StreamUrlDedup
+import graft.streaming.{BatchState, StreamUrlDedup}
 
 class StreamUrlDedupSpec extends SparkSpec {
 
@@ -192,7 +192,7 @@ class StreamUrlDedupSpec extends SparkSpec {
         (1000L until 1020L).map(i => (i, s"https://h$i.example.com/p$i"))
           .toDF("doc_id", "url"))
       .select(col("doc_id"), col("norm_url"), col("domain"))
-    val seen = spark.table(StreamUrlDedup.urlTableName(s"$state/urls"))
+    val seen = spark.table(BatchState.tableName(s"$state/urls"))
       .filter(col("batch") < 1).drop("batch")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import graft.streaming.StreamValidate
+import graft.streaming.{BatchState, StreamValidate}
 
 /** Streaming data-quality gate: admit/quarantine split semantics,
   * per-batch metrics, replay idempotency, end-to-end readStream.
@@ -19,7 +19,8 @@ class StreamValidateSpec extends SparkSpec {
   private def fresh(): (Tables, String, String, String) = {
     n += 1
     val base = Files.createTempDirectory(s"sv_state$n").toString
-    (Tables(s"sv_admit_$n", s"sv_quar_$n", s"sv_met_$n"),
+    (Tables(BatchState.tableName(base + "/admit"),
+      BatchState.tableName(base + "/quar"), BatchState.tableName(base + "/met")),
       base + "/admit", base + "/quar", base + "/met")
   }
 
@@ -30,7 +31,7 @@ class StreamValidateSpec extends SparkSpec {
                       rows: Seq[(Long, Double, Double, String)],
                       batchId: Long): Unit =
     StreamValidate.processBatch(spark, batchDf(rows), batchId,
-      t.admit, p._1, t.quar, p._2, t.met, p._3, Buckets)
+      p._1, p._2, p._3, Buckets)
 
   test("clean rows admit; each defect quarantines with its named checks") {
     val (t, pa, pq, pm) = fresh()
@@ -63,7 +64,7 @@ class StreamValidateSpec extends SparkSpec {
       org.apache.spark.sql.Row(null, 60.0, 100.0, "A"))
     StreamValidate.processBatch(spark,
       spark.createDataFrame(rows, StreamValidate.rowSchema), 0L,
-      t.admit, pa, t.quar, pq, t.met, pm, Buckets)
+      pa, pq, pm, Buckets)
     assert(spark.table(t.admit).collect()
       .map(_.getAs[Long]("id")).toSeq == Seq(1L))
     val q = spark.table(t.quar).collect()
@@ -100,12 +101,12 @@ class StreamValidateSpec extends SparkSpec {
     Files.writeString(Paths.get(landing, "b0.json"),
       """{"id": 1, "qty": 5.0, "price": 10.0, "flag": "A"}
         |{"id": 2, "qty": 99.0, "price": 10.0, "flag": "A"}""".stripMargin)
-    StreamValidate.run(spark, landing, t.admit, pa, t.quar, pq,
-      t.met, pm, ckpt, Buckets).awaitTermination()
+    StreamValidate.run(spark, landing, pa, pq, pm, ckpt,
+      Buckets).awaitTermination()
     Files.writeString(Paths.get(landing, "b1.json"),
       """{"id": 3, "qty": 5.0, "price": -2.0, "flag": "R"}""")
-    StreamValidate.run(spark, landing, t.admit, pa, t.quar, pq,
-      t.met, pm, ckpt, Buckets).awaitTermination()
+    StreamValidate.run(spark, landing, pa, pq, pm, ckpt,
+      Buckets).awaitTermination()
     assert(spark.table(t.admit).collect()
       .map(_.getAs[Long]("id")).toSeq == Seq(1L))
     assert(spark.table(t.quar).collect()
