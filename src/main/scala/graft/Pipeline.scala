@@ -59,12 +59,13 @@ object Pipeline {
     // each extraction stage marks ITS OWN ledger flag once its artifact
     // is written (the reference's per-stage DynamoDB update_item) — a
     // crash between the two leaves a retryable half-done ledger row
-    PublishJob.writeCsv(matchwise, s"$work/output/matchwise_data.csv")
+    val mwRows = PublishJob.writeCsv(matchwise, s"$work/output/matchwise_data.csv")
     IngestJob.markStage(spark, ledgerDir, staged, IngestJob.MatchwiseStatus)
-    PublishJob.writeCsv(deliverywise, s"$work/output/deliverywise_data.csv")
+    val dwRows =
+      PublishJob.writeCsv(deliverywise, s"$work/output/deliverywise_data.csv")
     IngestJob.markStage(spark, ledgerDir, staged, IngestJob.DeliverywiseStatus)
-    println(s"[pipeline] matchwise rows: ${matchwise.count()}")
-    println(s"[pipeline] deliverywise rows: ${deliverywise.count()}")
+    println(s"[pipeline] matchwise rows: $mwRows")
+    println(s"[pipeline] deliverywise rows: $dwRows")
     println(s"[pipeline] version note: ${PublishJob.versionNote(matchwise)}")
     raw.unpersist()
     spark.stop()

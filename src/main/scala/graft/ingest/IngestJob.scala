@@ -1,8 +1,9 @@
 package graft.ingest
 
 import org.apache.hadoop.fs.{FileUtil, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Incremental ingest: the reference's download-lambda dataflow
   * (download_from_cricsheet_lambda_function.py:77-118) minus the HTTP
@@ -13,9 +14,9 @@ import org.apache.spark.sql.functions._
   * file_name — base rows appended by [[run]] plus an append-only
   * `_updates` flag log compacted on read ([[ledger]]), so no code path
   * ever rewrites existing ledger files in place; "only new files" is a
-  * left_anti join against the view. The reference processes files in
-  * nondeterministic os.walk order — we impose orderBy(file_name) so
-  * the cap is reproducible.
+  * left_anti join against the view's key set. The reference processes
+  * files in nondeterministic os.walk order — we impose
+  * orderBy(file_name) so the cap is reproducible.
   *
   * The two per-stage extraction flags are modeled as the reference
   * models them (utils.py:74-89 — one DynamoDB update_item per field):
@@ -82,12 +83,11 @@ object IngestJob {
       !n.startsWith("_") && !n.startsWith(".")
     }
 
+  /** The ledger key: every base, snapshot and update file carries it. */
+  private val NameSchema = StructType(Seq(StructField("file_name", StringType)))
+
   private def emptyLedger(spark: SparkSession): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("file_name",
-          org.apache.spark.sql.types.StringType))))
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], NameSchema)
 
   private def snapshotsDir(ledgerDir: String) = new Path(ledgerDir, "_snapshots")
 
@@ -131,6 +131,27 @@ object IngestJob {
     else fs.listStatus(dir).map(_.getPath.getName)
       .filter(n => !n.startsWith("_") && !n.startsWith(".")).toSeq
 
+  /** The files the ledger view is read from: the latest snapshot's
+    * data (when it holds any), plus the base and `_updates` files that
+    * snapshot has not folded. `snap` is kept for [[compactLedger]],
+    * which folds exactly these names into its manifests.
+    */
+  private case class LedgerFiles(snap: SnapState, snapData: Option[Path],
+                                 base: Seq[Path], updates: Seq[Path]) {
+    def basePaths: Seq[String] = (snapData.toSeq ++ base).map(_.toString)
+    def updatePaths: Seq[String] = updates.map(_.toString)
+  }
+
+  private def ledgerFiles(spark: SparkSession, ledgerDir: String): LedgerFiles = {
+    val p = new Path(ledgerDir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val snap = latestSnapshot(fs, ledgerDir)
+    val udir = updatesDir(ledgerDir)
+    LedgerFiles(snap, snap.dataDir.filter(d => hasVisibleFiles(fs, d)),
+      visibleNames(fs, p).filterNot(snap.foldedBase).map(new Path(p, _)),
+      visibleNames(fs, udir).filterNot(snap.foldedUpd).map(new Path(udir, _)))
+  }
+
   /** Fold the current view into a new snapshot — the OPTIMIZE step
     * keeping read-side work bounded however many weekly drips accrue.
     * Crash-atomic by construction: data + manifests are written into a
@@ -143,23 +164,16 @@ object IngestJob {
     * land after the listing stay unfolded and apply on read as usual.
     */
   def compactLedger(spark: SparkSession, ledgerDir: String): Unit = {
-    val p = new Path(ledgerDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val before = latestSnapshot(fs, ledgerDir)
-    val baseNames = visibleNames(fs, p).filterNot(before.foldedBase)
-    val updNames =
-      visibleNames(fs, updatesDir(ledgerDir)).filterNot(before.foldedUpd)
-    val foldBase = before.foldedBase ++ baseNames
-    val foldUpd = before.foldedUpd ++ updNames
-    // view is built from the EXPLICIT listings above (not ledger()'s
+    val fs = new Path(ledgerDir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files = ledgerFiles(spark, ledgerDir)
+    val foldBase = files.snap.foldedBase ++ files.base.map(_.getName)
+    val foldUpd = files.snap.foldedUpd ++ files.updates.map(_.getName)
+    // view is built from the EXPLICIT listing above (not ledger()'s
     // own re-listing), so the snapshot contains exactly what the
     // manifests claim — see [[ledgerFrom]]'s race note
-    val basePaths = before.dataDir
-      .filter(dd => hasVisibleFiles(fs, dd)).map(_.toString).toSeq ++
-      baseNames.map(n => new Path(p, n).toString)
-    val updPaths =
-      updNames.map(n => new Path(updatesDir(ledgerDir), n).toString)
-    val view = ledgerFrom(spark, basePaths, updPaths).localCheckpoint()
+    val view =
+      ledgerFrom(spark, files.basePaths, files.updatePaths).localCheckpoint()
     val tmp = new Path(snapshotsDir(ledgerDir),
       s".snap_tmp_${java.util.UUID.randomUUID().toString.take(12)}")
     view.coalesce(1).write.mode(SaveMode.Overwrite)
@@ -205,17 +219,29 @@ object IngestJob {
     * bounded at any corpus scale.
     */
   def ledger(spark: SparkSession, ledgerDir: String): DataFrame = {
-    val p = new Path(ledgerDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val snap = latestSnapshot(fs, ledgerDir)
-    val basePaths =
-      snap.dataDir.filter(d => hasVisibleFiles(fs, d)).map(_.toString).toSeq ++
-        visibleNames(fs, p).filterNot(snap.foldedBase)
-          .map(n => new Path(p, n).toString)
-    val udir = updatesDir(ledgerDir)
-    val updPaths = visibleNames(fs, udir).filterNot(snap.foldedUpd)
-      .map(n => new Path(udir, n).toString)
-    ledgerFrom(spark, basePaths, updPaths)
+    val files = ledgerFiles(spark, ledgerDir)
+    ledgerFrom(spark, files.basePaths, files.updatePaths)
+  }
+
+  /** Every file name the ledger view holds a row for — its key set,
+    * without the flags. A name has a view row exactly when some file
+    * [[ledger]] reads carries it (the full-outer joins keep every key),
+    * so this is one scan of the column all ledger files share, with the
+    * schema given: no per-field aggregates, no joins, no schema
+    * inference. The files are resolved as for [[ledger]], but the scan
+    * names the directories that hold them — the snapshot data, the
+    * base dir, `_updates` — so Spark lists them on the driver however
+    * many files they hold (a list of more than 32 file paths costs a
+    * parallel listing job). A directory read this way also yields the
+    * folded files a vacuum has not deleted yet; they add no name, since
+    * the snapshot holds every name they hold.
+    */
+  private def ledgerNames(spark: SparkSession, ledgerDir: String): DataFrame = {
+    val files = ledgerFiles(spark, ledgerDir)
+    val dirs = files.snapData.toSeq ++
+      Seq(files.base, files.updates).flatMap(_.headOption.map(_.getParent))
+    if (dirs.isEmpty) emptyLedger(spark)
+    else spark.read.schema(NameSchema).parquet(dirs.map(_.toString): _*)
   }
 
   /** [[ledger]]'s view over an EXPLICIT file list — so [[compactLedger]]
@@ -262,9 +288,10 @@ object IngestJob {
     * column never selected, so no bytes are read): Spark's parallel
     * partition discovery spreads the listing RPCs across executors
     * once the dir crosses the parallelism threshold, the anti-join
-    * runs as a plan, and only the capped `limit` names are collected
-    * (TakeOrdered). A million-file landing dir never funnels through
-    * a driver-side listStatus array + local set difference.
+    * against [[ledgerNames]] runs as a plan, and only the capped
+    * `limit` names are collected (TakeOrdered). A million-file landing
+    * dir never funnels through a driver-side listStatus array + local
+    * set difference.
     */
   def newFiles(spark: SparkSession, landingDir: String, ledgerDir: String,
                limit: Int = DefaultLimit): Seq[String] = {
@@ -273,8 +300,7 @@ object IngestJob {
       .option("pathGlobFilter", "*.json")
       .load(landingDir)
       .select(substring_index(col("path"), "/", -1).as("file_name"))
-      .join(ledger(spark, ledgerDir).select("file_name"),
-        Seq("file_name"), "left_anti")
+      .join(ledgerNames(spark, ledgerDir), Seq("file_name"), "left_anti")
       .orderBy(col("file_name"))
       .limit(limit)
       .as[String].collect().toSeq

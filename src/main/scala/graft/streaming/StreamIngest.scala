@@ -111,9 +111,9 @@ object StreamIngest {
       Connectors.readStaging(spark, s"$stagingDir/matchwise"))
     val deliverywise = PublishJob.buildDeliverywise(
       Connectors.readStaging(spark, s"$stagingDir/deliverywise"), matchwise)
-    PublishJob.writeCsv(matchwise, s"$outDir/matchwise_data.csv")
-    PublishJob.writeCsv(deliverywise, s"$outDir/deliverywise_data.csv")
-    (matchwise.count(), deliverywise.count(), PublishJob.versionNote(matchwise))
+    (PublishJob.writeCsv(matchwise, s"$outDir/matchwise_data.csv"),
+      PublishJob.writeCsv(deliverywise, s"$outDir/deliverywise_data.csv"),
+      PublishJob.versionNote(matchwise))
   }
 
   /** The reference's whole E1→E3 chain (cron-fired download →

@@ -256,6 +256,60 @@ class IngestStreamSpec extends SparkSpec {
     assert(next == (5 until 8).map(i => f"m$i%05d.json"))
   }
 
+  /** `newFiles` as it read before the names-only ledger scan: the
+    * anti-join against the full ledger view's file_name column. */
+  private def viaLedgerView(landing: String, ledger: String): Seq[String] = {
+    import spark.implicits._
+    spark.read.format("binaryFile").option("pathGlobFilter", "*.json")
+      .load(landing)
+      .select(substring_index(col("path"), "/", -1).as("file_name"))
+      .join(IngestJob.ledger(spark, ledger).select("file_name"),
+        Seq("file_name"), "left_anti")
+      .orderBy(col("file_name")).as[String].collect().toSeq
+  }
+
+  test("newFiles excludes update-only and snapshot-folded names, as the view does") {
+    val landing = tmp("nm_landing"); val staging = tmp("nm_staging")
+    val ledger = s"${tmp("nm_ledger_root")}/ledger"
+    val names = (1001 to 1006).map(i => s"$i.json")
+    copyFixtures(landing, names)
+    assert(IngestJob.run(spark, landing, staging, ledger, limit = 2) ==
+      Seq("1001.json", "1002.json"))
+    IngestJob.markStage(spark, ledger, Seq("1001.json"), IngestJob.MatchwiseStatus)
+    // update-creates-item: 1003 is marked but was never staged, so its
+    // name lives only in the _updates log
+    IngestJob.markStage(spark, ledger, Seq("1003.json"), IngestJob.DeliverywiseStatus)
+    def check(state: String): Unit = {
+      val got = IngestJob.newFiles(spark, landing, ledger, limit = 100)
+      assert(got == Seq("1004.json", "1005.json", "1006.json"), state)
+      assert(got == viaLedgerView(landing, ledger), state)
+    }
+    check("base rows and update log")
+    IngestJob.compactLedger(spark, ledger)
+    check("after compaction")
+    IngestJob.vacuumLedger(spark, ledger)
+    check("after vacuum")
+  }
+
+  test("newFiles reads a 40-round ledger in at most 2 jobs") {
+    val landing = tmp("nj_landing"); val staging = tmp("nj_staging")
+    val ledger = s"${tmp("nj_ledger_root")}/ledger"
+    (0 until 45).foreach { i =>
+      Files.writeString(Paths.get(landing, f"m$i%03d.json"), "{}")
+      ()
+    }
+    (0 until 40).foreach { _ =>
+      val staged = IngestJob.run(spark, landing, staging, ledger, limit = 1)
+      IngestJob.markStage(spark, ledger, staged, IngestJob.MatchwiseStatus)
+    }
+    var got = Seq.empty[String]
+    val jobs = JobProfile.profiled(spark, "newFiles") {
+      got = IngestJob.newFiles(spark, landing, ledger)
+    }
+    assert(got == (40 until 45).map(i => f"m$i%03d.json"))
+    assert(jobs.size <= 2, jobs.mkString("\n"))
+  }
+
   test("streaming: AvailableNow extract equals the batch extract") {
     val landing = tmp("s_landing"); val staging = tmp("s_staging")
     val checkpoint = tmp("s_ckpt")

@@ -3,6 +3,11 @@ package graft
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 
 import graft.extract.Extractors
@@ -75,6 +80,48 @@ class PublishSpec extends SparkSpec {
     val wicket = lines.find(l => l.startsWith("1002,1,Gamma,Delta,0,6,")).get
     assert(wicket == "1002,1,Gamma,Delta,0,6,G One,D One,G Two," +
       "0,0,0,0,0,1,0,1,G One,run out,D Five,2")
+  }
+
+  test("publish plans: one materialized matchwise frame, no exchange, no recompute") {
+    val fresh = PublishJob.buildMatchwise(Extractors.matchwise(raw))
+    val plan = fresh.queryExecution.optimizedPlan
+    assert(plan.isInstanceOf[LogicalRDD], s"not materialized:\n$plan")
+    assert(fresh.rdd.getNumPartitions == 1)
+
+    val dir = Files.createTempDirectory("graft_plan").toString
+    val dw = PublishJob.buildDeliverywise(Extractors.deliverywise(raw), fresh)
+    // stage scopes name the operators each job ran; the matchwise
+    // window shows as a "Window" scope wherever it is recomputed
+    val scopes = scala.collection.mutable.ArrayBuffer.empty[String]
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        scopes.synchronized {
+          scopes ++= e.stageInfo.rddInfos.flatMap(_.scope).map(_.name)
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val (mwRows, dwRows, note) = try {
+      var out = (0L, 0L, "")
+      val jobs = JobProfile.profiled(spark, "publish") {
+        out = (PublishJob.writeCsv(fresh, s"$dir/mw"),
+          PublishJob.writeCsv(dw, s"$dir/dw"), PublishJob.versionNote(fresh))
+      }
+      // matchwise write, key broadcast, deliverywise write, note
+      assert(jobs.size <= 4, jobs.mkString("\n"))
+      out
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(!scopes.contains("Window"), scopes.distinct.mkString(", "))
+    assert((mwRows, dwRows) == ((fresh.count(), dw.count())))
+    assert(note == "Updated till the match between Mu and Nu on 06/06/2020")
+
+    val exchanges = new AdaptiveSparkPlanHelper {}
+      .collect(dw.queryExecution.executedPlan) {
+        case e: ShuffleExchangeExec => e.outputPartitioning
+      }
+    assert(!exchanges.exists {
+      case _: RangePartitioning | _: HashPartitioning => true
+      case _ => false
+    }, dw.queryExecution.executedPlan.toString)
   }
 
   test("version note formats the latest match (P8/P9)") {
